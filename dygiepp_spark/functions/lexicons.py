@@ -44,6 +44,21 @@ MODIFIERS: tuple[str, ...] = ("small", "slow", "big", "fast")
 
 STOPWORDS: tuple[str, ...] = ("a", "the")
 
+
+def check_disjoint(**lexicons) -> None:
+    """Raise if any token belongs to two of the named lexicons. Decode
+    classifies a token by the first lexicon that holds it (the extraction
+    `elif` chain, the coref kernel's `tk in ent_set`), so a shared token
+    would be typed one way in Spark and another in the oracle SQL."""
+    seen: dict[str, str] = {}
+    for name, tokens in lexicons.items():
+        for tok in tokens:
+            if seen.setdefault(tok, name) != name:
+                raise ValueError(f"token {tok!r} is in both {seen[tok]} and {name}")
+
+
+check_disjoint(ENTITY_TYPES=ENTITY_TYPES, PREDICATES=PREDICATES, MODIFIERS=MODIFIERS)
+
 NULL_LABEL = ""  # reference null label, index 0 (ner.py:49-51)
 
 

@@ -13,7 +13,7 @@ hash — skewed predicates are handled by AQE.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 # Deliberate merges + collisions (FIXTURES.md §4): two surfaces → one id.
 ALIASES: dict[str, str] = {
@@ -293,12 +293,18 @@ def canonicalize_with_coref(
     """Full north-star canonicalization: components over (coref ∪ alias)
     evidence. A mention inherits its coref cluster's canonical id — the id
     of the cluster-representative surface (min doc_pos member) — then alias
-    linking applies on top. Conversation-local rewrite, global dedup."""
-    rep = clusters.groupBy("conv_id", "cluster_id").agg(
-        F.min_by("surface", "doc_pos").alias("rep_surface")
-    )
-    members = clusters.join(rep, on=["conv_id", "cluster_id"]).select(
-        "conv_id", "turn_idx", "start", F.col("rep_surface")
+    linking applies on top. Conversation-local rewrite, global dedup.
+
+    The representative is a window aggregate over the cluster, not an
+    aggregate joined back to its members: `clusters` (a Python kernel on
+    the default coref path) then feeds one plan node and runs once."""
+    members = clusters.select(
+        "conv_id",
+        "turn_idx",
+        "start",
+        F.min_by("surface", "doc_pos")
+        .over(Window.partitionBy("conv_id", "cluster_id"))
+        .alias("rep_surface"),
     )
     t = triples
     for side in ("subj", "obj"):

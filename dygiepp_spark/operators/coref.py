@@ -60,34 +60,29 @@ def clusters_via_components(
     global_cc: bool = False,
     persist_mentions: bool = True,
 ) -> DataFrame:
-    """E4 — cluster formation as distributed connected components.
+    """E4 — cluster formation, one conversation at a time.
 
-    Coref graphs never cross conversations, so this uses the grouped CC
-    (one shuffle, per-conversation union-find) rather than the iterative
-    global algorithm — at any corpus size the cost is one hash shuffle of
-    the edge list. Returns (conv_id, cluster_id, turn_idx, start, end,
-    surface); cluster_id = min doc-position member; singleton mentions drop
-    (reference clusters have ≥2 members).
+    Coref graphs never cross conversations, so the default path clusters
+    each conversation locally instead of running the iterative global
+    algorithm. The plan is one hash(conv_id) exchange of the raw
+    (conv_id, turn_idx, text) columns, a sort by (conv_id, turn_idx)
+    within each partition, and ONE streaming Python pass
+    (`mapInPandas`, see `_clusters_stream`) that does the per-turn
+    offsets, the mention lookup, the antecedent lag and the union-find as
+    conversations flow past. There is no per-conversation pandas round
+    trip, and a conversation longer than an Arrow batch simply continues
+    into the next one. Returns (conv_id, cluster_id, turn_idx, start,
+    end, surface, doc_pos); cluster_id = min doc-position member;
+    singleton mentions drop (reference clusters have ≥2 members).
 
-    `global_cc=True` switches to the iterative large/small-star algorithm
-    instead of per-conversation union-find — the escape hatch for corpora
-    whose largest conversation outgrows a single task (the grouped path
-    holds one conversation's mention graph in one Python worker; at ~10^7+
-    mentions per conversation prefer the global path, whose per-round
-    shuffles have no per-conversation hotspot). Both paths are pinned equal
-    by pytest.
-
-    The grouped path is FUSED (r7 optimization): the old plan ran the
-    mention pipeline (lead window + offsets join), persisted it, derived
-    antecedent edges with a second window, shipped edges to a per-conv
-    union-find, and joined components back to the persisted mentions —
-    6 shuffles + a materialization job. But edge derivation (nearest
-    previous same-surface mention) and the membership join are both
-    conversation-local, so one groupBy(conv) Python pass does all three:
-    the plan is now ONE window shuffle (doc offsets, whose hash(conv)
-    partitioning the groupBy reuses — no second exchange) + the Python
-    stage. `persist_mentions` is accepted for API compatibility; the fused
-    plan has no multi-branch reuse to persist."""
+    `global_cc=True` is the reference and at-scale path: the JVM mention
+    pipeline, `antecedent_edges`, and the iterative large/small-star
+    connected components. The default path holds one conversation's
+    mention graph in one Python worker; at ~10^7+ mentions per
+    conversation prefer the global path, whose per-round shuffles have no
+    per-conversation hotspot. Both paths are pinned equal by pytest.
+    `persist_mentions` applies to the global path only, whose mentions
+    feed two branches."""
     if global_cc:
         from dygiepp_spark.operators.graph import connected_components
 
@@ -120,45 +115,38 @@ def clusters_via_components(
             "conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos"
         )
 
+    return (
+        turns.select("conv_id", "turn_idx", "text")
+        .repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .mapInPandas(_clusters_stream(max_gap), schema=_CLUSTER_SCHEMA)
+    )
+
+
+_CLUSTER_COLS = ("conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos")
+_CLUSTER_SCHEMA = (
+    "conv_id string, cluster_id long, turn_idx int, start int, end int, "
+    "surface string, doc_pos long"
+)
+
+
+def _clusters_stream(gap: int | None):
+    """The streaming coref kernel: Arrow batches of (conv_id, turn_idx,
+    text) sorted by (conv_id, turn_idx) in → cluster member rows out.
+
+    State is the open conversation, its running token offset and its
+    mention lists; a conversation may span any number of batches, and
+    memory stays bounded by one conversation's mentions. Rows are those
+    of the JVM formulation: dict lookup ≡ the entity label CASE, the
+    running offset ≡ the rowsBetween(-∞,-1) window over turn_idx order
+    (a NULL text contributes 0, as size(split(NULL)) does), and the
+    same-surface lag + union-find ≡ `antecedent_edges` + connected
+    components (pinned against both other paths in pytest)."""
     from dygiepp_spark.functions.lexicons import ENTITY_TYPES
 
-    # r7 second fusion step: the previous fused plan still computed the
-    # per-turn offsets window and the mention explode as JVM expressions —
-    # and Catalyst evaluates the interpreted HOF mention filter in the
-    # map-side project BELOW the window exchange (measured 14.2 s of
-    # executor CPU at sf0.1 — the 17-branch label CASE per token again).
-    # But offsets (a cumsum over turn_idx order), mention extraction (a
-    # dictionary lookup per token), edge derivation, and union-find are ALL
-    # conversation-local, so the ONE groupBy(conv) Python pass now does all
-    # four directly from raw (conv_id, turn_idx, text): the plan is one
-    # hash(conv) exchange carrying the text it would have carried into the
-    # window anyway, and zero interpreted expression evaluation. Rows are
-    # identical: dict lookup ≡ the label CASE (parity-pinned for the
-    # kernels in test_extract), Python cumsum ≡ the rowsBetween(-∞,-1)
-    # window (with size(split(NULL))'s NULL contributing 0), and the
-    # union-find/lag logic is byte-for-byte the previous kernel's.
-    gap = max_gap
     ent_set = frozenset(ENTITY_TYPES)
 
-    def _fused(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        conv_ids, turn_idxs, starts, surfaces, doc_positions = [], [], [], [], []
-        offset = 0
-        for conv, turn, text in zip(
-            pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
-        ):
-            if text is None:
-                continue  # size(split(NULL)) is NULL: the window sum skips it
-            toks = text.split(" ")
-            for i, tk in enumerate(toks):
-                if tk in ent_set:
-                    conv_ids.append(conv)
-                    turn_idxs.append(turn)
-                    starts.append(i)
-                    surfaces.append(tk)
-                    doc_positions.append(offset + i)
-            offset += len(toks)
-
+    def flush(conv, turn_idxs, starts, surfaces, doc_positions, out):
         parent: dict = {}
 
         def find(x):
@@ -177,33 +165,47 @@ def clusters_via_components(
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
             last[surf] = dp
-        cols = ["conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos"]
-        if not parent:
-            return pd.DataFrame({c: [] for c in cols})
-        comp = {n: find(n) for n in parent}
-        out = {c: [] for c in cols}
-        for conv, turn, s, surf, dp in zip(
-            conv_ids, turn_idxs, starts, surfaces, doc_positions
-        ):
-            root = comp.get(dp)
-            if root is None:  # singleton: no edge ever touched it
+        for turn, s, surf, dp in zip(turn_idxs, starts, surfaces, doc_positions):
+            if dp not in parent:  # singleton: no edge ever touched it
                 continue
             out["conv_id"].append(conv)
-            out["cluster_id"].append(root)
+            out["cluster_id"].append(find(dp))
             out["turn_idx"].append(turn)
             out["start"].append(s)
             out["end"].append(s)
             out["surface"].append(surf)
             out["doc_pos"].append(dp)
-        return pd.DataFrame(out)
 
-    return turns.select("conv_id", "turn_idx", "text").groupBy("conv_id").applyInPandas(
-        _fused,
-        schema=(
-            "conv_id string, cluster_id long, turn_idx int, start int, end int, "
-            "surface string, doc_pos long"
-        ),
-    )
+    def coref_stream(batches):
+        out = {c: [] for c in _CLUSTER_COLS}
+        conv, offset = None, 0  # flushing an empty mention list emits nothing
+        turn_idxs, starts, surfaces, doc_positions = [], [], [], []
+        for pdf in batches:
+            for c, turn, text in zip(
+                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
+            ):
+                if c != conv:
+                    flush(conv, turn_idxs, starts, surfaces, doc_positions, out)
+                    conv, offset = c, 0
+                    turn_idxs, starts, surfaces, doc_positions = [], [], [], []
+                if text is None:
+                    continue
+                toks = text.split(" ")
+                for i, tk in enumerate(toks):
+                    if tk in ent_set:
+                        turn_idxs.append(turn)
+                        starts.append(i)
+                        surfaces.append(tk)
+                        doc_positions.append(offset + i)
+                offset += len(toks)
+            if out["conv_id"]:
+                yield pd.DataFrame(out)
+                out = {c: [] for c in _CLUSTER_COLS}
+        flush(conv, turn_idxs, starts, surfaces, doc_positions, out)
+        if out["conv_id"]:
+            yield pd.DataFrame(out)
+
+    return coref_stream
 
 
 def propagate_scores(

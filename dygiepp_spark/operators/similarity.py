@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import DoubleType
 
 QUANT_SCALE = 1000
 N_HYPERPLANES = 8
@@ -43,11 +44,20 @@ def _n2_bound(threshold_den: int) -> int:
 
 
 def quantize(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """embedding float[] → q int64[] (floor(x·1000); exact in both engines)."""
+    """embedding float[] → q int64[]: floor(x·1000) with the product in the
+    element type, as the DuckDB oracle computes it (FLOAT * INT stays
+    FLOAT there). Spark would widen FLOAT * INT to DOUBLE, where a
+    component such as 1.504f floors to 1503 instead of 1504, so the scale
+    is a FLOAT literal (a DOUBLE element still multiplies in DOUBLE)."""
+    scale = F.lit(QUANT_SCALE).cast("float")
     return emb.withColumn(
-        "q",
-        F.transform(F.col(vec_col), lambda x: F.floor(x * QUANT_SCALE).cast("bigint")),
+        "q", F.transform(F.col(vec_col), lambda x: F.floor(x * scale).cast("bigint"))
     )
+
+
+def _quantize_local(vectors, ftype=np.float32) -> np.ndarray:
+    """numpy twin of `quantize` for elements of numpy type `ftype`."""
+    return np.floor(np.array(vectors, dtype=ftype) * ftype(QUANT_SCALE)).astype(np.int64)
 
 
 def _dot(a, b):
@@ -100,8 +110,9 @@ def dot_topk_local(
     evaluations for 32×2000 pairs (~10 s CPU at sf0.1). Each batch prunes
     to its own top-k per query (exact under the (dot desc, nid asc) total
     order), so the final window ranks only partitions×queries×k rows.
-    floor(x·1000) quantization and int64 wraparound match the JVM/DuckDB
-    arithmetic bit-for-bit; rows are identical to `dot_topk`."""
+    floor(x·1000) quantization (in the element type, see `_quantize_local`)
+    and int64 wraparound match the JVM/DuckDB arithmetic bit-for-bit; rows
+    are identical to `dot_topk`."""
     if n_queries > 65536:
         raise ValueError(
             f"n_queries={n_queries}: the query matrix is collected to the driver "
@@ -109,9 +120,9 @@ def dot_topk_local(
         )
     rows = emb.where(F.col(id_col) < n_queries).select(id_col, "embedding").collect()
     qids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    qm = np.floor(
-        np.array([r["embedding"] for r in rows], dtype=np.float64) * QUANT_SCALE
-    ).astype(np.int64)
+    elem = emb.schema["embedding"].dataType.elementType
+    ftype = np.float64 if isinstance(elem, DoubleType) else np.float32
+    qm = _quantize_local([r["embedding"] for r in rows], ftype)
     sc = emb.sparkSession.sparkContext
     bq = sc.broadcast((qids, qm))
     kk = int(k)
@@ -122,9 +133,7 @@ def dot_topk_local(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.floor(
-                np.array(pdf["embedding"].tolist(), dtype=np.float64) * QUANT_SCALE
-            ).astype(np.int64)
+            cm = _quantize_local(pdf["embedding"].tolist(), ftype)
             nid = pdf["vec_id"].to_numpy()
             dots = bqm @ cm.T  # exact int64, wraparound == JVM long
             out_q, out_n, out_d = [], [], []

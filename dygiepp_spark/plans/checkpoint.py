@@ -16,8 +16,13 @@ in production — semantics identical):
   4. input_fingerprint = order-insensitive xor of row hashes per partition;
      resume verifies it so stale checkpoints of changed inputs recompute.
 
-One job writes all missing partitions (no per-partition driver loop — at
-4096 partitions a loop of jobs would dominate wall clock).
+Each quantity is computed once. The fingerprints are one aggregate over
+the input, collected (one row per partition); the driver compares them
+with the collected lineage keys to pick the partitions to do. One job
+writes all of them (no per-partition driver loop — at 4096 partitions a
+loop of jobs would dominate wall clock). The committed row counts are
+read back in one aggregate, and the new lineage rows are built on the
+driver from those two collected results.
 """
 
 from __future__ import annotations
@@ -27,11 +32,17 @@ import shutil
 from collections.abc import Callable
 from urllib.parse import urlparse
 
+import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # note: not "_lineage" — Spark's file source silently ignores _-prefixed paths
 LINEAGE_DIR = "lineage"
 PART_COL = "partition_key"
+LINEAGE_SCHEMA = (
+    f"run_id string, stage string, {PART_COL} bigint, n_conversations bigint, "
+    "n_turns bigint, n_rows_out bigint, status string, input_fingerprint bigint"
+)
 
 
 def with_partition_key(turns: DataFrame, n_partitions: int) -> DataFrame:
@@ -83,23 +94,24 @@ def run_with_checkpoint(
         transform = relation_triples
 
     keyed = with_partition_key(turns, n_partitions)
-    fps = partition_fingerprints(keyed)
+    # one row per partition: collected once, reused for `todo` and lineage
+    fps = {r[PART_COL]: r for r in partition_fingerprints(keyed).collect()}
 
     lineage = read_lineage(spark, out_dir)
+    done: set = set()
     if lineage is not None:
-        done = lineage.where(
-            (F.col("stage") == stage) & (F.col("status") == "done")
-        ).select(PART_COL, "input_fingerprint")
         # a partition is skippable iff SOME committed lineage row matches
         # the current input fingerprint (recomputed partitions leave their
         # stale rows behind — append-only lineage)
-        todo_keys = fps.join(
-            done, on=[PART_COL, "input_fingerprint"], how="left_anti"
-        ).select(PART_COL)
-    else:
-        todo_keys = fps.select(PART_COL)
-
-    todo = [r[PART_COL] for r in todo_keys.collect()]
+        done = {
+            (r[PART_COL], r["input_fingerprint"])
+            for r in lineage.where(
+                (F.col("stage") == stage) & (F.col("status") == "done")
+            )
+            .select(PART_COL, "input_fingerprint")
+            .collect()
+        }
+    todo = [k for k, r in fps.items() if (k, r["input_fingerprint"]) not in done]
     summary = {
         "run_id": run_id,
         "stage": stage,
@@ -152,38 +164,39 @@ def run_with_checkpoint(
         .parquet(data_path)
     )
 
-    # lineage append AFTER the data commit (metrics per partition)
+    # lineage append AFTER the data commit (metrics per partition): the
+    # committed row counts are read back once, and the lineage rows are
+    # built on the driver from them and the collected fingerprints
     try:
-        row_counts = (
-            spark.read.parquet(data_path)
+        n_rows_out = {
+            r[PART_COL]: r["n_rows_out"]
+            for r in spark.read.parquet(data_path)
             .where(F.col(PART_COL).isin(todo))
             .groupBy(PART_COL)
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows_out"))
-        )
-        row_counts.head(1)
-    except Exception:  # noqa: BLE001 — zero output rows: dir has no
-        # partition files to infer a schema from; lineage still commits
-        # (n_rows_out = 0) so the empty partitions skip on resume
-        row_counts = spark.createDataFrame(
-            [], f"{PART_COL} bigint, n_rows_out bigint"
-        )
-    new_lineage = (
-        fps.where(F.col(PART_COL).isin(todo))
-        .join(row_counts, on=PART_COL, how="left")
-        .na.fill({"n_rows_out": 0})
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col(PART_COL),
-            "n_conversations",
-            "n_turns",
-            "n_rows_out",
-            F.lit("done").alias("status"),
-            "input_fingerprint",
-        )
+            .collect()
+        }
+    except AnalysisException:  # zero output rows: the dir has no partition
+        # files to infer a schema from; lineage still commits (n_rows_out =
+        # 0) so the empty partitions skip on resume
+        n_rows_out = {}
+    new_lineage = pd.DataFrame(
+        [
+            (
+                run_id, stage, k, fps[k]["n_conversations"], fps[k]["n_turns"],
+                n_rows_out.get(k, 0), "done", fps[k]["input_fingerprint"],
+            )
+            for k in todo
+        ],
+        columns=[
+            "run_id", "stage", PART_COL, "n_conversations", "n_turns",
+            "n_rows_out", "status", "input_fingerprint",
+        ],
     )
-    new_lineage.write.mode("append").parquet(os.path.join(out_dir, LINEAGE_DIR))
-    summary["n_rows_out"] = sum(r["n_rows_out"] for r in row_counts.collect())
+    spark.createDataFrame(new_lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
+        os.path.join(out_dir, LINEAGE_DIR)
+    )
+    summary["n_rows_out"] = sum(n_rows_out.values())
     return summary
 
 

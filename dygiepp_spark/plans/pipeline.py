@@ -4,10 +4,14 @@ JSON").
 
 ``extract(turns)`` returns an ExtractionResult of typed DataFrames. Two
 scoring backends share identical decode semantics (pinned by pytest):
-  - 'columnar': JVM-side column expressions (whole-stage codegen) — used
-    for the oracle gate and as the reference twin for parity;
-  - 'udf': batched Arrow mapInPandas inference (the production path for a
-    real learned model).
+  - 'columnar': one per-head Arrow kernel per turn batch
+    (``operators.extract``: ner_mentions, relation_triples,
+    event_arguments — each a ``mapInPandas``, parity-pinned against its
+    JVM-expression ``*_expr`` twin) — used for the oracle gate;
+  - 'udf': ``inference.infer``, one batched Arrow ``mapInPandas`` pass
+    that scores every head (the production path for a real learned
+    model).
+Coref clusters come from ``coref.clusters_via_components`` on both.
 
 Stage gating mirrors the reference's loss-weight gating (a head runs iff
 enabled; dygie/models/dygie.py:226-253).

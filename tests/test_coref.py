@@ -2,6 +2,7 @@
 equivalence (SURVEY.md §7 hard-part 3; reference greedy walk
 dygie/models/coref.py:387-459)."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from dygiepp_spark.operators import coref
@@ -50,3 +51,104 @@ def test_connected_components_generic(spark):
     )
     comp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+# --- the streaming kernel (default path) against greedy and global CC ---
+
+_TEXTS = (
+    "the customer will join the order table",
+    "scan row and line",
+    None,  # NULL text: no mentions, no offset
+    "small data stream",
+    "nothing to see",
+    "customer again with data and a table",
+)
+
+
+def _turns(spark, rows):
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string"
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(*coref._CLUSTER_COLS).collect())
+
+
+def _stream_case(spark):
+    """One conversation longer than an Arrow batch (2048 rows; its turns
+    arrive shuffled), NULL-text turns everywhere, and 60 short
+    conversations, so each shuffle partition holds many."""
+    assert spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch") == "2048"
+    n_mega = 2100
+    rows = [
+        ("mega", (i * 11) % n_mega, "u", _TEXTS[(i * 11) % n_mega % len(_TEXTS)], None)
+        for i in range(n_mega)
+    ]
+    rows += [
+        (f"c{c:02d}", i, "u", _TEXTS[(c + i) % len(_TEXTS)], None)
+        for c in range(60)
+        for i in range(c % 7 + 1)
+    ]
+    return _turns(spark, rows)
+
+
+def test_stream_kernel_equals_greedy_and_global(spark):
+    turns = _stream_case(spark)
+    got = _rows(coref.clusters_via_components(turns))
+    assert any(r[0] == "mega" and r[2] >= 2048 for r in got)  # past one batch
+    assert got == _rows(coref.clusters_via_greedy(turns))
+    assert got == _rows(coref.clusters_via_components(turns, global_cc=True))
+
+
+def test_stream_kernel_max_gap_equals_global(spark):
+    turns = _stream_case(spark)
+    got = _rows(coref.clusters_via_components(turns, max_gap=10))
+    assert got != _rows(coref.clusters_via_components(turns))  # the gap binds
+    assert got == _rows(coref.clusters_via_components(turns, max_gap=10, global_cc=True))
+
+
+def test_stream_kernel_empty_input(spark):
+    empty = _turns(spark, [("A", 0, "u", "customer customer", None)]).where("false")
+    assert coref.clusters_via_components(empty).collect() == []
+    # an empty partition (no batches at all) and an empty batch emit nothing
+    kernel = coref._clusters_stream(None)
+    assert list(kernel(iter([]))) == []
+    empty_batch = pd.DataFrame({"conv_id": [], "turn_idx": [], "text": []})
+    assert list(kernel(iter([empty_batch]))) == []
+
+
+def test_stream_kernel_batch_boundaries_do_not_matter():
+    """The same sorted stream cut into batches of any size gives the same
+    rows: the open conversation carries over from batch to batch."""
+    rows = sorted(
+        (c, i, _TEXTS[(3 * c + i) % len(_TEXTS)]) for c in range(5) for i in range(9)
+    )
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
+
+    def run(size):
+        batches = (pdf.iloc[i : i + size] for i in range(0, len(pdf), size))
+        out = pd.concat(list(coref._clusters_stream(None)(batches)))
+        return sorted(map(tuple, out.itertuples(index=False)))
+
+    whole = run(len(pdf))
+    assert whole and all(run(size) == whole for size in (1, 2, 5, 9, 10))
+
+
+def test_canonicalize_with_coref_runs_the_kernel_once(spark, tiny_turns, tmp_path):
+    """The cluster representative is a window over `clusters`, so in the
+    executed plan the coref kernel is one node, however many joins read
+    the clusters."""
+    from dygiepp_spark.operators import canonicalize, extract
+
+    path = str(tmp_path / "triples")
+    extract.relation_triples(tiny_turns).write.parquet(path)
+    out = canonicalize.canonicalize_with_coref(
+        spark.read.parquet(path),
+        coref.clusters_via_components(tiny_turns),
+        canonicalize.alias_dict(spark),
+    )
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas coref_stream(") == 1, final

@@ -219,7 +219,7 @@ def test_embedding_near_dup_pairs_exact_on_candidates(spark, emb):
     }
     rows = emb.select("vec_id", "embedding").collect()
     q = {
-        r["vec_id"]: np.floor(np.array(r["embedding"], dtype=np.float64) * 1000)
+        r["vec_id"]: similarity._quantize_local(r["embedding"]).astype(np.float64)
         for r in rows
     }
     buckets = {
@@ -345,3 +345,51 @@ def test_multimodal_decode_check_unicode_cross_engine(spark):
     row = got[got["doc_id"] == 2].iloc[0]
     assert row["width"] == len(b) % 64 + 1
     assert row["f0_q"] == round(1_000_000 * float(np.float32(b[0] / 255.0)))
+
+
+def test_local_quantize_is_float32_like_the_engines(spark, tmp_path):
+    """1.504f·1000 is 1503.99994… in float64 but rounds to 1504.0 in
+    float32, the precision of FLOAT * INT in the DuckDB oracle. Both the
+    JVM `quantize` and the numpy kernel of `dot_topk_local` must floor the
+    float32 product too: on vectors made of such components the kernel
+    leaf, its JVM twin and both leaves' DuckDB oracles agree row for row."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from dygiepp_spark.registry import QUERIES
+    from conftest import rows_match
+
+    x = np.float32(1.504)
+    assert np.floor(np.float64(x) * 1000) == 1503
+    assert similarity._quantize_local([[x]]).tolist() == [[1504]]
+
+    # components on the 1/1000 grid whose float64 and float32 products
+    # floor apart
+    grid = (np.arange(-2000, 2000) / 1000).astype(np.float32)
+    split = grid[np.floor(grid.astype(np.float64) * 1000) != np.floor(grid * np.float32(1000))]
+    base = split[:: len(split) // 64][:64]
+    assert len(base) == 64
+    vecs = [base.copy() for _ in range(40)]
+    for i, v in enumerate(vecs):
+        v[i % 64] = np.float32(i / 40)  # distinct, still near-duplicates
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame(
+        {"vec_id": np.arange(40, dtype=np.int64), "embedding": vecs,
+         "label": np.zeros(40, dtype=np.int32)}
+    ).to_parquet(sf / "embeddings.parquet")
+
+    emb = load_table(spark, "embeddings", str(sf))
+    jvm = {tuple(r["q"]) for r in similarity.quantize(emb).collect()}
+    assert jvm == {tuple(q) for q in similarity._quantize_local(vecs).tolist()}
+    assert sorted(similarity.dot_topk_local(emb).collect()) == sorted(
+        similarity.dot_topk(emb).collect()
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+    for leaf in ("embedding_dot_topk", "embedding_near_dup"):
+        got = QUERIES[leaf].build(spark, str(sf))
+        assert got.count() > 0
+        assert rows_match(got, con.sql(QUERIES[leaf].sql))
+    con.close()

@@ -205,3 +205,23 @@ def test_event_arguments_kernel_matches_expr(spark):
         key = lambda r: tuple(r[c] for c in sorted(r.asDict()))
         assert sorted(map(key, kern)) == sorted(map(key, expr))
         assert len(kern) > 0
+
+
+def test_lexicons_are_disjoint_and_a_collision_raises():
+    """Decode types a token by the first lexicon that holds it, so the
+    lexicons must not share a token; the module checks it at import."""
+    import pytest
+
+    from dygiepp_spark.functions import lexicons as lx
+
+    lx.check_disjoint(
+        ENTITY_TYPES=lx.ENTITY_TYPES, PREDICATES=lx.PREDICATES, MODIFIERS=lx.MODIFIERS
+    )
+    with pytest.raises(ValueError, match="'join' is in both ENTITY_TYPES and PREDICATES"):
+        lx.check_disjoint(
+            ENTITY_TYPES={**lx.ENTITY_TYPES, "join": "ACTOR"},
+            PREDICATES=lx.PREDICATES,
+            MODIFIERS=lx.MODIFIERS,
+        )
+    with pytest.raises(ValueError, match="'fast' is in both PREDICATES and MODIFIERS"):
+        lx.check_disjoint(PREDICATES=("fast",), MODIFIERS=lx.MODIFIERS)

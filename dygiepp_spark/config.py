@@ -9,7 +9,7 @@ dygie/models/dygie.py:226-253 runs a head iff its loss weight > 0).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -18,15 +18,11 @@ class PipelineConfig:
     max_span_width: int = 8
 
     # beam pruning: spans kept per sentence = ceil(ratio * n_tokens),
-    # clamped to [min_keep, cap] (reference: relation.py:120 → 0.5,
-    # coref.py:261 → 0.3 min 2, events.py:143-162 → 0.3 cap 15 / 0.8 cap 30)
+    # at least min_keep (reference: relation.py:120 → 0.5,
+    # coref.py:261 → 0.3 min 2)
     relation_spans_per_word: float = 0.5
     coref_spans_per_word: float = 0.3
     coref_min_keep: int = 2
-    trigger_spans_per_word: float = 0.3
-    trigger_cap: int = 15
-    argument_spans_per_word: float = 0.8
-    argument_cap: int = 30
 
     # coref (reference template.libsonnet:91)
     max_antecedents: int = 100
@@ -52,11 +48,6 @@ class PipelineConfig:
     # into multiple coref chunks (reference precedent: 5-sentence chunking
     # advice for long docs, README.md:415)
     salt_turns_threshold: int = 512
-    n_salts: int = 16
-
-    # scoring output precision (reference rounds to 4 decimals,
-    # document.py:10-11)
-    score_decimals: int = 4
 
     # which scorer backs the forward() contract on the executors:
     # "standin" = the deterministic lexicon model (always available);
@@ -65,5 +56,3 @@ class PipelineConfig:
     #             the (frozen, picklable) config into every UDF closure, so
     #             swapping backends changes NOTHING else in the pipeline.
     model_backend: str = "standin"
-
-    datasets: tuple[str, ...] = field(default=("transcripts",))

@@ -55,27 +55,3 @@ def minhash_perm_sql(hash_col: str, i: int) -> str:
     """i-th permuted hash of an already-hashed shingle (dialect-neutral)."""
     a, b = MINHASH_PERMS[i]
     return f"(({a} * {hash_col} + {b}) % {PERM_MOD})"
-
-
-def band_hash_sql(minhash_cols: list[str]) -> str:
-    """Combine one band's minhashes into a single bucket key (dialect-neutral)."""
-    expr = minhash_cols[0]
-    for c in minhash_cols[1:]:
-        expr = f"(({expr}) * 31 + ({c})) % {MOD}"
-    return expr
-
-
-def simhash_bit_sql(hash_col: str, bit: int) -> str:
-    """Deterministic ±1 draw for simhash bit `bit` from a token hash."""
-    # mix with a distinct odd multiplier per bit, take parity
-    a = 2 * bit + 3
-    return f"CASE WHEN (({a} * {hash_col}) % {MOD}) % 2 = 0 THEN 1 ELSE -1 END"
-
-
-def char_hash_py(s: str) -> int:
-    """Python twin of char_hash_sql for UDF-side parity tests."""
-    acc = None
-    for ch in s:
-        o = ord(ch)
-        acc = o if acc is None else (acc * 31 + o) % MOD
-    return acc if acc is not None else 0

@@ -5,8 +5,9 @@ deterministic rule system over the synthetic corpus vocabulary (SURVEY.md §7
 "hard parts" item 5). It plays the role of the BERT + feedforward heads:
 given tokens it produces typed mentions, relation triples, event
 trigger/argument structures and coreference links with scores. Crucially it
-is expressible BOTH as vectorized column expressions / pandas UDFs (Spark)
-and as ANSI SQL (DuckDB oracle), so triple-level P/R parity is measurable
+is expressible BOTH as a per-turn Python decode (``inference.model``, run
+in Spark batch kernels) and as ANSI SQL (the DuckDB oracle in
+``oracle_sql``), so triple-level P/R parity is measurable
 end-to-end exactly like the reference's relation-match criterion
 (reference: README.md:419-424 — label + both argument spans).
 """
@@ -47,9 +48,9 @@ STOPWORDS: tuple[str, ...] = ("a", "the")
 
 def check_disjoint(**lexicons) -> None:
     """Raise if any token belongs to two of the named lexicons. Decode
-    classifies a token by the first lexicon that holds it (the extraction
-    `elif` chain, the coref kernel's `tk in ent_set`), so a shared token
-    would be typed one way in Spark and another in the oracle SQL."""
+    classifies a token by the first lexicon that holds it (the `elif`
+    chain of the decode in ``inference.model``), so a shared token would
+    be typed one way in Spark and another in the oracle SQL."""
     seen: dict[str, str] = {}
     for name, tokens in lexicons.items():
         for tok in tokens:
@@ -65,12 +66,3 @@ NULL_LABEL = ""  # reference null label, index 0 (ner.py:49-51)
 def sql_in(values) -> str:
     """Render a python string collection as a SQL IN-list."""
     return "(" + ", ".join(f"'{v}'" for v in values) + ")"
-
-
-# CASE expression mapping an entity token to its label — identical text is
-# valid in Spark SQL and DuckDB.
-def entity_label_case(col: str = "token") -> str:
-    whens = "\n".join(
-        f"    WHEN {col} = '{tok}' THEN '{lab}'" for tok, lab in sorted(ENTITY_TYPES.items())
-    )
-    return f"CASE\n{whens}\n    ELSE NULL END"

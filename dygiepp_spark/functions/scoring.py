@@ -9,25 +9,14 @@ correctness gate. The reference rounds emitted scores to 4 decimals
 
 raw_score(surface, width)    = ((length(surface)*7 + width*3) % 16) / 16.0 + width
 softmax_score(surface,width) = ((length(surface)*7 + width*3) % 16) / 32.0 + 0.5
+
+The per-turn Python decode computes the same formula in
+``inference.model._scores``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
-
-
-def raw_score_sql(surface_col: str, width_col: str) -> str:
-    """Dialect-neutral SQL text (valid in Spark SQL and DuckDB)."""
-    return (
-        f"(((length({surface_col}) * 7 + ({width_col}) * 3) % 16) / 16.0"
-        f" + ({width_col}))"
-    )
-
-
-def softmax_score_sql(surface_col: str, width_col: str) -> str:
-    return (
-        f"(((length({surface_col}) * 7 + ({width_col}) * 3) % 16) / 32.0 + 0.5)"
-    )
 
 
 def raw_score_col(surface: Column, width: Column) -> Column:
@@ -37,10 +26,3 @@ def raw_score_col(surface: Column, width: Column) -> Column:
 def softmax_score_col(surface: Column, width: Column) -> Column:
     return ((F.length(surface) * 7 + width * 3) % 16) / 32.0 + 0.5
 
-
-def raw_score_py(surface: str, width: int) -> float:
-    return ((len(surface) * 7 + width * 3) % 16) / 16.0 + width
-
-
-def softmax_score_py(surface: str, width: int) -> float:
-    return ((len(surface) * 7 + width * 3) % 16) / 32.0 + 0.5

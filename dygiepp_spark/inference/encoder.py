@@ -146,7 +146,7 @@ class TorchSpanScorer:
         `_span_head` matmul for every span/trigger in the micro-batch, one
         `_pair_head` matmul for every pair — so this method is the single
         remaining per-turn boundary. In-sandbox it delegates to the
-        stand-in's deterministic lexicon gate (`StandInModel._forward_one`)
+        stand-in's deterministic lexicon decode (`StandInModel.forward`)
         turn by turn: that loop is NOT a performance template — the
         lexicon gate is a dict lookup per token and candidate determinism
         is required by the oracle gates.
@@ -160,7 +160,7 @@ class TorchSpanScorer:
         batched heads above, so candidate scores may be placeholders.
         `forward` and `_forward_loop` both route through here, so the
         batched≡loop seam test keeps covering a swapped implementation."""
-        return [self._standin._forward_one(toks) for toks in token_batch]
+        return self._standin.forward(token_batch)
 
     def _forward_loop(self, token_batch: list[list[str]]) -> list[TurnPredictions]:
         """Reference implementation: per-candidate Python head calls. Kept

@@ -1,15 +1,19 @@
-"""Deterministic stand-in scoring model (executor-side).
+"""The per-turn extraction decode and the deterministic stand-in model.
 
 Plays the role of the reference's DyGIE model forward pass
-(reference: dygie/models/dygie.py:163-274): given a batch of tokenized
-turns it enumerates candidate spans, scores them, prunes, scores pairs and
-decodes typed predictions. No trained weights exist in-sandbox (SURVEY.md §7
-hard-part 5), so scoring is the deterministic lexicon system — but the
-*interface and batch shape* are exactly what a real encoder head would use:
-one forward() per micro-batch of turns, numpy-vectorized, model object
-loaded once per executor process via a module-level singleton (the Spark
-analogue of the reference's load_archive-once pattern,
-dygie/spacy_interface.py:129-134).
+(reference: dygie/models/dygie.py:163-274): given tokenized turns it
+decodes typed mentions, relation triples, event triggers and arguments.
+No trained weights exist in-sandbox (SURVEY.md §7 hard-part 5), so the
+decode is the deterministic lexicon system. It is written ONCE, as the
+three plain-Python functions below, and everything that decodes calls
+them: the per-head ``mapInPandas`` kernels in ``operators.extract``,
+``StandInModel.forward`` inside the Arrow inference UDF, and the mention
+lookup of both coref streams. The DuckDB oracle SQL in ``oracle_sql`` is
+the independent reference for the same rules.
+
+Turns are ~4–20 tokens, so the decode works on plain-Python position
+lists (numpy setup per tiny turn costs more than it saves) and answers
+the within-turn searches with bisects over sorted positions.
 
 A real deployment swaps `StandInModel` for a transformer-backed scorer with
 the same forward() contract; nothing else in the pipeline changes.
@@ -17,13 +21,108 @@ the same forward() contract; nothing else in the pipeline changes.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
-
-import numpy as np
 
 from dygiepp_spark.config import PipelineConfig
 from dygiepp_spark.functions.lexicons import ENTITY_TYPES, MODIFIERS, PREDICATES
-from dygiepp_spark.functions.scoring import raw_score_py, softmax_score_py
+
+_MODIFIERS = frozenset(MODIFIERS)
+_PREDICATES = frozenset(PREDICATES)
+
+
+def _scores(n_chars: int, width: int) -> tuple[float, float]:
+    """(raw_score, softmax_score) of a span whose surface has `n_chars`
+    code points: the dyadic formula of ``functions.scoring``."""
+    k = (n_chars * 7 + width * 3) % 16
+    return k / 16.0 + width, k / 32.0 + 0.5
+
+
+def _positions(toks: list[str]) -> tuple[list[int], list[int]]:
+    """Ascending positions of the entity tokens and of the predicate tokens
+    (the lexicons are disjoint, asserted in ``functions.lexicons``)."""
+    ents: list[int] = []
+    preds: list[int] = []
+    for i, tk in enumerate(toks):
+        if tk in ENTITY_TYPES:
+            ents.append(i)
+        elif tk in _PREDICATES:
+            preds.append(i)
+    return ents, preds
+
+
+def mentions(
+    toks: list[str], with_modifiers: bool = True
+) -> list[tuple[int, int, str, str, float, float]]:
+    """E1 — NER decode: (start, end, label, surface, raw, softmax) in
+    position order. Every entity token is a width-1 mention typed by the
+    lexicon; with `with_modifiers`, a modifier immediately followed by an
+    entity token is a width-2 mention with the entity's type."""
+    out = []
+    last = len(toks) - 1
+    for i, tk in enumerate(toks):
+        lab = ENTITY_TYPES.get(tk)
+        if lab is not None:
+            out.append((i, i, lab, tk, *_scores(len(tk), 1)))
+        elif with_modifiers and i < last and tk in _MODIFIERS:
+            nxt = toks[i + 1]
+            lab = ENTITY_TYPES.get(nxt)
+            if lab is not None:
+                surf = tk + " " + nxt
+                out.append((i, i + 1, lab, surf, *_scores(len(surf), 2)))
+    return out
+
+
+def triples(
+    toks: list[str], max_pair_distance: int
+) -> list[tuple[int, str, int, str, str, float, float]]:
+    """E2 — relation decode: (subj, subj_surface, obj, obj_surface, PRED,
+    raw, softmax) for each ordered pair of entity tokens with
+    1 ≤ obj − subj ≤ `max_pair_distance` and a predicate strictly between
+    them; the predicate is the earliest such token.
+
+    The first predicate after the subject is THE earliest in-between
+    predicate for every object of that subject, so each subject costs two
+    bisects and no pair needs an array filter."""
+    ents, preds = _positions(toks)
+    out = []
+    if not ents or not preds:
+        return out
+    for si, s in enumerate(ents):
+        hi = bisect_right(ents, s + max_pair_distance, si + 1)
+        if hi == si + 1:
+            continue
+        pi = bisect_right(preds, s)
+        if pi == len(preds):
+            break  # positions ascend: no later subject has one either
+        p = preds[pi]
+        subj = toks[s]
+        pred = toks[p].upper()
+        for o in ents[si + 1 : hi]:
+            if p < o:
+                obj = toks[o]
+                width = o - s + 1
+                out.append((s, subj, o, obj, pred, *_scores(len(subj) + 1 + len(obj), width)))
+    return out
+
+
+def events(
+    toks: list[str], max_arg_distance: int
+) -> tuple[list[tuple[int, str, float, float]], list[tuple[int, str, int, str, str]]]:
+    """E5/E6 — event decode: triggers (pos, TYPE, raw, softmax), one per
+    predicate token, and arguments (trigger, TYPE, pos, surface, role), the
+    entity tokens within `max_arg_distance` of a trigger, role ARG_BEFORE /
+    ARG_AFTER by side."""
+    ents, trigs = _positions(toks)
+    triggers, arguments = [], []
+    for t in trigs:
+        tok = toks[t]
+        etype = tok.upper()
+        triggers.append((t, etype, *_scores(len(tok), 1)))
+        lo = bisect_left(ents, t - max_arg_distance)
+        for a in ents[lo : bisect_right(ents, t + max_arg_distance, lo)]:
+            arguments.append((t, etype, a, toks[a], "ARG_BEFORE" if a < t else "ARG_AFTER"))
+    return triggers, arguments
 
 
 @dataclass
@@ -37,104 +136,20 @@ class TurnPredictions:
 
 
 class StandInModel:
-    """Deterministic extraction model with the reference decode semantics.
-
-    The decode is the Python hot loop of the whole engine (one call per
-    turn inside the Arrow UDF): profiled at ~8k turns/s/core, which matched
-    the end-to-end pipeline per-core throughput exactly — everything else
-    (Arrow framing, shuffles, canonicalization) was in the noise. Hence the
-    implementation choices here: plain-Python position lists (turns are
-    ~4–20 tokens; numpy array setup per tiny turn costs more than it
-    saves), precomputed score tables for the closed lexicon, and
-    early-exit inner loops. Outputs are bit-identical to the previous
-    numpy formulation (pinned by the UDF≡columnar parity tests)."""
+    """Deterministic extraction model with the reference decode semantics:
+    one forward() per micro-batch of tokenized turns, composed of the
+    per-turn decode functions above."""
 
     def __init__(self, cfg: PipelineConfig | None = None) -> None:
         self.cfg = cfg or PipelineConfig()
-        self._ent = dict(ENTITY_TYPES)
-        self._mods = set(MODIFIERS)
-        self._preds = set(PREDICATES)
-        # score tables over the closed lexicon: width-1 entity/trigger
-        # tokens and width-2 "modifier entity" surfaces — scores depend
-        # only on (surface, width), so precompute once per process
-        self._s1 = {
-            t: (raw_score_py(t, 1), softmax_score_py(t, 1))
-            for t in list(self._ent) + list(self._preds)
-        }
-        self._s2 = {
-            (m, e): (raw_score_py(f"{m} {e}", 2), softmax_score_py(f"{m} {e}", 2))
-            for m in self._mods
-            for e in self._ent
-        }
-        self._upper = {t: t.upper() for t in self._preds}
 
     def forward(self, token_batch: list[list[str]]) -> list[TurnPredictions]:
         """One micro-batch of turns → per-turn decoded predictions."""
-        return [self._forward_one(toks) for toks in token_batch]
-
-    def _forward_one(self, toks: list[str]) -> TurnPredictions:
-        out = TurnPredictions()
-        ent, mods, preds = self._ent, self._mods, self._preds
-        s1 = self._s1
-        ent_pos = [p for p, t in enumerate(toks) if t in ent]
-        pred_pos = [p for p, t in enumerate(toks) if t in preds]
-
-        # NER decode (E1): width-1 entity spans + modifier+entity width-2
-        mention = out.mentions.append
-        for p in ent_pos:
-            tok = toks[p]
-            r, s = s1[tok]
-            mention((p, p, ent[tok], tok, r, s))
-        for p in range(len(toks) - 1):
-            if toks[p] in mods and toks[p + 1] in ent:
-                r, s = self._s2[(toks[p], toks[p + 1])]
-                mention((p, p + 1, ent[toks[p + 1]], f"{toks[p]} {toks[p + 1]}", r, s))
-
-        # relation decode (E2): entity pairs within max distance with the
-        # earliest predicate strictly between
-        maxd = self.cfg.max_pair_distance
-        triple = out.triples.append
-        n_ent = len(ent_pos)
-        for a in range(n_ent):
-            i = ent_pos[a]
-            ti = toks[i]
-            for b in range(a + 1, n_ent):
-                j = ent_pos[b]
-                if j - i > maxd:
-                    break  # ent_pos ascending: later j only farther
-                k = -1
-                for pp in pred_pos:
-                    if pp > i:
-                        if pp < j:
-                            k = pp
-                        break
-                if k >= 0:
-                    surf = f"{ti} {toks[j]}"
-                    width = j - i + 1
-                    triple(
-                        (i, ti, j, toks[j], toks[k].upper(),
-                         raw_score_py(surf, width), softmax_score_py(surf, width))
-                    )
-
-        # trigger decode (E5) + argument decode with trigger gate (E6)
-        maxa = self.cfg.max_arg_distance
-        trigger = out.triggers.append
-        argument = out.arguments.append
-        upper = self._upper
-        for p in pred_pos:
-            tok_u = upper[toks[p]]
-            r, s = s1[toks[p]]
-            trigger((p, tok_u, r, s))
-            for a in ent_pos:
-                d = a - p
-                if d < -maxa:
-                    continue
-                if d > maxa:
-                    break
-                if a != p:
-                    argument((p, tok_u, a, toks[a],
-                              "ARG_BEFORE" if a < p else "ARG_AFTER"))
-        return out
+        maxd, maxa = self.cfg.max_pair_distance, self.cfg.max_arg_distance
+        return [
+            TurnPredictions(mentions(toks), triples(toks, maxd), *events(toks, maxa))
+            for toks in token_batch
+        ]
 
 
 _MODELS: dict[PipelineConfig, StandInModel] = {}

@@ -9,12 +9,10 @@ _FAILED_PREDICTION instead of killing the run — here a failed batch emits
 rows with task='_failed' and the conversation ids, never an exception).
 
 Scale design:
-- input is repartitioned by hash(conv_id) so one conversation lands in one
-  task (the reference's document-at-a-time unit, doc/model.md:23-28);
-  mega-conversations are the skew case — the *stateless* heads (NER,
-  relations, events) don't need conv grouping, so rows flow through
-  whatever partitioning exists; only coref requires per-conv state and is
-  handled by the coref operators.
+- the heads (NER, relations, events) are stateless per turn, so rows flow
+  through whatever partitioning exists and a mega-conversation is no skew
+  case here; only coref requires per-conversation state and is handled by
+  the coref operators.
 - Arrow batch size bounds Python-worker memory
   (spark.sql.execution.arrow.maxRecordsPerBatch, set in session.py).
 - output is a tall typed frame (task, conv_id, turn_idx, a, b, label,
@@ -33,6 +31,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from dygiepp_spark.config import PipelineConfig
 from dygiepp_spark.inference.batching import iter_microbatches
+
+# micro-batch budgets: tokens (the memory guard) and rows
+MAX_TOKENS_PER_BATCH = 65536
+MAX_ROWS_PER_BATCH = 4096
 
 OUTPUT_SCHEMA = (
     "task string, conv_id string, turn_idx int, a int, b int, "
@@ -65,14 +67,7 @@ def _run_model_on_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
     )
 
 
-def infer(
-    turns: DataFrame,
-    cfg: PipelineConfig | None = None,
-    max_tokens_per_batch: int = 65536,
-    max_rows_per_batch: int = 4096,
-    repartition_by_conv: bool = False,
-    n_partitions: int | None = None,
-) -> DataFrame:
+def infer(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Score all extraction heads in one Arrow pass. Returns the tall frame.
 
     Batch sizing: micro-batch overhead (pandas frame construction, Arrow
@@ -89,7 +84,7 @@ def infer(
                 continue
             pdf = pdf.assign(_n_tokens=pdf["text"].str.count(" ") + 1)
             for micro in iter_microbatches(
-                pdf, "_n_tokens", max_tokens_per_batch, max_rows_per_batch
+                pdf, "_n_tokens", MAX_TOKENS_PER_BATCH, MAX_ROWS_PER_BATCH
             ):
                 try:
                     yield _run_model_on_batch(micro, cfg)
@@ -109,12 +104,7 @@ def infer(
                         }
                     )
 
-    src = turns.select("conv_id", "turn_idx", "text")
-    if repartition_by_conv:
-        src = src.repartition(
-            *( [n_partitions] if n_partitions else [] ), F.col("conv_id")
-        )
-    return src.mapInPandas(fn, schema=OUTPUT_SCHEMA)
+    return turns.select("conv_id", "turn_idx", "text").mapInPandas(fn, schema=OUTPUT_SCHEMA)
 
 
 def mentions_from(tall: DataFrame) -> DataFrame:

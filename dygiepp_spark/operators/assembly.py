@@ -23,8 +23,13 @@ TURN_ORDER = ("conv_id", "turn_idx")
 
 
 def with_token_counts(turns: DataFrame) -> DataFrame:
-    """Add n_tokens = whitespace token count of `text`."""
-    return turns.withColumn("n_tokens", F.size(F.split(F.col("text"), " ")).cast("int"))
+    """Add n_tokens = whitespace token count of `text`, NULL for NULL text.
+    Explicit, because size(NULL) is NULL only under ANSI mode and -1
+    without it."""
+    text = F.col("text")
+    return turns.withColumn(
+        "n_tokens", F.when(text.isNotNull(), F.size(F.split(text, " "))).cast("int")
+    )
 
 
 def with_sentence_starts(turns: DataFrame) -> DataFrame:

@@ -137,14 +137,13 @@ def _clusters_stream(gap: int | None):
     State is the open conversation, its running token offset and its
     mention lists; a conversation may span any number of batches, and
     memory stays bounded by one conversation's mentions. Rows are those
-    of the JVM formulation: dict lookup ≡ the entity label CASE, the
-    running offset ≡ the rowsBetween(-∞,-1) window over turn_idx order
-    (a NULL text contributes 0, as size(split(NULL)) does), and the
-    same-surface lag + union-find ≡ `antecedent_edges` + connected
-    components (pinned against both other paths in pytest)."""
-    from dygiepp_spark.functions.lexicons import ENTITY_TYPES
-
-    ent_set = frozenset(ENTITY_TYPES)
+    of the JVM formulation: the width-1 mentions come from the same
+    decode (`model.mentions`), the running offset ≡ the
+    rowsBetween(-∞,-1) window over turn_idx order (a NULL text
+    contributes 0, as its NULL token count does), and the same-surface
+    lag + union-find ≡ `antecedent_edges` + connected components (pinned
+    against both other paths in pytest)."""
+    from dygiepp_spark.inference.model import mentions
 
     def flush(conv, turn_idxs, starts, surfaces, doc_positions, out):
         parent: dict = {}
@@ -191,12 +190,11 @@ def _clusters_stream(gap: int | None):
                 if text is None:
                     continue
                 toks = text.split(" ")
-                for i, tk in enumerate(toks):
-                    if tk in ent_set:
-                        turn_idxs.append(turn)
-                        starts.append(i)
-                        surfaces.append(tk)
-                        doc_positions.append(offset + i)
+                for s, _, _, surf, _, _ in mentions(toks, with_modifiers=False):
+                    turn_idxs.append(turn)
+                    starts.append(s)
+                    surfaces.append(surf)
+                    doc_positions.append(offset + s)
                 offset += len(toks)
             if out["conv_id"]:
                 yield pd.DataFrame(out)

@@ -39,13 +39,6 @@ from dygiepp_spark.functions.hashing import (
 _HASH_EXPR = char_hash_sql("token", "spark")
 
 
-def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "token"),
-    )
-
-
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact duplicate grouping by full-text hash. Returns one row per doc:
     (doc_id, text_hash, canonical_doc_id, group_size)."""
@@ -377,31 +370,6 @@ def _bucket_stats(bands: DataFrame, max_bucket: int) -> DataFrame:
         .cast("bigint")
         .alias("n_dropped_rows"),
         F.max("bucket_size").cast("bigint").alias("max_bucket_size"),
-    )
-
-
-def jaccard_counts(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard as integers: (doc_a, doc_b, n_inter, n_union)."""
-    sa = shingles.select(F.col("doc_id").alias("doc_a"), F.col("shash"))
-    sb = shingles.select(F.col("doc_id").alias("doc_b"), F.col("shash"))
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(sa, on="doc_a")
-        .join(sb, on=["doc_b", "shash"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_inter"))
-    )
-    return (
-        pairs.join(inter, on=["doc_a", "doc_b"], how="left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a"), on="doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b"), on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("bigint").alias("n_union"),
-        )
     )
 
 

@@ -1,181 +1,67 @@
-"""Column-expression extraction heads (the deterministic stand-in model).
+"""Extraction heads (the deterministic stand-in model) as Spark operators.
 
 These implement the decode semantics of the reference's four task heads
 (reference: ner.py:125-150, relation.py:149-180, events.py:341-400,
-coref.py:332-459) with the deterministic lexicon model from
-``functions.lexicons``, entirely as JVM-side column expressions — the
-oracle-checkable twin of the batched pandas-UDF inference path
-(``dygiepp_spark.inference``). A pytest asserts both paths emit identical
-triples (SURVEY.md §7 hard-part 5).
+coref.py:332-459). The NER, relation and event-argument heads are
+``mapInPandas`` row loops over the one per-turn decode in
+``inference.model`` — the same functions the Arrow inference UDF runs —
+so only (conv_id, turn_idx, text) crosses the Python boundary inward.
+The trigger head is a JVM column expression over the token view.
 
 All outputs carry (raw_score, softmax_score) per prediction, mirroring the
-reference's predicted_* format (doc/data.md:108-116).
+reference's predicted_* format (doc/data.md:108-116). Scores are dyadic
+rationals (functions/scoring.py), and Python ``str.split(" ")``/``len``
+agree with Spark's ``split(text, ' ')``/``length`` on code points, so the
+rows are bit-identical to the DuckDB oracle's.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dygiepp_spark.config import PipelineConfig
 from dygiepp_spark.functions import scoring
-from dygiepp_spark.functions.lexicons import ENTITY_TYPES, MODIFIERS, PREDICATES
+from dygiepp_spark.functions.lexicons import PREDICATES
+from dygiepp_spark.inference import model
 from dygiepp_spark.tables import tokens_view
 
-_ENTITY_MAP_ITEMS = sorted(ENTITY_TYPES.items())
 
-
-def _entity_label(col):
-    """token → entity type label (NULL if not an entity)."""
-    expr = F.lit(None).cast("string")
-    for tok, lab in reversed(_ENTITY_MAP_ITEMS):
-        expr = F.when(col == tok, F.lit(lab)).otherwise(expr)
-    return expr
-
-
-def _with_scores(df: DataFrame) -> DataFrame:
-    width = F.col("end") - F.col("start") + 1
-    return df.withColumn(
-        "raw_score", scoring.raw_score_col(F.col("surface"), width)
-    ).withColumn("softmax_score", scoring.softmax_score_col(F.col("surface"), width))
-
-
-def entity_tokens(turns: DataFrame) -> DataFrame:
-    """One row per entity-lexicon token occurrence."""
-    toks = tokens_view(turns)
-    return toks.withColumn("label", _entity_label(F.col("token"))).where(
-        F.col("label").isNotNull()
-    )
-
-
-_NER_SCHEMA = (
-    "conv_id string, turn_idx int, start int, end int, label string, "
-    "surface string, raw_score double, softmax_score double"
-)
-
-
-def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataFrame:
-    """E1 — decoded NER mentions.
-
-    Rule model: every entity-lexicon token is a width-1 mention typed by the
-    lexicon; a modifier immediately followed by an entity token forms a
-    width-2 mention with the entity's type (this exercises multi-token spans
-    and the overlap-merge operator downstream).
-
-    r7 (guide §4.2): batch-kernel form — the array-algebra twin
-    (``ner_mentions_expr``) pays interpreted per-element lambda evaluation
-    (~7.7 s executor CPU at sf0.1, dominated by the 17-branch label CASE
-    running per candidate); the same per-turn dictionary lookup in a
-    mapInPandas kernel is ~30× cheaper. Rows (incl. dyadic scores) are
-    bit-identical — pinned by test_extract's kernel/expr parity sweep.
-    Only (conv_id, turn_idx, text) crosses the boundary inward.
-    """
-    ent_map = dict(_ENTITY_MAP_ITEMS)
-    mod_set = frozenset(MODIFIERS) if include_modifier_spans else frozenset()
+def _per_turn(
+    turns: DataFrame, schema: str, decode: Callable[[list[str]], Iterable[tuple]]
+) -> DataFrame:
+    """One ``mapInPandas`` pass: each non-empty turn's tokens go through
+    `decode`, whose tuples follow (conv_id, turn_idx) in `schema` order."""
+    cols = [c.split()[0] for c in schema.split(", ")]
 
     def kernel(batches):
         import pandas as pd
 
         for pdf in batches:
-            out = {
-                "conv_id": [], "turn_idx": [], "start": [], "end": [],
-                "label": [], "surface": [], "raw_score": [], "softmax_score": [],
-            }
-
-            def emit(conv, turn, s, e, lab, surf, width):
-                k = (len(surf) * 7 + width * 3) % 16
-                out["conv_id"].append(conv)
-                out["turn_idx"].append(turn)
-                out["start"].append(s)
-                out["end"].append(e)
-                out["label"].append(lab)
-                out["surface"].append(surf)
-                out["raw_score"].append(k / 16.0 + width)
-                out["softmax_score"].append(k / 32.0 + 0.5)
-
+            rows = []
             for conv, turn, text in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["text"].tolist(),
+                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
             ):
-                if not text:
-                    continue
-                toks = text.split(" ")
-                last = len(toks) - 1
-                for i, tk in enumerate(toks):
-                    lab = ent_map.get(tk)
-                    if lab is not None:
-                        emit(conv, turn, i, i, lab, tk, 1)
-                    elif tk in mod_set and i < last:
-                        lab2 = ent_map.get(toks[i + 1])
-                        if lab2 is not None:
-                            emit(
-                                conv, turn, i, i + 1, lab2,
-                                tk + " " + toks[i + 1], 2,
-                            )
-            yield pd.DataFrame(out)
+                if text:  # NULL/empty text decodes to nothing
+                    rows.extend((conv, turn, *r) for r in decode(text.split(" ")))
+            yield pd.DataFrame(rows, columns=cols)
 
-    return turns.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=_NER_SCHEMA
+    return turns.select("conv_id", "turn_idx", "text").mapInPandas(kernel, schema=schema)
+
+
+def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataFrame:
+    """E1 — decoded NER mentions (``model.mentions``): every entity-lexicon
+    token is a width-1 mention typed by the lexicon; a modifier immediately
+    followed by an entity token forms a width-2 mention with the entity's
+    type (this exercises multi-token spans and the overlap-merge operator
+    downstream)."""
+    return _per_turn(
+        turns,
+        "conv_id string, turn_idx int, start int, end int, label string, "
+        "surface string, raw_score double, softmax_score double",
+        lambda toks: model.mentions(toks, include_modifier_spans),
     )
-
-
-def ner_mentions_expr(
-    turns: DataFrame, include_modifier_spans: bool = True
-) -> DataFrame:
-    """Column-expression twin of :func:`ner_mentions` (pre-r7 kernel
-    default) — kept for the parity pin and as the no-Python-boundary
-    fallback."""
-    # Scan-local array formulation (r7): the old plan posexploded tokens and
-    # ran a lead() window partitioned by (conv, turn) — a corpus-token-scale
-    # sort shuffle whose only purpose was to see token i+1, which the token
-    # ARRAY of the same row already provides. Per-turn candidate mentions
-    # are pure array algebra: one scan, ZERO shuffles (the relation_triples
-    # pattern). Emitted rows are byte-identical to the window plan's.
-    toks = F.split(F.col("text"), " ")
-    indexed = F.transform(
-        toks, lambda t, i: F.struct(i.cast("int").alias("pos"), t.alias("token"))
-    )
-
-    def _single(x):
-        return F.struct(
-            x["pos"].alias("start"),
-            x["pos"].alias("end"),
-            _entity_label(x["token"]).alias("label"),
-            x["token"].alias("surface"),
-        )
-
-    if include_modifier_spans:
-        n = F.size(toks)
-
-        def _cands(x):
-            nxt = F.try_element_at(toks, x["pos"] + 2)  # 1-based; NULL past end
-            pair = F.struct(
-                x["pos"].alias("start"),
-                (x["pos"] + 1).cast("int").alias("end"),
-                F.when(
-                    x["token"].isin(list(MODIFIERS)), _entity_label(nxt)
-                ).alias("label"),
-                F.concat_ws(" ", x["token"], nxt).alias("surface"),
-            )
-            return F.array(_single(x), pair)
-
-        cand_arr = F.flatten(F.transform(indexed, _cands))
-    else:
-        cand_arr = F.transform(indexed, _single)
-    exploded = turns.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(F.filter(cand_arr, lambda m: m["label"].isNotNull())).alias("m"),
-    )
-    out = exploded.select(
-        "conv_id",
-        "turn_idx",
-        F.col("m.start").cast("int").alias("start"),
-        F.col("m.end").cast("int").alias("end"),
-        F.col("m.label").alias("label"),
-        F.col("m.surface").alias("surface"),
-    )
-    return _with_scores(out)
 
 
 def predicate_tokens(turns: DataFrame) -> DataFrame:
@@ -183,205 +69,26 @@ def predicate_tokens(turns: DataFrame) -> DataFrame:
     return tokens_view(turns).where(F.col("token").isin(list(PREDICATES)))
 
 
-_TRIPLE_SCHEMA = (
-    "conv_id string, turn_idx int, subj_start int, subj_end int, "
-    "subj_surface string, pred string, obj_start int, obj_end int, "
-    "obj_surface string, raw_score double, softmax_score double"
-)
-
-
 def relation_triples(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """E2 — the triple emitter: (subj_span, pred_label, obj_span).
+    """E2 — the triple emitter: (subj_span, pred_label, obj_span)
+    (``model.triples``).
 
     Rule model: for each ordered pair of single-token entity mentions in the
     same turn with 1 ≤ obj.pos − subj.pos ≤ max_pair_distance, emit a triple
     iff a predicate token lies strictly between them; the predicate is the
     earliest such token (deterministic tie-break). Matches the reference's
-    relation arity/within-sentence constraint (doc/data.md:44-51).
-
-    r7 (guide §4.2): the higher-order-function formulation is kept as the
-    columnar twin (``relation_triples_expr``, parity-pinned in
-    test_extract), but HOF lambdas are interpreted per element — measured
-    5.4 s of executor CPU for the sf0.1 corpus's 149 k triples, and 13-18 s
-    in the dedup/canonical consumers where the un-pruned struct arrays ride
-    along. The same search as a per-turn sorted-position sweep in a batch
-    kernel is ~20-50× cheaper CPU: the first predicate strictly after the
-    subject is THE earliest in-between predicate for every object of that
-    subject (positions are scanned in ascending order), so each pair is a
-    bisect, not an array filter. Only (conv_id, turn_idx, text) crosses the
-    Python boundary inward (explicit select — guide §4.1), and emitted rows
-    are bit-identical to the expression twin: surfaces and predicates are
-    lexicon tokens, scores are dyadic rationals (functions/scoring.py), and
-    Python ``str.split(" ")``/``len`` agree with Spark's
-    ``split(text, ' ')``/``length`` on code points.
-    """
-    cfg = cfg or PipelineConfig()
-    maxd = int(cfg.max_pair_distance)
-    ent_set = frozenset(ENTITY_TYPES)
-    pred_set = frozenset(PREDICATES)
-
-    def kernel(batches):
-        from bisect import bisect_right
-
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "conv_id": [], "turn_idx": [], "subj_start": [],
-                "subj_surface": [], "pred": [], "obj_start": [],
-                "obj_surface": [], "raw_score": [], "softmax_score": [],
-            }
-            for conv, turn, text in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["text"].tolist(),
-            ):
-                if not text:  # NULL/empty text: split yields no lexicon hits
-                    continue
-                toks = text.split(" ")
-                ents: list[int] = []
-                preds: list[int] = []
-                for i, tk in enumerate(toks):
-                    if tk in ent_set:
-                        ents.append(i)
-                    elif tk in pred_set:  # lexicons are disjoint (asserted below)
-                        preds.append(i)
-                if not ents or not preds:
-                    continue
-                n_preds = len(preds)
-                for si, s in enumerate(ents):
-                    hi = bisect_right(ents, s + maxd, si + 1)
-                    if hi == si + 1:
-                        continue
-                    pi = bisect_right(preds, s)
-                    if pi >= n_preds:
-                        break  # positions ascend: no later subject has one either
-                    p = preds[pi]
-                    subj_tok = toks[s]
-                    pred_up = toks[p].upper()
-                    for o in ents[si + 1 : hi]:
-                        if p >= o:  # earliest pred after s not before o ⇒ none between
-                            continue
-                        obj_tok = toks[o]
-                        width = o - s + 1
-                        k = (
-                            (len(subj_tok) + 1 + len(obj_tok)) * 7 + width * 3
-                        ) % 16
-                        out["conv_id"].append(conv)
-                        out["turn_idx"].append(turn)
-                        out["subj_start"].append(s)
-                        out["subj_surface"].append(subj_tok)
-                        out["pred"].append(pred_up)
-                        out["obj_start"].append(o)
-                        out["obj_surface"].append(obj_tok)
-                        out["raw_score"].append(k / 16.0 + width)
-                        out["softmax_score"].append(k / 32.0 + 0.5)
-            pdf_out = pd.DataFrame(out)
-            pdf_out["subj_end"] = pdf_out["subj_start"]
-            pdf_out["obj_end"] = pdf_out["obj_start"]
-            yield pdf_out[[
-                "conv_id", "turn_idx", "subj_start", "subj_end",
-                "subj_surface", "pred", "obj_start", "obj_end",
-                "obj_surface", "raw_score", "softmax_score",
-            ]]
-
-    return turns.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=_TRIPLE_SCHEMA
-    )
-
-
-def relation_triples_expr(
-    turns: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """The column-expression twin of :func:`relation_triples` (pre-r7
-    default implementation) — same rule model as JVM array algebra, kept
-    for the kernel parity pin and as the no-Python-boundary fallback.
-
-    Scale: self-join + predicate join are all equi-joins on
-    (conv_id, turn_idx) with bounded range predicates — partition-local
-    after one hash shuffle; AQE handles skewed conversations.
-    """
-    cfg = cfg or PipelineConfig()
-    # Single-pass formulation: the within-turn pair/predicate search is
-    # pure array algebra on the token list — one scan, ZERO shuffles (the
-    # join-based formulation costs 3 scans + 2 joins + a window; at corpus
-    # scale relation extraction should be an embarrassingly parallel map,
-    # exactly like the UDF inference path). Array `filter` preserves
-    # element order, so element_at(..., 1) of the in-between predicates is
-    # the earliest one — the deterministic tie-break, no row_number needed.
-    toks = F.split(F.col("text"), " ")
-    indexed = F.transform(
-        toks, lambda t, i: F.struct(i.cast("int").alias("pos"), t.alias("token"))
-    )
-    # materialize the (small) per-turn entity/predicate arrays as named
-    # columns: nested lambdas referencing a column evaluate it once per row,
-    # whereas inlining the filter() re-runs the 17-branch label CASE for
-    # every (subject, object) probe — measured 4× slower
-    base = turns.select(
-        "conv_id",
-        "turn_idx",
-        F.filter(indexed, lambda x: _entity_label(x["token"]).isNotNull()).alias("_ents"),
-        F.filter(indexed, lambda x: x["token"].isin(list(PREDICATES))).alias("_preds"),
-    )
-    ents, preds = F.col("_ents"), F.col("_preds")
-
-    pairs = F.flatten(
-        F.transform(
-            ents,
-            lambda s: F.transform(
-                F.filter(
-                    ents,
-                    lambda o: (o["pos"] > s["pos"])
-                    & (o["pos"] - s["pos"] <= cfg.max_pair_distance),
-                ),
-                lambda o: F.struct(
-                    s["pos"].alias("subj_start"),
-                    s["token"].alias("subj_surface"),
-                    o["pos"].alias("obj_start"),
-                    o["token"].alias("obj_surface"),
-                ),
-            ),
-        )
-    )
-    with_pred = F.transform(
-        pairs,
-        lambda p: F.struct(
-            p["subj_start"],
-            p["subj_surface"],
-            p["obj_start"],
-            p["obj_surface"],
-            F.try_element_at(  # NULL (not ANSI error) when no predicate lies between
-                F.filter(
-                    preds,
-                    lambda q: (q["pos"] > p["subj_start"]) & (q["pos"] < p["obj_start"]),
-                ),
-                F.lit(1),
-            )["token"].alias("pred_tok"),
+    relation arity/within-sentence constraint (doc/data.md:44-51)."""
+    maxd = (cfg or PipelineConfig()).max_pair_distance
+    return _per_turn(
+        turns,
+        "conv_id string, turn_idx int, subj_start int, subj_end int, "
+        "subj_surface string, pred string, obj_start int, obj_end int, "
+        "obj_surface string, raw_score double, softmax_score double",
+        lambda toks: (
+            (s, s, subj, pred, o, o, obj, raw, soft)
+            for s, subj, o, obj, pred, raw, soft in model.triples(toks, maxd)
         ),
     )
-    triples_arr = F.filter(with_pred, lambda x: x["pred_tok"].isNotNull())
-
-    out = (
-        base.select(
-            "conv_id", "turn_idx", F.explode(triples_arr).alias("r")
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("r.subj_start").cast("int").alias("subj_start"),
-            F.col("r.subj_start").cast("int").alias("subj_end"),
-            F.col("r.subj_surface").alias("subj_surface"),
-            F.upper(F.col("r.pred_tok")).alias("pred"),
-            F.col("r.obj_start").cast("int").alias("obj_start"),
-            F.col("r.obj_start").cast("int").alias("obj_end"),
-            F.col("r.obj_surface").alias("obj_surface"),
-        )
-    )
-    pair_surface = F.concat_ws(" ", F.col("subj_surface"), F.col("obj_surface"))
-    pair_width = (F.col("obj_start") - F.col("subj_start") + 1).cast("int")
-    return out.withColumn(
-        "raw_score", scoring.raw_score_col(pair_surface, pair_width)
-    ).withColumn("softmax_score", scoring.softmax_score_col(pair_surface, pair_width))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -416,134 +123,24 @@ def event_triggers(turns: DataFrame) -> DataFrame:
     )
 
 
-_EVENT_ARG_SCHEMA = (
-    "conv_id string, turn_idx int, trigger_ix int, event_type string, "
-    "arg_start int, arg_end int, arg_surface string, role string"
-)
-
-
 def event_arguments(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """E6 — decoded (trigger, argument) pairs, gated on the trigger having
-    decoded non-null (reference events.py:359-382: arguments of null
-    triggers are dropped).
+    """E6 — decoded (trigger, argument) pairs (``model.events``), gated on
+    the trigger having decoded non-null (reference events.py:359-382:
+    arguments of null triggers are dropped).
 
     Rule model: arguments are entity tokens within max_arg_distance of the
     trigger; role = ARG_BEFORE / ARG_AFTER by side. Distance features mirror
     the reference's trigger-argument embedding distances
-    (events.py:222-266).
-
-    r7 (guide §4.2): batch-kernel form, same rationale/parity contract as
-    :func:`relation_triples` (expr twin kept as
-    ``event_arguments_expr``) — the trigger×argument window is a bisect
-    over sorted entity positions instead of an interpreted array filter
-    per trigger (~3.9 s executor CPU at sf0.1 → sub-second)."""
-    cfg = cfg or PipelineConfig()
-    maxd = int(cfg.max_arg_distance)
-    ent_set = frozenset(ENTITY_TYPES)
-    pred_set = frozenset(PREDICATES)
-
-    def kernel(batches):
-        from bisect import bisect_left, bisect_right
-
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "conv_id": [], "turn_idx": [], "trigger_ix": [],
-                "event_type": [], "arg_start": [], "arg_surface": [],
-                "role": [],
-            }
-            for conv, turn, text in zip(
-                pdf["conv_id"].tolist(),
-                pdf["turn_idx"].tolist(),
-                pdf["text"].tolist(),
-            ):
-                if not text:
-                    continue
-                toks = text.split(" ")
-                ents: list[int] = []
-                trigs: list[int] = []
-                for i, tk in enumerate(toks):
-                    if tk in ent_set:
-                        ents.append(i)
-                    elif tk in pred_set:
-                        trigs.append(i)
-                if not ents or not trigs:
-                    continue
-                for t in trigs:
-                    ev = toks[t].upper()
-                    lo = bisect_left(ents, t - maxd)
-                    hi = bisect_right(ents, t + maxd, lo)
-                    for a in ents[lo:hi]:
-                        out["conv_id"].append(conv)
-                        out["turn_idx"].append(turn)
-                        out["trigger_ix"].append(t)
-                        out["event_type"].append(ev)
-                        out["arg_start"].append(a)
-                        out["arg_surface"].append(toks[a])
-                        out["role"].append("ARG_BEFORE" if a < t else "ARG_AFTER")
-            pdf_out = pd.DataFrame(out)
-            pdf_out["arg_end"] = pdf_out["arg_start"]
-            yield pdf_out[[
-                "conv_id", "turn_idx", "trigger_ix", "event_type",
-                "arg_start", "arg_end", "arg_surface", "role",
-            ]]
-
-    return turns.select("conv_id", "turn_idx", "text").mapInPandas(
-        kernel, schema=_EVENT_ARG_SCHEMA
-    )
-
-
-def event_arguments_expr(
-    turns: DataFrame, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """Column-expression twin of :func:`event_arguments` (pre-r7 default),
-    kept for the parity pin."""
-    cfg = cfg or PipelineConfig()
-    # single-pass array formulation, like relation_triples: one scan, no
-    # joins — trigger×argument pairing is turn-local array algebra
-    toks = F.split(F.col("text"), " ")
-    indexed = F.transform(
-        toks, lambda t, i: F.struct(i.cast("int").alias("pos"), t.alias("token"))
-    )
-    base = turns.select(
-        "conv_id",
-        "turn_idx",
-        F.filter(indexed, lambda x: _entity_label(x["token"]).isNotNull()).alias("_ents"),
-        F.filter(indexed, lambda x: x["token"].isin(list(PREDICATES))).alias("_trigs"),
-    )
-    ents, trigs = F.col("_ents"), F.col("_trigs")
-    pairs = F.flatten(
-        F.transform(
-            trigs,
-            lambda tr: F.transform(
-                F.filter(
-                    ents,
-                    lambda a: (F.abs(a["pos"] - tr["pos"]) <= cfg.max_arg_distance)
-                    & (a["pos"] != tr["pos"]),
-                ),
-                lambda a: F.struct(
-                    tr["pos"].alias("trigger_ix"),
-                    tr["token"].alias("trig_tok"),
-                    a["pos"].alias("arg_pos"),
-                    a["token"].alias("arg_surface"),
-                ),
-            ),
-        )
-    )
-    return base.select(
-        "conv_id", "turn_idx", F.explode(pairs).alias("e")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("e.trigger_ix").cast("int").alias("trigger_ix"),
-        F.upper(F.col("e.trig_tok")).alias("event_type"),
-        F.col("e.arg_pos").cast("int").alias("arg_start"),
-        F.col("e.arg_pos").cast("int").alias("arg_end"),
-        F.col("e.arg_surface").alias("arg_surface"),
-        F.when(F.col("e.arg_pos") < F.col("e.trigger_ix"), F.lit("ARG_BEFORE"))
-        .otherwise(F.lit("ARG_AFTER"))
-        .alias("role"),
+    (events.py:222-266)."""
+    maxa = (cfg or PipelineConfig()).max_arg_distance
+    return _per_turn(
+        turns,
+        "conv_id string, turn_idx int, trigger_ix int, event_type string, "
+        "arg_start int, arg_end int, arg_surface string, role string",
+        lambda toks: (
+            (t, etype, a, a, surf, role)
+            for t, etype, a, surf, role in model.events(toks, maxa)[1]
+        ),
     )
 
 

@@ -66,13 +66,6 @@ def enumerate_spans(turns: DataFrame, cfg: PipelineConfig | None = None) -> Data
     )
 
 
-def filter_width(spans: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
-    """C2 — drop spans wider than max_span_width (reference dygie.py:56-57;
-    wide gold spans become unreachable, ner_metrics.py:10-11)."""
-    cfg = cfg or PipelineConfig()
-    return spans.where(F.col("end") - F.col("start") + 1 <= cfg.max_span_width)
-
-
 def align_ner_labels(spans: DataFrame, gold: DataFrame) -> DataFrame:
     """C3 — attach gold NER label to each enumerated span; null label '' when
     no gold span matches (reference dygie.py:59-68)."""
@@ -95,24 +88,3 @@ def align_cluster_ids(spans: DataFrame, clusters: DataFrame) -> DataFrame:
         .withColumn("gold_cluster_id", F.coalesce(F.col("_cid"), F.lit(-1)).cast("bigint"))
         .drop("_cid")
     )
-
-
-def align_relations(spans: DataFrame, gold_relations: DataFrame) -> DataFrame:
-    """C5 — map gold span-pairs onto the enumerated span list via a double
-    equi-join (reference dygie.py:80-95). Pairs whose either side exceeds
-    the width cap drop out, as in the reference."""
-    s1 = spans.select(
-        "conv_id",
-        "turn_idx",
-        F.col("start").alias("subj_start"),
-        F.col("end").alias("subj_end"),
-    )
-    s2 = spans.select(
-        "conv_id",
-        "turn_idx",
-        F.col("start").alias("obj_start"),
-        F.col("end").alias("obj_end"),
-    )
-    return gold_relations.join(
-        s1, on=["conv_id", "turn_idx", "subj_start", "subj_end"], how="inner"
-    ).join(s2, on=["conv_id", "turn_idx", "obj_start", "obj_end"], how="inner")

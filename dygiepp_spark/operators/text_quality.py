@@ -84,31 +84,6 @@ def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def _char_bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(text_col) - 1),
-        lambda i: F.substring(F.col(text_col), i, 2),
-    )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("bigram")
-    )
-
-
-def lang_profiles(docs: DataFrame, lang_col: str = "lang", text_col: str = "text") -> DataFrame:
-    """Per-language top char-bigram profile built from labeled docs (the
-    classic n-gram LID profile, built with one groupBy)."""
-    grams = _char_bigrams(docs.select(F.col(lang_col).alias("doc_id"), text_col), "doc_id", text_col)
-    counts = grams.groupBy(F.col("doc_id").alias("lang"), "bigram").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("bigram"))
-    return (
-        counts.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= PROFILE_SIZE)
-        .select("lang", "bigram")
-    )
-
-
 def _bigram_counter(text):
     """Per-doc bigram occurrence counts, replicating Spark's
     sequence(1, len-1) + substring(i, 2) edge cases verbatim (len 1 →

@@ -2,16 +2,11 @@
 analogue, reference spacy_interface.py:136-149: "give me typed columns, not
 JSON").
 
-``extract(turns)`` returns an ExtractionResult of typed DataFrames. Two
-scoring backends share identical decode semantics (pinned by pytest):
-  - 'columnar': one per-head Arrow kernel per turn batch
-    (``operators.extract``: ner_mentions, relation_triples,
-    event_arguments — each a ``mapInPandas``, parity-pinned against its
-    JVM-expression ``*_expr`` twin) — used for the oracle gate;
-  - 'udf': ``inference.infer``, one batched Arrow ``mapInPandas`` pass
-    that scores every head (the production path for a real learned
-    model).
-Coref clusters come from ``coref.clusters_via_components`` on both.
+``extract_all(turns)`` returns an ExtractionResult of typed DataFrames.
+Mentions, triples and events come from ``inference.infer``: one batched
+Arrow ``mapInPandas`` pass that scores every head through the model named
+by ``cfg.model_backend``. Coref clusters come from
+``coref.clusters_via_components``.
 
 Stage gating mirrors the reference's loss-weight gating (a head runs iff
 enabled; dygie/models/dygie.py:226-253).
@@ -24,6 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from dygiepp_spark.config import PipelineConfig
+from dygiepp_spark.inference import udf as iudf
 from dygiepp_spark.operators import canonicalize, coref, extract
 from dygiepp_spark.operators.assembly import length_guard
 
@@ -38,11 +34,7 @@ class ExtractionResult:
     guard_report: DataFrame
 
 
-def extract_all(
-    turns: DataFrame,
-    cfg: PipelineConfig | None = None,
-    backend: str = "columnar",
-) -> ExtractionResult:
+def extract_all(turns: DataFrame, cfg: PipelineConfig | None = None) -> ExtractionResult:
     cfg = cfg or PipelineConfig()
     spark = turns.sparkSession
 
@@ -50,26 +42,10 @@ def extract_all(
         F.col("is_single_token") | F.col("exceeds_encoder_limit")
     ).select("conv_id", "turn_idx", "n_tokens", "is_single_token", "exceeds_encoder_limit")
 
-    if backend == "udf":
-        from dygiepp_spark.inference import udf as iudf
-
-        tall = iudf.infer(turns, cfg)
-        mentions = iudf.mentions_from(tall) if cfg.do_ner else None
-        triples = iudf.triples_from(tall) if cfg.do_relations else None
-        events = (
-            extract.assemble_events(iudf.arguments_from(tall)) if cfg.do_events else None
-        )
-    elif backend == "columnar":
-        mentions = extract.ner_mentions(turns) if cfg.do_ner else None
-        triples = extract.relation_triples(turns, cfg) if cfg.do_relations else None
-        events = (
-            extract.assemble_events(extract.event_arguments(turns, cfg))
-            if cfg.do_events
-            else None
-        )
-    else:
-        raise ValueError(f"unknown backend {backend!r}")
-
+    tall = iudf.infer(turns, cfg)
+    mentions = iudf.mentions_from(tall) if cfg.do_ner else None
+    triples = iudf.triples_from(tall) if cfg.do_relations else None
+    events = extract.assemble_events(iudf.arguments_from(tall)) if cfg.do_events else None
     clusters = coref.clusters_via_components(turns) if cfg.do_coref else None
 
     canonical = None

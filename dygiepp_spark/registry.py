@@ -15,7 +15,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dygiepp_spark.config import PipelineConfig
-from dygiepp_spark.functions import scoring
 from dygiepp_spark.operators import assembly, canonicalize, coref, extract, metrics, pruning, spans
 from dygiepp_spark.oracle_sql import q, raw_score
 from dygiepp_spark.plans import cache as _cache
@@ -41,13 +40,6 @@ class QuerySpec:
 
 def _turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_turns(spark, sf_dir=sf_dir)
-
-
-def _scored_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sp = spans.enumerate_spans(_turns(spark, sf_dir), CFG)
-    return sp.withColumn(
-        "raw_score", scoring.raw_score_col(F.col("surface"), F.col("width"))
-    )
 
 
 # ---------------------------------------------------------------- builders

@@ -62,13 +62,6 @@ def write_turns_table(turns: DataFrame, table: str = "kg.db.turns") -> None:
     )
 
 
-def overwrite_stage_partitions(df: DataFrame, table: str) -> None:
-    """The checkpointed-stage commit in Iceberg form: dynamic partition
-    overwrite with snapshot isolation (plans/checkpoint.py's parquet
-    `partitionBy(...).mode("overwrite")` maps to exactly this)."""
-    df.writeTo(table).overwritePartitions()
-
-
 def read_turns_table(spark: SparkSession, table: str = "kg.db.turns") -> DataFrame:
     """Read the Iceberg turns table — the production counterpart of
     tables.read_turns. Bucket metadata makes conv_id-keyed joins and

@@ -431,12 +431,6 @@ def gold_clusters_from_docs(docs: DataFrame) -> DataFrame:
     return _located_cluster_members(docs, "clusters")
 
 
-def gold_event_clusters_from_docs(docs: DataFrame) -> DataFrame:
-    """Event coreference clusters — same shape as `clusters` but spans are
-    trigger spans (doc/data.md:79-91; document.py event_clusters path)."""
-    return _located_cluster_members(docs, "event_clusters")
-
-
 def predicted_clusters_from_docs(docs: DataFrame) -> DataFrame:
     """Prediction-side coref clusters (written by predictions_to_doc_json;
     reference merge dygie/models/dygie.py:289-317) → located turn-relative

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dygiepp_spark.functions.lexicons import ENTITY_TYPES
+from dygiepp_spark.inference.model import mentions
 
 DEFAULT_WATERMARK = "10 minutes"
 DEFAULT_GAP_MS = 30 * 60 * 1000  # event-time idle gap before a group expires
@@ -98,13 +98,12 @@ def _edges_for_group(
             max_ts = max(max_ts, _ts_ms(pdf["ts"]))
         for text in pdf["text"]:
             toks = text.split(" ")
-            for i, tok in enumerate(toks):
-                if tok in ENTITY_TYPES:
-                    pos = total_tokens + i
-                    prev = last_pos.get(tok)
-                    if prev is not None:
-                        rows.append((conv_id, pos, prev, tok))
-                    last_pos[tok] = pos
+            for i, _, _, tok, _, _ in mentions(toks, with_modifiers=False):
+                pos = total_tokens + i
+                prev = last_pos.get(tok)
+                if prev is not None:
+                    rows.append((conv_id, pos, prev, tok))
+                last_pos[tok] = pos
             total_tokens += len(toks)
 
     state.update((json.dumps(last_pos), total_tokens, max_ts))

@@ -3,7 +3,7 @@
 
     spark-submit --py-files dygiepp_spark.zip scripts/run_extraction.py \
         --turns <iceberg table | parquet path | synth:N> \
-        --out /path/to/output [--backend udf] [--n-partitions 64] \
+        --out /path/to/output [--n-partitions 64] \
         [--run-id r1]
 
 Writes: mentions/, triples (checkpointed per-partition with lineage),
@@ -24,7 +24,6 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     p.add_argument("--turns", required=True,
                    help="iceberg table name, parquet path, or synth:<n_convs>")
     p.add_argument("--out", required=True)
-    p.add_argument("--backend", default="udf", choices=["udf", "columnar"])
     p.add_argument("--n-partitions", type=int, default=64)
     p.add_argument("--run-id", default="run")
     p.add_argument("--master", default=None)
@@ -61,7 +60,7 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
 
     # downstream tables from the committed triples
     triples = cp.read_stage(spark, args.out, "triples").drop("partition_key")
-    result = extract_all(turns, backend=args.backend)
+    result = extract_all(turns)
     sinks.write_mentions(result.mentions, f"{args.out}/data/mentions")
     canonical = canonicalize.canonicalize_with_coref(
         triples, result.clusters, canonicalize.alias_dict(spark)

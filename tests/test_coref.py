@@ -108,6 +108,30 @@ def test_stream_kernel_max_gap_equals_global(spark):
     assert got == _rows(coref.clusters_via_components(turns, max_gap=10, global_cc=True))
 
 
+def test_null_text_offsets_do_not_depend_on_ansi_mode(spark):
+    """Without ANSI mode size(split(NULL)) is -1, not NULL; the token
+    counts must still treat a NULL-text turn as 0 tokens, so the global
+    path's offsets (a window sum of counts) agree with the stream's."""
+    turns = _turns(
+        spark,
+        [
+            (f"c{c:02d}", i, "u", _TEXTS[(c + i) % len(_TEXTS)], None)
+            for c in range(20)
+            for i in range(c % 7 + 2)
+        ],
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        stream = _rows(coref.clusters_via_components(turns))
+        global_ = _rows(
+            coref.clusters_via_components(turns, global_cc=True, persist_mentions=False)
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert stream and stream == global_
+
+
 def test_stream_kernel_empty_input(spark):
     empty = _turns(spark, [("A", 0, "u", "customer customer", None)]).where("false")
     assert coref.clusters_via_components(empty).collect() == []

@@ -2,12 +2,19 @@
 (reference test model: dygie/tests/data/dygie_test.py:12-98 — exact spans,
 labels, relation indices on a fixture doc)."""
 
+import duckdb
+import pytest
+
 from dygiepp_spark.config import PipelineConfig
 from dygiepp_spark.operators import extract
 from dygiepp_spark.operators.spans import (
     align_ner_labels,
     enumerate_spans,
 )
+from dygiepp_spark.plans import cache
+from dygiepp_spark.registry import QUERIES
+
+from conftest import rows_match
 
 # conv A turn 0: the(0) customer(1) will(2) join(3) the(4) order(5) table(6)
 # conv A turn 1: scan(0) the(1) big(2) table(3) then(4) merge(5) row(6) and(7) line(8)
@@ -128,90 +135,94 @@ def test_overlap_merge(tiny_turns):
     assert ("B", 1, 1, 2) in got and ("B", 1, 2, 2) not in got
 
 
-def test_relation_triples_kernel_matches_expr(spark):
-    """r7: relation_triples switched from interpreted HOF array algebra to
-    a mapInPandas batch kernel (guide §4.2). The expression twin is the
-    semantic spec — every emitted row (including dyadic scores) must be
-    bit-identical over an adversarial corpus: empty/NULL text, repeated
-    spaces (empty tokens), predicate adjacency, the max_pair_distance
-    boundary, subjects sharing one earliest predicate, predicate-after-
-    object, multi-predicate turns, and turns with no entities/predicates."""
+# Adversarial turns for the decode, written as documents (the turns table
+# is derived from documents: conv = doc_id // 8, turn = doc_id % 8).
+# The extraction leaves use max_pair_distance 5 and 4 and max_arg_distance
+# 3 and 2, so the boundary rows sit at those distances.
+ADVERSARIAL_TEXTS = [
+    # relation shapes
+    "customer join order",
+    "customer  join  order",  # double spaces -> empty tokens
+    "customer join x x order",  # obj at distance 4
+    "customer join x x x order",  # obj at distance 5
+    "customer join x x x x order",  # distance 6: no triple
+    "customer order join",  # predicate after object: none
+    "customer join order merge table row",  # chained pairs
+    "join merge filter",  # predicates only
+    "customer order table",  # entities only
+    "",  # empty text
+    None,  # NULL text
+    "customer join join order",  # earliest-pred tie-break
+    "key sort value hash vector",  # two subjects, shared preds
+    "the customer will join the order table then merge row",
+    # NER shapes: modifier edges
+    "big table then merge row and line",
+    "fast",  # modifier at end: no pair
+    "fast join",  # modifier before predicate: no pair
+    "big fast table",  # modifier before modifier; fast+table pair
+    "big  table",  # double space: empty token breaks the pair
+    "slow query big table customer",
+    "small stream fast vector",  # modifier pairs on the ner_metrics-excluded surfaces
+    # event shapes
+    "customer x join x table",  # args at distance 2 on both sides
+    "customer x x join x x table",  # distance 3 on both sides
+    "customer x x x join x x x table",  # distance 4: no argument
+    "join customer merge order sort",  # triggers at both edges
+    "join merge sort",  # no entities
+    "customer order",  # no triggers
+]
+
+# every leaf reads the decode: NER with and without modifier spans, pairs
+# at distances 5 and 4, arguments at 3 and 2, and the coref mention lookup
+DECODE_LEAVES = [
+    "ner_mentions",
+    "ner_metrics",
+    "ner_align_counts",
+    "relation_triples",
+    "relation_metrics",
+    "event_arguments",
+    "argument_metrics",
+    "coref_clusters",
+]
+
+
+@pytest.fixture(scope="module")
+def adversarial_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("adversarial_sf"))
     rows = [
-        ("K", 0, "customer join order"),
-        ("K", 1, "customer  join  order"),  # double spaces -> empty tokens
-        ("K", 2, "customer join x x x order"),  # obj exactly at distance 5
-        ("K", 3, "customer join x x x x order"),  # distance 6: no triple
-        ("K", 4, "customer order join"),  # predicate after object: none
-        ("K", 5, "customer join order merge table row"),  # chained pairs
-        ("K", 6, "join merge filter"),  # predicates only
-        ("K", 7, "customer order table"),  # entities only
-        ("K", 8, ""),  # empty text
-        ("K", 9, None),  # NULL text
-        ("L", 0, "customer join join order"),  # earliest-pred tie-break
-        ("L", 1, "key sort value hash vector"),  # two subjects, shared preds
-        ("L", 2, "the customer will join the order table then merge row"),
+        (i, text, "en", "adversarial", len(text or ""))
+        for i, text in enumerate(ADVERSARIAL_TEXTS)
     ]
-    turns = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    for cfg in (PipelineConfig(), PipelineConfig(max_pair_distance=2)):
-        kern = extract.relation_triples(turns, cfg).collect()
-        expr = extract.relation_triples_expr(turns, cfg).collect()
-        key = lambda r: tuple(r[c] for c in sorted(r.asDict()))
-        assert sorted(map(key, kern)) == sorted(map(key, expr))
-        assert len(kern) > 0  # the corpus must actually exercise emission
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ).coalesce(1).write.parquet(f"{d}/documents.parquet")
+    return d
 
 
-def test_ner_mentions_kernel_matches_expr(spark):
-    """r7: ner_mentions kernel/expr parity — same adversarial shapes as the
-    relation sweep plus modifier-specific edges (modifier at end of turn,
-    modifier before non-entity, modifier before modifier, double space
-    between modifier and entity)."""
-    rows = [
-        ("K", 0, "the customer will join the order table"),
-        ("K", 1, "big table then merge row and line"),
-        ("K", 2, "fast"),          # modifier at end: no pair
-        ("K", 3, "fast join"),     # modifier before predicate: no pair
-        ("K", 4, "big fast table"),  # modifier before modifier; fast+table pair
-        ("K", 5, "big  table"),    # double space: empty token breaks the pair
-        ("K", 6, ""),
-        ("K", 7, None),
-        ("K", 8, "slow query big table customer"),
-    ]
-    turns = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    for inc in (True, False):
-        kern = extract.ner_mentions(turns, include_modifier_spans=inc).collect()
-        expr = extract.ner_mentions_expr(turns, include_modifier_spans=inc).collect()
-        key = lambda r: tuple(r[c] for c in sorted(r.asDict()))
-        assert sorted(map(key, kern)) == sorted(map(key, expr))
-        assert len(kern) > 0
-
-
-def test_event_arguments_kernel_matches_expr(spark):
-    """r7: event_arguments kernel/expr parity — window boundary on both
-    sides, trigger at turn edges, multiple triggers sharing arguments."""
-    rows = [
-        ("K", 0, "the customer will join the order table"),
-        ("K", 1, "customer x x x join x x x table"),  # exactly at distance
-        ("K", 2, "customer x x x x join x x x x table"),  # beyond distance
-        ("K", 3, "join customer merge order sort"),  # triggers at both edges
-        ("K", 4, "join merge sort"),  # no entities
-        ("K", 5, "customer order"),   # no triggers
-        ("K", 6, ""),
-        ("K", 7, None),
-    ]
-    turns = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    for cfg in (PipelineConfig(), PipelineConfig(max_arg_distance=1)):
-        kern = extract.event_arguments(turns, cfg).collect()
-        expr = extract.event_arguments_expr(turns, cfg).collect()
-        key = lambda r: tuple(r[c] for c in sorted(r.asDict()))
-        assert sorted(map(key, kern)) == sorted(map(key, expr))
-        assert len(kern) > 0
+def test_decode_leaves_match_oracle_on_adversarial_turns(spark, adversarial_dir):
+    """The per-turn decode (``inference.model``) behind every extraction
+    leaf must match the DuckDB oracle SQL row for row on adversarial turns:
+    empty and NULL text, empty tokens, distance boundaries, predicate
+    tie-breaks and modifier edges."""
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{adversarial_dir}/documents.parquet/*.parquet'"
+    )
+    for name in DECODE_LEAVES:
+        spec = QUERIES[name]
+        with cache.scoped():
+            df = spec.build(spark, adversarial_dir)
+            assert rows_match(df, con.sql(spec.sql)), name
+    # the corpus must actually exercise emission in every head
+    assert QUERIES["relation_triples"].build(spark, adversarial_dir).count() > 0
+    assert QUERIES["event_arguments"].build(spark, adversarial_dir).count() > 0
+    con.close()
 
 
 def test_lexicons_are_disjoint_and_a_collision_raises():
     """Decode types a token by the first lexicon that holds it, so the
     lexicons must not share a token; the module checks it at import."""
-    import pytest
-
     from dygiepp_spark.functions import lexicons as lx
 
     lx.check_disjoint(

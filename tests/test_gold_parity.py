@@ -58,12 +58,14 @@ def test_triple_pr_vs_independent_gold(spark):
     assert p >= 0.95 and r >= 0.95, (p, r)
     assert (p, r) == (1.0, 1.0)
 
-    for backend in ("columnar", "udf"):
-        res = extract_all(turns, backend=backend)
+    for name, triples in (
+        ("extract_all", extract_all(turns).triples),
+        ("relation_triples", extract.relation_triples(turns)),
+    ):
         got_t = {
             (x["conv_id"], x["turn_idx"], x["subj_start"], x["pred"], x["obj_start"])
-            for x in res.triples.collect()
+            for x in triples.collect()
         }
         p, r = _prf(got_t, gold_triples)
-        assert p >= 0.95 and r >= 0.95, (backend, p, r)
+        assert p >= 0.95 and r >= 0.95, (name, p, r)
         assert (p, r) == (1.0, 1.0)

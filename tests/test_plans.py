@@ -6,7 +6,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from dygiepp_spark.config import PipelineConfig
-from dygiepp_spark.operators import extract, skew
+from dygiepp_spark.operators import canonicalize, extract, skew
 from dygiepp_spark.plans import checkpoint as cp
 from dygiepp_spark.plans.pipeline import extract_all
 from dygiepp_spark.synth import synth_turns
@@ -39,15 +39,28 @@ def test_synth_mega_conversations(spark):
 
 
 def test_pipeline_backends_agree(spark):
+    """extract_all scores through the Arrow inference pass; its heads must
+    equal the per-head kernels, and its canonical store the one built from
+    the kernel triples."""
     turns = synth_turns(spark, n_convs=30, seed=3)
-    col = extract_all(turns, backend="columnar")
-    udfr = extract_all(turns, backend="udf")
-    assert _triples_set(col.triples) == _triples_set(udfr.triples)
-    canon_col = {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
-                 for r in col.canonical_triples.collect()}
-    canon_udf = {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
-                 for r in udfr.canonical_triples.collect()}
-    assert canon_col == canon_udf
+    res = extract_all(turns)
+    assert _triples_set(res.triples) == _triples_set(extract.relation_triples(turns))
+    mention_cols = ["conv_id", "turn_idx", "start", "end", "label", "surface", "raw_score"]
+    assert sorted(map(tuple, res.mentions.select(mention_cols).collect())) == sorted(
+        map(tuple, extract.ner_mentions(turns).select(mention_cols).collect())
+    )
+    event_cols = ["conv_id", "turn_idx", "trigger_ix", "event_type", "args"]
+    kernel_events = extract.assemble_events(extract.event_arguments(turns))
+    assert sorted(map(tuple, res.events.select(event_cols).collect())) == sorted(
+        map(tuple, kernel_events.select(event_cols).collect())
+    )
+    canon = {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
+             for r in res.canonical_triples.collect()}
+    kernel_canon = canonicalize.canonicalize_with_coref(
+        extract.relation_triples(turns), res.clusters, canonicalize.alias_dict(spark)
+    )
+    assert canon == {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
+                     for r in kernel_canon.collect()}
 
 
 def test_checkpoint_resume_equivalence(spark):
@@ -108,8 +121,8 @@ def test_skew_report(spark):
 
 
 def test_run_extraction_entrypoint(spark, tmp_path):
-    """The spark-submit entrypoint runs end-to-end (synth input, udf
-    backend) and resumes as a no-op on the second invocation."""
+    """The spark-submit entrypoint runs end-to-end (synth input) and
+    resumes as a no-op on the second invocation."""
     import importlib.util
     import os
 

@@ -2245,14 +2245,17 @@ FROM c"""
         "coref_conll_avg_star": q(
             _CONLL_CTES
             + _CEAF_STAR_CTES
+            # conll_f and ceaf_row (one row each) are referenced once: DuckDB
+            # inlines CTEs, and four scalar subqueries over conll_f plus two
+            # over ceaf_row ran the coref pipeline six times in ~7 GB.
             + """
-        SELECT (round(10000 * (SELECT max(CASE WHEN metric = 'muc' THEN f1 END) FROM conll_f))
-              + round(10000 * (SELECT max(CASE WHEN metric = 'b3' THEN f1 END) FROM conll_f))
-              + round(10000 * (SELECT f1 FROM ceaf_row))) / 30000.0
-                 AS conll_coref_f1_star,
-               (SELECT max(CASE WHEN metric = 'muc' THEN f1 END) FROM conll_f) AS muc_f1,
-               (SELECT max(CASE WHEN metric = 'b3' THEN f1 END) FROM conll_f) AS b3_f1,
-               (SELECT f1 FROM ceaf_row) AS ceaf_star_f1"""
+        SELECT (round(10000 * m.muc_f1) + round(10000 * m.b3_f1)
+              + round(10000 * c.f1)) / 30000.0 AS conll_coref_f1_star,
+               m.muc_f1, m.b3_f1, c.f1 AS ceaf_star_f1
+        FROM (SELECT max(CASE WHEN metric = 'muc' THEN f1 END) AS muc_f1,
+                     max(CASE WHEN metric = 'b3' THEN f1 END) AS b3_f1
+              FROM conll_f) m
+        CROSS JOIN ceaf_row c"""
         ),
         "pair_features": q(
             f"""SELECT conv_id, CAST(turn_idx AS {_B}) AS turn_idx,

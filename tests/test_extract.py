@@ -172,20 +172,6 @@ ADVERSARIAL_TEXTS = [
     "customer order",  # no triggers
 ]
 
-# every leaf reads the decode: NER with and without modifier spans, pairs
-# at distances 5 and 4, arguments at 3 and 2, and the coref mention lookup
-DECODE_LEAVES = [
-    "ner_mentions",
-    "ner_metrics",
-    "ner_align_counts",
-    "relation_triples",
-    "relation_metrics",
-    "event_arguments",
-    "argument_metrics",
-    "coref_clusters",
-]
-
-
 @pytest.fixture(scope="module")
 def adversarial_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("adversarial_sf"))
@@ -199,25 +185,49 @@ def adversarial_dir(spark, tmp_path_factory):
     return d
 
 
-def test_decode_leaves_match_oracle_on_adversarial_turns(spark, adversarial_dir):
-    """The per-turn decode (``inference.model``) behind every extraction
-    leaf must match the DuckDB oracle SQL row for row on adversarial turns:
-    empty and NULL text, empty tokens, distance boundaries, predicate
-    tie-breaks and modifier edges."""
+def _leaves_match_oracle(spark, sf_dir, leaves):
+    """Each leaf, built by its per-turn kernel (``inference.model``), must
+    match its expression twin, the DuckDB oracle SQL, row for row on the
+    adversarial turns: empty and NULL text, empty tokens, distance
+    boundaries, predicate tie-breaks and modifier edges."""
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW documents AS SELECT * FROM "
-        f"'{adversarial_dir}/documents.parquet/*.parquet'"
+        f"'{sf_dir}/documents.parquet/*.parquet'"
     )
-    for name in DECODE_LEAVES:
-        spec = QUERIES[name]
-        with cache.scoped():
-            df = spec.build(spark, adversarial_dir)
-            assert rows_match(df, con.sql(spec.sql)), name
-    # the corpus must actually exercise emission in every head
+    try:
+        for name in leaves:
+            spec = QUERIES[name]
+            with cache.scoped():
+                df = spec.build(spark, sf_dir)
+                assert rows_match(df, con.sql(spec.sql)), name
+    finally:
+        con.close()
+
+
+def test_ner_mentions_kernel_matches_expr(spark, adversarial_dir):
+    # NER with and without modifier spans, and the coref mention lookup
+    _leaves_match_oracle(
+        spark,
+        adversarial_dir,
+        ["ner_mentions", "ner_metrics", "ner_align_counts", "coref_clusters"],
+    )
+
+
+def test_relation_triples_kernel_matches_expr(spark, adversarial_dir):
+    # pairs at distances 5 and 4; the corpus must actually emit triples
+    _leaves_match_oracle(
+        spark, adversarial_dir, ["relation_triples", "relation_metrics"]
+    )
     assert QUERIES["relation_triples"].build(spark, adversarial_dir).count() > 0
+
+
+def test_event_arguments_kernel_matches_expr(spark, adversarial_dir):
+    # arguments at distances 3 and 2; the corpus must actually emit them
+    _leaves_match_oracle(
+        spark, adversarial_dir, ["event_arguments", "argument_metrics"]
+    )
     assert QUERIES["event_arguments"].build(spark, adversarial_dir).count() > 0
-    con.close()
 
 
 def test_lexicons_are_disjoint_and_a_collision_raises():

@@ -6,10 +6,12 @@ decodes typed mentions, relation triples, event triggers and arguments.
 No trained weights exist in-sandbox (SURVEY.md §7 hard-part 5), so the
 decode is the deterministic lexicon system. It is written ONCE, as the
 three plain-Python functions below, and everything that decodes calls
-them: the per-head ``mapInPandas`` kernels in ``operators.extract``,
-``StandInModel.forward`` inside the Arrow inference UDF, and the mention
-lookup of both coref streams. The DuckDB oracle SQL in ``oracle_sql`` is
-the independent reference for the same rules.
+them: the per-head ``mapInPandas`` kernels in ``operators.extract`` and
+``StandInModel.forward`` inside the Arrow inference UDF. The coreference
+walk, ``CorefWalk``, is written once here too, on top of ``mentions``:
+the batch coref stream (``operators.coref``) and the stateful stream
+(``streaming.stateful``) both step it turn by turn. The DuckDB oracle SQL
+in ``oracle_sql`` is the independent reference for the same rules.
 
 Turns are ~4–20 tokens, so the decode works on plain-Python position
 lists (numpy setup per tiny turn costs more than it saves) and answers
@@ -123,6 +125,32 @@ def events(
         for a in ents[lo : bisect_right(ents, t + max_arg_distance, lo)]:
             arguments.append((t, etype, a, toks[a], "ARG_BEFORE" if a < t else "ARG_AFTER"))
     return triggers, arguments
+
+
+class CorefWalk:
+    """E3 — the stand-in antecedent decode, one conversation at a time: a
+    width-1 mention's antecedent is the nearest previous mention with the
+    same surface. State is the running token offset and the last doc
+    position of each surface, so a caller can carry it across batches
+    (the batch stream) or micro-batches (the stateful stream)."""
+
+    def __init__(self, last: dict[str, int] | None = None, offset: int = 0) -> None:
+        self.last = {} if last is None else last
+        self.offset = offset
+
+    def turn(self, text: str | None) -> list[tuple[int, str, int, int | None]]:
+        """The next turn's (start, surface, doc_pos, ant_doc_pos or None)
+        per width-1 mention; a NULL text is 0 tokens and has none."""
+        if text is None:
+            return []
+        toks = text.split(" ")
+        out = []
+        for s, _, _, surf, _, _ in mentions(toks, with_modifiers=False):
+            dp = self.offset + s
+            out.append((s, surf, dp, self.last.get(surf)))
+            self.last[surf] = dp
+        self.offset += len(toks)
+        return out
 
 
 @dataclass

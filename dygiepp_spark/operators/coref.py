@@ -3,10 +3,14 @@
 
 Rule model (stand-in for the learned antecedent scorer): a mention's
 antecedent is the nearest PREVIOUS mention with the same surface form in
-the same conversation. Like the reference decode (coref.py:332-342) each
-mention selects at most one antecedent, so the edge set is a forest and
-greedy cluster formation (coref.py:387-459) equals connected components —
-the equivalence is pinned by a pytest.
+the same conversation. The rule is written once, as the plain-Python
+``inference.model.CorefWalk``; the default batch stream here and the
+stateful stream (``streaming.stateful``) both step it, and
+``antecedent_edges`` is its JVM formulation. Like the reference decode
+(coref.py:332-342) each mention selects at most one antecedent, so the
+edge set is a forest and greedy cluster formation (coref.py:387-459)
+equals connected components — the greedy walk lives in
+tests/test_coref.py as the reference the clusters are pinned against.
 
 Coordinates: mentions are flattened to doc-level positions via the B1
 sentence offsets (reference coref.py:671-689 flattens with cumsum_shifted).
@@ -58,7 +62,6 @@ def clusters_via_components(
     turns: DataFrame,
     max_gap: int | None = None,
     global_cc: bool = False,
-    persist_mentions: bool = True,
 ) -> DataFrame:
     """E4 — cluster formation, one conversation at a time.
 
@@ -67,36 +70,32 @@ def clusters_via_components(
     algorithm. The plan is one hash(conv_id) exchange of the raw
     (conv_id, turn_idx, text) columns, a sort by (conv_id, turn_idx)
     within each partition, and ONE streaming Python pass
-    (`mapInPandas`, see `_clusters_stream`) that does the per-turn
-    offsets, the mention lookup, the antecedent lag and the union-find as
-    conversations flow past. There is no per-conversation pandas round
-    trip, and a conversation longer than an Arrow batch simply continues
-    into the next one. Returns (conv_id, cluster_id, turn_idx, start,
-    end, surface, doc_pos); cluster_id = min doc-position member;
-    singleton mentions drop (reference clusters have ≥2 members).
+    (`mapInPandas`, see `_clusters_stream`) that steps the one coref walk
+    (`CorefWalk`) and union-finds its edges as conversations flow past.
+    A conversation longer than an Arrow batch simply continues into the
+    next one. Returns (conv_id, cluster_id, turn_idx, start, end,
+    surface, doc_pos); cluster_id = min doc-position member; singleton
+    mentions drop (reference clusters have ≥2 members).
 
     `global_cc=True` is the reference and at-scale path: the JVM mention
     pipeline, `antecedent_edges`, and the iterative large/small-star
     connected components. The default path holds one conversation's
     mention graph in one Python worker; at ~10^7+ mentions per
     conversation prefer the global path, whose per-round shuffles have no
-    per-conversation hotspot. Both paths are pinned equal by pytest.
-    `persist_mentions` applies to the global path only, whose mentions
-    feed two branches."""
+    per-conversation hotspot. Both paths and the greedy walk of the
+    reference are pinned equal in tests/test_coref.py. The global path
+    persists its mentions with `plans.cache.track`; release it with
+    `cache.scoped()` or `cache.release_tracked()`."""
     if global_cc:
+        from pyspark import StorageLevel
+
         from dygiepp_spark.operators.graph import connected_components
+        from dygiepp_spark.plans import cache
 
-        mentions = coref_mentions(turns)
-        if persist_mentions:
-            # mentions feed BOTH the edge derivation and the final component
-            # join — without a persist the extraction pipeline runs twice
-            # (spill-safe; one row per entity token). Registered with
-            # plans.cache so long-lived sessions can release it.
-            from pyspark import StorageLevel
-
-            from dygiepp_spark.plans import cache
-
-            mentions = cache.track(mentions.persist(StorageLevel.MEMORY_AND_DISK))
+        # mentions feed BOTH the edge derivation and the final component
+        # join — without a persist the extraction pipeline runs twice
+        # (spill-safe; one row per entity token)
+        mentions = cache.track(coref_mentions(turns).persist(StorageLevel.MEMORY_AND_DISK))
         edges = antecedent_edges(mentions, max_gap=max_gap)
         e = edges.select(
             _node_id(F.col("conv_id"), F.col("doc_pos")).alias("src"),
@@ -134,74 +133,45 @@ def _clusters_stream(gap: int | None):
     """The streaming coref kernel: Arrow batches of (conv_id, turn_idx,
     text) sorted by (conv_id, turn_idx) in → cluster member rows out.
 
-    State is the open conversation, its running token offset and its
-    mention lists; a conversation may span any number of batches, and
-    memory stays bounded by one conversation's mentions. Rows are those
-    of the JVM formulation: the width-1 mentions come from the same
-    decode (`model.mentions`), the running offset ≡ the
-    rowsBetween(-∞,-1) window over turn_idx order (a NULL text
-    contributes 0, as its NULL token count does), and the same-surface
-    lag + union-find ≡ `antecedent_edges` + connected components (pinned
-    against both other paths in pytest)."""
-    from dygiepp_spark.inference.model import mentions
-
-    def flush(conv, turn_idxs, starts, surfaces, doc_positions, out):
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        last: dict = {}  # surface -> previous mention doc_pos (lag semantics)
-        for dp, surf in zip(doc_positions, surfaces):
-            ant = last.get(surf)
-            if ant is not None and (gap is None or dp - ant <= gap):
-                ra, rb = find(dp), find(ant)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            last[surf] = dp
-        for turn, s, surf, dp in zip(turn_idxs, starts, surfaces, doc_positions):
-            if dp not in parent:  # singleton: no edge ever touched it
-                continue
-            out["conv_id"].append(conv)
-            out["cluster_id"].append(find(dp))
-            out["turn_idx"].append(turn)
-            out["start"].append(s)
-            out["end"].append(s)
-            out["surface"].append(surf)
-            out["doc_pos"].append(dp)
+    Each conversation gets a fresh `CorefWalk`, stepped turn by turn; its
+    members and gap-filtered antecedent edges collect until the
+    conversation ends, and then the members an edge touches are emitted
+    with their component's min member as cluster_id. A conversation may
+    span any number of batches, and memory stays bounded by one
+    conversation's mentions. Rows are those of the JVM formulation (the
+    walk's running offset ≡ the rowsBetween(-∞,-1) window of token counts,
+    its antecedent ≡ the same-surface lag of `antecedent_edges`), pinned
+    against `global_cc=True` in pytest."""
+    from dygiepp_spark.inference.model import CorefWalk
+    from dygiepp_spark.operators.graph import union_find
 
     def coref_stream(batches):
-        out = {c: [] for c in _CLUSTER_COLS}
-        conv, offset = None, 0  # flushing an empty mention list emits nothing
-        turn_idxs, starts, surfaces, doc_positions = [], [], [], []
+        out: list[tuple] = []
+        conv, walk, members, edges = None, CorefWalk(), [], []
+
+        def flush():
+            root = union_find(edges)
+            for turn, s, surf, dp in members:
+                if dp in root:  # singletons: no edge touched them
+                    out.append((conv, root[dp], turn, s, s, surf, dp))
+
         for pdf in batches:
             for c, turn, text in zip(
                 pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
             ):
                 if c != conv:
-                    flush(conv, turn_idxs, starts, surfaces, doc_positions, out)
-                    conv, offset = c, 0
-                    turn_idxs, starts, surfaces, doc_positions = [], [], [], []
-                if text is None:
-                    continue
-                toks = text.split(" ")
-                for s, _, _, surf, _, _ in mentions(toks, with_modifiers=False):
-                    turn_idxs.append(turn)
-                    starts.append(s)
-                    surfaces.append(surf)
-                    doc_positions.append(offset + s)
-                offset += len(toks)
-            if out["conv_id"]:
-                yield pd.DataFrame(out)
-                out = {c: [] for c in _CLUSTER_COLS}
-        flush(conv, turn_idxs, starts, surfaces, doc_positions, out)
-        if out["conv_id"]:
-            yield pd.DataFrame(out)
+                    flush()
+                    conv, walk, members, edges = c, CorefWalk(), [], []
+                for s, surf, dp, ant in walk.turn(text):
+                    members.append((turn, s, surf, dp))
+                    if ant is not None and (gap is None or dp - ant <= gap):
+                        edges.append((dp, ant))
+            if out:
+                yield pd.DataFrame(out, columns=_CLUSTER_COLS)
+                out = []
+        flush()
+        if out:
+            yield pd.DataFrame(out, columns=_CLUSTER_COLS)
 
     return coref_stream
 
@@ -239,34 +209,3 @@ def propagate_scores(
             .drop("ant_doc_pos", "_ant_score")
         )
     return out
-
-
-def clusters_via_greedy(turns: DataFrame) -> DataFrame:
-    """E4 twin — the reference's sequential greedy walk, per conversation,
-    inside applyInPandas (document-at-a-time exactly like the reference;
-    used to prove CC equivalence, SURVEY.md §7 hard-part 3)."""
-    mentions = coref_mentions(turns)
-    edges = antecedent_edges(mentions).withColumnRenamed("doc_pos", "m_doc_pos")
-
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("m_doc_pos")
-        cluster_of: dict[int, int] = {}
-        for m, a in zip(pdf["m_doc_pos"], pdf["ant_doc_pos"]):
-            # greedy: antecedent already clustered → join; else new cluster
-            cid = cluster_of.get(a)
-            if cid is None:
-                cid = a
-                cluster_of[a] = cid
-            cluster_of[m] = cid
-        out = pd.DataFrame(
-            {"doc_pos": list(cluster_of.keys()), "cluster_id": list(cluster_of.values())}
-        )
-        out["conv_id"] = pdf["conv_id"].iloc[0]
-        return out[["conv_id", "doc_pos", "cluster_id"]]
-
-    assigned = edges.groupBy("conv_id").applyInPandas(
-        walk, schema="conv_id string, doc_pos long, cluster_id long"
-    )
-    return mentions.join(assigned, on=["conv_id", "doc_pos"], how="inner").select(
-        "conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos"
-    )

@@ -70,6 +70,29 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
+def union_find(pairs) -> dict:
+    """{node: min member of its component} over undirected `pairs` of
+    orderable nodes, in first-seen node order. Path compression, and each
+    union parents the larger root under the smaller, so a root is always
+    its component's min member. The one in-worker union-find: grouped
+    components, the coref stream and CEAF's matching components use it."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def connected_components_grouped(
     edges: DataFrame,
     group_col: str,
@@ -89,23 +112,7 @@ def connected_components_grouped(
     import pandas as pd
 
     def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.setdefault(root, root) != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(pdf["u"], pdf["v"]):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp = {n: find(n) for n in parent}
-        # normalize roots to min member (find already yields min: unions
-        # always parent the larger root under the smaller)
+        comp = union_find(zip(pdf["u"], pdf["v"]))
         out = pd.DataFrame({"node": list(comp.keys()), "component": list(comp.values())})
         out.insert(0, "group", pdf["group"].iloc[0])
         return out

@@ -411,6 +411,8 @@ def ceaf_phi4_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
 
     from pyspark import StorageLevel
 
+    from dygiepp_spark.operators.graph import union_find
+
     MAX_SMALL = CEAF_MAX_SMALL
     MAX_WORK = CEAF_MAX_WORK
 
@@ -439,28 +441,13 @@ def ceaf_phi4_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
 
         def best_matching(pdf: pd.DataFrame) -> pd.DataFrame:
             conv = pdf["conv_id"].iloc[0]
-            # build intersection-graph components over (pc, gc) edges
-            parent: dict = {}
-
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            def union(a, b):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[ra] = rb
-
+            # intersection-graph components over (pc, gc) edges; each
+            # component keeps edge order, which fixes its float sums
             edges = list(zip(pdf["pc"], pdf["gc"], pdf["phi4"]))
-            for pc, gc, _ in edges:
-                union(("p", pc), ("g", gc))
+            root = union_find((("p", pc), ("g", gc)) for pc, gc, _ in edges)
             comps: dict = {}
             for pc, gc, phi in edges:
-                comps.setdefault(find(("p", pc)), []).append((pc, gc, phi))
+                comps.setdefault(root[("p", pc)], []).append((pc, gc, phi))
             total = 0.0
             n_wide = 0
             for comp_edges in comps.values():

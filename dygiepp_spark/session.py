@@ -47,6 +47,10 @@ _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     "spark.sql.session.timeZone": "UTC",
+    # Spark 4's default, pinned: the NULL-text token counts and coref
+    # offsets are written to be mode-independent, and the pin keeps any
+    # other expression from depending on the mode.
+    "spark.sql.ansi.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",

@@ -22,6 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from dygiepp_spark.operators.assembly import with_token_counts
 from dygiepp_spark.schemas import TURNS_SCHEMA
 
 
@@ -38,13 +39,15 @@ def conversation_sessions(
 ) -> DataFrame:
     """Stateful streaming doc assembly: one row per (conv, session window)
     with turn counts and token totals; late turns beyond the watermark drop
-    (the streaming analogue of B1/B2 assembly)."""
+    (the streaming analogue of B1/B2 assembly). A NULL-text turn counts
+    as a turn of 0 tokens, as in `assembly.with_token_counts`."""
     return (
-        turns_stream.withWatermark("ts", watermark)
+        with_token_counts(turns_stream)
+        .withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap), F.col("conv_id"))
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.sum(F.size(F.split("text", " "))).alias("n_tokens"),
+            F.sum("n_tokens").alias("n_tokens"),
             F.min("turn_idx").alias("first_turn"),
             F.max("turn_idx").alias("last_turn"),
         )

@@ -1,13 +1,16 @@
 """Custom stateful streaming operators: incremental within-conversation
 coreference edges and an in-order re-emitter, via ``applyInPandasWithState``.
 
-State per conv_id (coref): the doc-level position of the last mention of
-each surface form, plus the conversation's running token offset. Each
-micro-batch appends that conversation's new turns, emits one antecedent
-edge per new mention of an already-seen surface (the streaming twin of
-operators.coref.antecedent_edges), and updates state. Downstream, clusters
-form in batch via connected components over the accumulated edge table —
-unbounded cluster state never lives in the stream.
+State per conv_id (coref): the state of the one coreference walk,
+``inference.model.CorefWalk`` — the doc-level position of the last mention
+of each surface form, plus the conversation's running token offset. Each
+micro-batch steps the walk over that conversation's new turns, emits one
+antecedent edge per new mention of an already-seen surface (the same walk
+the batch coref stream steps; ``operators.coref.antecedent_edges`` is its
+JVM formulation), and writes the walk's state back. A NULL-text turn is 0
+tokens, as in batch. Downstream, clusters form in batch via connected
+components over the accumulated edge table — unbounded cluster state
+never lives in the stream.
 
 Assumes per-conversation in-order arrival (turn_idx monotone across
 micro-batches), which the file/Kafka source provides when producers write
@@ -44,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dygiepp_spark.inference.model import mentions
+from dygiepp_spark.inference.model import CorefWalk
 
 DEFAULT_WATERMARK = "10 minutes"
 DEFAULT_GAP_MS = 30 * 60 * 1000  # event-time idle gap before a group expires
@@ -87,9 +90,9 @@ def _edges_for_group(
         return
     if state.exists:
         last_pos_json, total_tokens, max_ts = state.get
-        last_pos: dict[str, int] = json.loads(last_pos_json)
+        walk = CorefWalk(json.loads(last_pos_json), total_tokens)
     else:
-        last_pos, total_tokens, max_ts = {}, 0, 0
+        walk, max_ts = CorefWalk(), 0
 
     rows: list[tuple] = []
     for pdf in pdfs:
@@ -97,16 +100,13 @@ def _edges_for_group(
         if "ts" in pdf.columns:
             max_ts = max(max_ts, _ts_ms(pdf["ts"]))
         for text in pdf["text"]:
-            toks = text.split(" ")
-            for i, _, _, tok, _, _ in mentions(toks, with_modifiers=False):
-                pos = total_tokens + i
-                prev = last_pos.get(tok)
-                if prev is not None:
-                    rows.append((conv_id, pos, prev, tok))
-                last_pos[tok] = pos
-            total_tokens += len(toks)
+            rows.extend(
+                (conv_id, dp, ant, surf)
+                for _, surf, dp, ant in walk.turn(text)
+                if ant is not None
+            )
 
-    state.update((json.dumps(last_pos), total_tokens, max_ts))
+    state.update((json.dumps(walk.last), walk.offset, max_ts))
     _arm_event_timeout(state, max_ts, gap_ms)
     yield pd.DataFrame(rows, columns=["conv_id", "doc_pos", "ant_doc_pos", "surface"])
 

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from dygiepp_spark.operators import coref
 from dygiepp_spark.operators.graph import connected_components
+from dygiepp_spark.plans import cache
 
 
 def _cluster_sets(df):
@@ -14,6 +15,31 @@ def _cluster_sets(df):
         F.sort_array(F.collect_list("doc_pos")).alias("members")
     ).collect()
     return {(r["conv_id"], tuple(r["members"])) for r in rows}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(*coref._CLUSTER_COLS).collect())
+
+
+def _greedy_rows(turns):
+    """The reference's greedy cluster formation (coref.py:387-459) over
+    the JVM antecedent edges: walk the mentions in doc_pos order; an
+    antecedent that is already clustered joins its cluster, otherwise it
+    opens a new one. Rows in `coref._CLUSTER_COLS` order."""
+    mentions = coref.coref_mentions(turns)
+    edges = sorted(
+        (r["conv_id"], r["doc_pos"], r["ant_doc_pos"])
+        for r in coref.antecedent_edges(mentions).collect()
+    )
+    cluster_of = {}
+    for conv, m, a in edges:
+        cluster_of[conv, m] = cluster_of.setdefault((conv, a), a)
+    return sorted(
+        (r["conv_id"], cluster_of[r["conv_id"], r["doc_pos"]], r["turn_idx"],
+         r["start"], r["end"], r["surface"], r["doc_pos"])
+        for r in mentions.collect()
+        if (r["conv_id"], r["doc_pos"]) in cluster_of
+    )
 
 
 def test_clusters_golden(tiny_turns):
@@ -27,9 +53,8 @@ def test_clusters_golden(tiny_turns):
 
 
 def test_greedy_equals_components(tiny_turns):
-    cc = _cluster_sets(coref.clusters_via_components(tiny_turns))
-    greedy = _cluster_sets(coref.clusters_via_greedy(tiny_turns))
-    assert cc == greedy
+    cc = _rows(coref.clusters_via_components(tiny_turns))
+    assert cc and cc == _greedy_rows(tiny_turns)
 
 
 def test_greedy_equals_components_chain(spark):
@@ -38,11 +63,10 @@ def test_greedy_equals_components_chain(spark):
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string"
     )
-    cc = _cluster_sets(coref.clusters_via_components(df))
-    greedy = _cluster_sets(coref.clusters_via_greedy(df))
-    assert cc == greedy
+    cc = coref.clusters_via_components(df)
+    assert _rows(cc) == _greedy_rows(df)
     # one chain per surface: customer at 0,2,4,...; data at 1,3,5,...
-    assert cc == {("C", (0, 2, 4, 6, 8, 10)), ("C", (1, 3, 5, 7, 9, 11))}
+    assert _cluster_sets(cc) == {("C", (0, 2, 4, 6, 8, 10)), ("C", (1, 3, 5, 7, 9, 11))}
 
 
 def test_connected_components_generic(spark):
@@ -71,10 +95,6 @@ def _turns(spark, rows):
     )
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.select(*coref._CLUSTER_COLS).collect())
-
-
 def _stream_case(spark):
     """One conversation longer than an Arrow batch (2048 rows; its turns
     arrive shuffled), NULL-text turns everywhere, and 60 short
@@ -97,15 +117,19 @@ def test_stream_kernel_equals_greedy_and_global(spark):
     turns = _stream_case(spark)
     got = _rows(coref.clusters_via_components(turns))
     assert any(r[0] == "mega" and r[2] >= 2048 for r in got)  # past one batch
-    assert got == _rows(coref.clusters_via_greedy(turns))
-    assert got == _rows(coref.clusters_via_components(turns, global_cc=True))
+    assert got == _greedy_rows(turns)
+    with cache.scoped():  # releases the global path's mention persist
+        assert got == _rows(coref.clusters_via_components(turns, global_cc=True))
 
 
 def test_stream_kernel_max_gap_equals_global(spark):
     turns = _stream_case(spark)
     got = _rows(coref.clusters_via_components(turns, max_gap=10))
     assert got != _rows(coref.clusters_via_components(turns))  # the gap binds
-    assert got == _rows(coref.clusters_via_components(turns, max_gap=10, global_cc=True))
+    with cache.scoped():
+        assert got == _rows(
+            coref.clusters_via_components(turns, max_gap=10, global_cc=True)
+        )
 
 
 def test_null_text_offsets_do_not_depend_on_ansi_mode(spark):
@@ -123,10 +147,11 @@ def test_null_text_offsets_do_not_depend_on_ansi_mode(spark):
     ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try:
-        stream = _rows(coref.clusters_via_components(turns))
-        global_ = _rows(
-            coref.clusters_via_components(turns, global_cc=True, persist_mentions=False)
-        )
+        with cache.scoped():
+            stream = _rows(coref.clusters_via_components(turns))
+            global_ = _rows(coref.clusters_via_components(turns, global_cc=True))
+            # the mentions cached with ANSI off leave before ANSI returns
+            cache.release_tracked()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
     assert stream and stream == global_

@@ -18,6 +18,38 @@ from test_streaming_jsonl import _write_flat
 import pytest
 
 
+class _UnitState:
+    """Minimal GroupState double for unit/property tests."""
+
+    def __init__(self, value=None):
+        self._v = value
+        self.hasTimedOut = False
+        self.removed = False
+        self.updated = False
+
+    @property
+    def exists(self):
+        return self._v is not None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self.updated = True
+        self._v = v
+
+    def remove(self):
+        self.removed = True
+        self._v = None
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ts = ms
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+
 @contextlib.contextmanager
 def few_state_partitions(spark, n=4):
     """Stateful streaming queries commit one state-store per shuffle
@@ -111,22 +143,8 @@ def test_timed_out_state_is_removed():
 
     from dygiepp_spark.streaming.stateful import _edges_for_group
 
-    class FakeState:
-        hasTimedOut = True
-        exists = True
-        removed = False
-        updated = False
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            self.updated = True
-
-        def setTimeoutDuration(self, ms):
-            self.updated = True
-
-    st = FakeState()
+    st = _UnitState(('{"customer": 1}', 4, 0))
+    st.hasTimedOut = True
     frames = list(_edges_for_group(("c1",), iter([]), st))
     assert st.removed and not st.updated
     assert sum(len(f) for f in frames) == 0
@@ -262,34 +280,8 @@ def test_reorder_buffers_gaps_and_flushes_on_timeout():
 
     from dygiepp_spark.streaming.stateful import _reorder_group
 
-    class FakeState:
-        def __init__(self, value=None):
-            self._v = value
-            self.hasTimedOut = False
-            self.removed = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self.removed = True
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout_ts = ms
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
     # batch 1: turns 0 and 2 arrive (1 missing) → only 0 releases
-    st = FakeState()
+    st = _UnitState()
     pdf = pd.DataFrame({"turn_idx": [2, 0], "text": ["t2", "t0"]})
     out = pd.concat(list(_reorder_group(("c",), iter([pdf]), st)))
     assert list(out["turn_idx"]) == [0]
@@ -305,7 +297,7 @@ def test_reorder_buffers_gaps_and_flushes_on_timeout():
     # at (newest event seen) + gap — never wall-clock-relative
     from dygiepp_spark.streaming.stateful import DEFAULT_GAP_MS
 
-    st_ts = FakeState()
+    st_ts = _UnitState()
     base = pd.Timestamp("2024-01-01 00:00:00")
     pdf3 = pd.DataFrame(
         {"turn_idx": [0, 2], "text": ["t0", "t2"], "ts": [base, base + pd.Timedelta(seconds=5)]}
@@ -315,7 +307,7 @@ def test_reorder_buffers_gaps_and_flushes_on_timeout():
     assert st_ts.timeout_ts == want_ms
 
     # timeout with a still-missing gap: drain buffer in order, drop state
-    st3 = FakeState((5, '{"7": ["t7", 0], "6": ["t6", 0]}', 0))
+    st3 = _UnitState((5, '{"7": ["t7", 0], "6": ["t6", 0]}', 0))
     st3.hasTimedOut = True
     out3 = pd.concat(list(_reorder_group(("c",), iter([]), st3)))
     assert list(out3["turn_idx"]) == [6, 7] and st3.removed
@@ -439,36 +431,6 @@ def test_reorder_drains_on_watermark_advance(spark, fast_state):
         shutil.rmtree(d, ignore_errors=True)
 
 
-class _UnitState:
-    """Minimal GroupState double for unit/property tests."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-        self.removed = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self.removed = True
-        self._v = None
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_ts = ms
-
-    def getCurrentWatermarkMs(self):
-        return 0
-
-
 def test_reorder_then_coref_any_permutation_matches_batch():
     """r3 VERDICT #8 property: for ANY arrival permutation and ANY
     micro-batch slicing within the buffer bound, reorder→coref composes to
@@ -483,6 +445,7 @@ def test_reorder_then_coref_any_permutation_matches_batch():
     texts = [
         "the customer opened a table",
         "bob checked the table and the row",
+        None,  # NULL text: 0 tokens, no mentions
         "the row broke the column",
         "alice fixed the column with a key",
         "the key matched the value",
@@ -527,9 +490,60 @@ def test_reorder_then_coref_any_permutation_matches_batch():
     @settings(max_examples=30, deadline=None)
     @given(
         order=st.permutations(list(range(len(texts)))),
-        cuts=st.lists(st.integers(min_value=1, max_value=7), max_size=6),
+        cuts=st.lists(st.integers(min_value=1, max_value=len(texts) - 1), max_size=6),
     )
     def check(order, cuts):
         assert stream_edges(order, cuts) == want
+
+    check()
+
+
+def test_stateful_walk_with_null_text_matches_batch_clusters():
+    """The stateful stream steps the same coref walk as the batch stream:
+    one conversation with NULL-text turns (0 tokens each), cut into
+    micro-batches anywhere, gives edges whose clusters (greedy walk in
+    doc_pos order, as tests/test_coref.py) are exactly the batch coref
+    stream's."""
+    import pandas as pd
+    from hypothesis import given, settings, strategies as st
+
+    from dygiepp_spark.operators.coref import _clusters_stream
+    from dygiepp_spark.streaming.stateful import _edges_for_group
+
+    texts = [
+        None,
+        "the customer opened a table",
+        None,
+        "bob checked the table and the row",
+        None,
+        None,
+        "the row broke the customer case",
+        "spark wrote the line",
+        None,
+        "the line and the table",
+    ]
+    whole = pd.DataFrame({"conv_id": "c", "turn_idx": range(len(texts)), "text": texts})
+    want = sorted(
+        (r.cluster_id, r.doc_pos, r.surface)
+        for df in _clusters_stream(None)(iter([whole]))
+        for r in df.itertuples()
+    )
+    assert want
+
+    @settings(max_examples=30, deadline=None)
+    @given(cuts=st.lists(st.integers(min_value=1, max_value=len(texts) - 1), max_size=6))
+    def check(cuts):
+        state = _UnitState()
+        bounds = [0, *sorted(set(cuts)), len(texts)]
+        edges, surface = [], {}
+        for lo, hi in zip(bounds, bounds[1:]):
+            batch = iter([whole.iloc[lo:hi]])
+            for r in pd.concat(list(_edges_for_group(("c",), batch, state))).itertuples():
+                edges.append((r.doc_pos, r.ant_doc_pos))
+                surface[r.doc_pos] = surface[r.ant_doc_pos] = r.surface
+        cluster_of = {}
+        for m, a in sorted(edges):
+            cluster_of[m] = cluster_of.setdefault(a, a)
+        assert sorted((c, dp, surface[dp]) for dp, c in cluster_of.items()) == want
 
     check()

@@ -322,6 +322,29 @@ def test_session_windows(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_session_token_counts_do_not_depend_on_ansi_mode(spark):
+    """A NULL-text turn is a turn of 0 tokens in its session. Without ANSI
+    mode size(split(NULL)) is -1, not NULL, so a raw sum would count it
+    as -1. Watermarks and session windows run on a batch frame too."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+    turns = spark.createDataFrame(
+        [
+            ("c", i, text, t0 + datetime.timedelta(minutes=i))
+            for i, text in enumerate(["a b c", None, "d e"])
+        ],
+        "conv_id string, turn_idx int, text string, ts timestamp",
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        rows = ingest.conversation_sessions(turns, gap="1 hour").collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert [(r["n_turns"], r["n_tokens"]) for r in rows] == [(3, 5)]
+
+
 def test_jsonl_roundtrip(spark, tiny_turns):
     """turns → reference JSONL → turns: per-turn text equality
     (reference roundtrip: document_test.py:36-56)."""

@@ -27,9 +27,9 @@ MINHASH_PERMS: tuple[tuple[int, int], ...] = tuple(
     (pow(1103515245, i + 1, MOD - 1) + 1, pow(12345, i + 1, MOD))
     for i in range(16)
 )
-# 8 bands × 2 rows: candidate-recall at Jaccard j is 1-(1-j²)⁸ — ≥ 99.8%
-# at j = 0.75 (4×4 banding recalls only ~79% there, measured)
-N_BANDS = 8
+# 8 bands × 2 rows (the band count is len(MINHASH_PERMS) // ROWS_PER_BAND):
+# candidate-recall at Jaccard j is 1-(1-j²)⁸ — ≥ 99.8% at j = 0.75
+# (4×4 banding recalls only ~79% there, measured)
 ROWS_PER_BAND = 2
 
 SIMHASH_BITS = 32
@@ -49,9 +49,3 @@ def char_hash_sql(col: str, dialect: str) -> str:
             f"c -> CAST(ascii(c) AS BIGINT)), (acc, x) -> (acc * 31 + x) % {MOD})"
         )
     raise ValueError(dialect)
-
-
-def minhash_perm_sql(hash_col: str, i: int) -> str:
-    """i-th permuted hash of an already-hashed shingle (dialect-neutral)."""
-    a, b = MINHASH_PERMS[i]
-    return f"(({a} * {hash_col} + {b}) % {PERM_MOD})"

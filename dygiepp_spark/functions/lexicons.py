@@ -60,8 +60,6 @@ def check_disjoint(**lexicons) -> None:
 
 check_disjoint(ENTITY_TYPES=ENTITY_TYPES, PREDICATES=PREDICATES, MODIFIERS=MODIFIERS)
 
-NULL_LABEL = ""  # reference null label, index 0 (ner.py:49-51)
-
 
 def sql_in(values) -> str:
     """Render a python string collection as a SQL IN-list."""

@@ -18,9 +18,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from dygiepp_spark.config import PipelineConfig
 
-# Stable turn ordering: the contract key (FIXTURES.md §1).
-TURN_ORDER = ("conv_id", "turn_idx")
-
 
 def with_token_counts(turns: DataFrame) -> DataFrame:
     """Add n_tokens = whitespace token count of `text`, NULL for NULL text.

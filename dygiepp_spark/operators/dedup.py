@@ -12,15 +12,16 @@ floats anywhere.
 Scale design:
 - exact dedup: one groupBy on a 64-bit-ish hash — map-side combine, one
   shuffle; canonical id = min doc_id (deterministic).
-- MinHash: shingle explode → per-(doc, perm) min aggregation. The shingle
-  table is the big intermediate; it is never joined, only aggregated, so
-  partial aggregation collapses it executor-side.
-- LSH: band signature groupBy → per-bucket pair generation. Bucket sizes
-  are the skew risk; huge buckets (degenerate near-identical corpora) are
-  capped by `max_bucket` with a logged drop — at 100 TB an uncapped bucket
-  is a cross-join bomb.
+- MinHash: one scan-local batch kernel (`shingle_profiles`) turns each
+  doc into its distinct shingle hashes, permutation minima and band
+  hashes. No shingle table is materialized and nothing shuffles.
+- LSH: the band rows are exploded from the profiles, and one self-join
+  on (band_ix, band_hash) generates the pairs. Bucket sizes are the skew
+  risk; huge buckets (degenerate near-identical corpora) are capped by
+  `max_bucket`, and `lsh_bucket_stats` reports what the cap dropped — at
+  100 TB an uncapped bucket is a cross-join bomb.
 - verification joins candidate PAIRS only (LSH keeps this linear-ish), on
-  shingle hash sets.
+  the two docs' shingle hash arrays.
 """
 
 from __future__ import annotations
@@ -29,14 +30,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from dygiepp_spark.functions.hashing import (
     MINHASH_PERMS,
-    PERM_MOD,
     MOD,
     ROWS_PER_BAND,
     SIMHASH_BITS,
     char_hash_sql,
 )
-
-_HASH_EXPR = char_hash_sql("token", "spark")
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -169,71 +167,9 @@ def shingle_profiles(
     return src.mapInPandas(kernel, schema=_PROFILE_SCHEMA)
 
 
-def shingle_hash_arrays(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
-    """(doc_id, shashes) — the DISTINCT word n-gram shingle hashes of each
-    doc as one array column (see :func:`shingle_profiles`)."""
-    return shingle_profiles(docs, id_col, text_col, n).select("doc_id", "shashes")
-
-
-def shingle_hashes(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
-    """Distinct word n-gram shingles per doc, as integer hashes — the row
-    view of :func:`shingle_hash_arrays` (explode is narrow; rows are
-    already distinct per construction, so no dedup shuffle)."""
-    return shingle_hash_arrays(docs, id_col, text_col, n).select(
-        "doc_id", F.explode("shashes").alias("shash")
-    )
-
-
-def minhash_signatures(shingles: DataFrame, k: int = len(MINHASH_PERMS)) -> DataFrame:
-    """(doc_id, perm_ix, minhash) — k permutation minima per doc."""
-    mins = [
-        F.min((F.lit(a) * F.col("shash") + F.lit(b)) % F.lit(PERM_MOD)).alias(f"m{i}")
-        for i, (a, b) in enumerate(MINHASH_PERMS[:k])
-    ]
-    wide = shingles.groupBy("doc_id").agg(*mins)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(i).cast("int").alias("perm_ix"), F.col(f"m{i}").alias("minhash"))
-            for i in range(k)
-        ]
-    )
-    return wide.select("doc_id", F.explode(pairs).alias("p")).select(
-        "doc_id", F.col("p.perm_ix").cast("bigint").alias("perm_ix"), F.col("p.minhash")
-    )
-
-
-def lsh_band_signatures(shingles: DataFrame) -> DataFrame:
-    """(doc_id, band_ix, band_hash) — ROWS_PER_BAND minhashes folded per band."""
-    sig = minhash_signatures(shingles)
-    band = (F.col("perm_ix") / ROWS_PER_BAND).cast("bigint").alias("band_ix")
-    folded = (
-        sig.withColumn("band_ix", band)
-        .withColumn("rank_in_band", F.col("perm_ix") % ROWS_PER_BAND)
-        .groupBy("doc_id", "band_ix")
-        .agg(
-            # fold in perm order: deterministic polynomial combine
-            F.aggregate(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("rank_in_band", "minhash"))
-                    ),
-                    lambda s: s["minhash"],
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: (acc * 31 + x) % MOD,
-            ).alias("band_hash")
-        )
-    )
-    return folded
-
-
 def minhash_rows_from_profiles(profiles: DataFrame, k: int = len(MINHASH_PERMS)) -> DataFrame:
-    """(doc_id, perm_ix, minhash) from :func:`shingle_profiles` — identical
-    rows to ``minhash_signatures(shingle_hashes(docs))``, zero shuffles."""
+    """(doc_id, perm_ix, minhash) from :func:`shingle_profiles`, zero
+    shuffles (gated against the ``minhash_signatures`` oracle leaf)."""
     return (
         profiles.where(F.size("minhashes") > 0)
         .select(
@@ -245,9 +181,9 @@ def minhash_rows_from_profiles(profiles: DataFrame, k: int = len(MINHASH_PERMS))
 
 
 def band_signatures_from_profiles(profiles: DataFrame) -> DataFrame:
-    """(doc_id, band_ix, band_hash) from :func:`shingle_profiles` —
-    identical rows to ``lsh_band_signatures(shingle_hashes(docs))``,
-    zero shuffles."""
+    """(doc_id, band_ix, band_hash) from :func:`shingle_profiles`: the
+    ROWS_PER_BAND minhashes of each band folded in perm order, zero
+    shuffles."""
     return (
         profiles.where(F.size("bands") > 0)
         .select("doc_id", F.posexplode("bands").alias("band_ix", "band_hash"))
@@ -257,9 +193,9 @@ def band_signatures_from_profiles(profiles: DataFrame) -> DataFrame:
 
 def candidate_pairs_from_bands(bands: DataFrame, max_bucket: int = 64) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing any band bucket, with the
-    bucket-cap guard — the self-join half of `lsh_candidate_pairs`, shared
-    by the row and array pipelines (both join sides are the same subtree,
-    so the bucket-size window's exchange is built once and reused)."""
+    bucket-cap guard — the self-join shared by `lsh_candidate_pairs` and
+    `near_dup_pairs` (both join sides are the same subtree, so the
+    bucket-size window's exchange is built once and reused)."""
     sized = bands.withColumn(
         "bucket_size",
         F.count(F.lit(1)).over(Window.partitionBy("band_ix", "band_hash")),
@@ -274,79 +210,37 @@ def candidate_pairs_from_bands(bands: DataFrame, max_bucket: int = 64) -> DataFr
     )
 
 
-def lsh_candidate_pairs_local(
+def lsh_candidate_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int = 64,
 ) -> DataFrame:
-    """`lsh_candidate_pairs` computed from the scan-local profile kernel:
-    shingles→minhash→bands never shuffle; the plan's only exchanges are the
-    bucket-size window (reused by both self-join sides) and the final
-    distinct. Identical rows to the row formulation."""
+    """Distinct (doc_a < doc_b) pairs sharing any LSH band bucket.
+
+    Buckets larger than `max_bucket` are dropped (cross-join bomb guard);
+    callers needing exhaustivity raise the cap explicitly. Shingles,
+    minhashes and bands come from the scan-local profile kernel and never
+    shuffle; the plan's only exchanges are the bucket-size window (reused
+    by both self-join sides) and the final distinct."""
     return candidate_pairs_from_bands(
         band_signatures_from_profiles(shingle_profiles(docs, id_col, text_col)),
         max_bucket=max_bucket,
     )
 
 
-def lsh_candidate_pairs(
-    shingles: DataFrame, max_bucket: int = 64, persist_bands: bool = False
-) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs sharing any LSH band bucket.
-
-    Buckets larger than `max_bucket` are dropped (cross-join bomb guard);
-    callers needing exhaustivity raise the cap explicitly.
-
-    ``persist_bands`` caches the band-signature table before the a/b
-    self-join — without it the whole shingle→minhash→band pipeline runs
-    TWICE (once per join side); at corpus scale that is re-tokenizing the
-    corpus an extra time. Spill-safe (MEMORY_AND_DISK)."""
-    bands = lsh_band_signatures(shingles)
-    if persist_bands:
-        from pyspark import StorageLevel
-
-        from dygiepp_spark.plans import cache
-
-        bands = cache.track(bands.persist(StorageLevel.MEMORY_AND_DISK))
-    sized = bands.withColumn(
-        "bucket_size",
-        F.count(F.lit(1)).over(Window.partitionBy("band_ix", "band_hash")),
-    ).where(F.col("bucket_size") <= max_bucket)
-    a = sized.select("band_ix", "band_hash", F.col("doc_id").alias("doc_a"))
-    b = sized.select("band_ix", "band_hash", F.col("doc_id").alias("doc_b"))
-    return (
-        a.join(b, on=["band_ix", "band_hash"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def lsh_bucket_stats_local(
+def lsh_bucket_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int = 64,
 ) -> DataFrame:
-    """`lsh_bucket_stats` fed by the scan-local profile kernel — identical
-    row, two aggregation shuffles total (band building no longer shuffles)."""
-    return _bucket_stats(
-        band_signatures_from_profiles(shingle_profiles(docs, id_col, text_col)),
-        max_bucket,
-    )
-
-
-def lsh_bucket_stats(shingles: DataFrame, max_bucket: int = 64) -> DataFrame:
     """Observability twin of `lsh_candidate_pairs`: how much did the
     cross-join-bomb guard drop?  One row: total buckets, buckets over the
     cap, doc-band rows discarded by the cap, and the largest bucket seen.
     A near-duplicate-heavy corpus silently loses recall when buckets
     overflow — surface it instead of guessing."""
-    return _bucket_stats(lsh_band_signatures(shingles), max_bucket)
-
-
-def _bucket_stats(bands: DataFrame, max_bucket: int) -> DataFrame:
+    bands = band_signatures_from_profiles(shingle_profiles(docs, id_col, text_col))
     per_bucket = bands.groupBy("band_ix", "band_hash").agg(
         F.count(F.lit(1)).cast("bigint").alias("bucket_size")
     )
@@ -425,14 +319,11 @@ def near_dup_pairs(
     """MinHash-LSH candidates verified at Jaccard ≥ num/den (integer test:
     den·|∩| ≥ num·|∪|).
 
-    The shingle table feeds FIVE downstream branches (band signatures,
-    both sides of the candidate self-join via bands, both sides of the
-    intersection join, and the per-doc size table); without
-    ``persist_shingles`` Catalyst recomputes the tokenize→2-gram→hash→
-    distinct pipeline for each branch (measured: 8 full corpus scans in
-    the physical plan). Persisting is spill-safe (MEMORY_AND_DISK) and
-    turns that into one scan + cache reads — the difference between
-    tokenizing 100 TB once and eight times.
+    The profile table (`shingle_profiles`) feeds THREE branches: the band
+    self-join and both sides of the verify join. Without
+    ``persist_shingles`` Catalyst runs the scan and the profile kernel once
+    per branch. Persisting is spill-safe (MEMORY_AND_DISK) and turns that
+    into one scan + cache reads.
 
     ``persist_shingles="auto"`` (default, r4 VERDICT #5): both crossover
     scales are measured every round, so the decision is encoded — persist
@@ -447,15 +338,9 @@ def near_dup_pairs(
                 f"got {persist_shingles!r}"
             )
         persist_shingles, _ = persist_decision(docs)
-    # r7 fused pipeline: the per-doc signature kernel (shingle_profiles —
-    # scan-local, no token window, no distinct shuffle) feeds band
-    # signatures and the Jaccard verify, which is array_intersect on the
-    # two candidates' (distinct) shingle sets — |∩| and |∪| are identical
-    # to the row-join formulation's, but the verify is two broadcast joins
-    # of the (small) pair list against the array table instead of a
-    # corpus-scale row join + aggregation. The profile table feeds THREE
-    # branches (bands + both verify sides), hence the same adaptive
-    # persist as before.
+    # the Jaccard verify is array_intersect on the two candidates'
+    # (distinct) shingle sets: two joins of the (small) pair list against
+    # the profile table, no corpus-scale row join or aggregation.
     arrs = (
         shingle_profiles(docs, id_col, text_col)
         .select("doc_id", "shashes", "bands")

@@ -17,58 +17,28 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 
 def prune_topk(
-    spans: DataFrame,
-    spans_per_word: float,
-    min_keep: int = 1,
-    cap: int | None = None,
-    score_col: str = "raw_score",
-) -> DataFrame:
-    """Keep top-k spans per (conv_id, turn_idx), k = clamp(ceil(ratio·n_tokens)).
-
-    Requires columns: n_tokens, start, end, `score_col`. Output keeps a
-    `beam_rank` (1-based, score order) and is re-sorted by (start, end) via
-    an explicit ordering column so downstream positional ops see original
-    order (reference entity_beam_pruner.py:166-171).
-    """
-    k = F.greatest(
-        F.lit(min_keep),
-        F.ceil(F.lit(spans_per_word) * F.col("n_tokens")).cast("int"),
-    )
-    if cap is not None:
-        k = F.least(k, F.lit(cap))
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy(
-        F.col(score_col).desc(), F.col("start").asc(), F.col("end").asc()
-    )
-    pruned = (
-        spans.withColumn("beam_rank", F.row_number().over(w))
-        .where(F.col("beam_rank") <= k)
-        .drop()
-    )
-    # order-restore rank: position of the surviving span in original order
-    w_pos = Window.partitionBy("conv_id", "turn_idx").orderBy("start", "end")
-    return pruned.withColumn("span_order", F.row_number().over(w_pos))
-
-
-def prune_topk_local(
     turns: DataFrame,
     spans_per_word: float,
     min_keep: int = 1,
     cap: int | None = None,
     cfg=None,
 ) -> DataFrame:
-    """Fused enumerate→score→prune, scan-local (r7): the row formulation
-    shuffled the FULL enumerated span table (surfaces included — ~50 MB at
-    sf0.1 for 5 k turns) into a row_number window and then a second window
-    for the order restore. But the beam group key (conv, turn) IS the input
-    row key, so top-k per turn needs no shuffle at all. This is a
-    guide-§4.2 batch kernel (a first attempt as JVM array_sort over span
-    structs measured 10× the window plan's CPU — interpreted struct
-    comparators): spans are enumerated as numpy index arrays, the score
-    needs only the SURFACE LENGTH (prefix-sums of token lengths — no
-    surface strings built), lexsort picks the beam, and surfaces are
-    materialized for the ≤k survivors only. Dyadic score arithmetic and
-    (−score, start, end) tie-breaks are exact, so rows are identical to
-    ``prune_topk(scored_enumerated_spans, ...)``:
+    """Keep top-k spans per (conv_id, turn_idx),
+    k = clamp(ceil(ratio·n_tokens)), fused with enumerate and score in one
+    scan-local pass.
+
+    The beam group key (conv, turn) IS the input row key, so top-k per turn
+    needs no shuffle. This is a guide-§4.2 batch kernel (a first attempt as
+    JVM array_sort over span structs measured 10× the window plan's CPU —
+    interpreted struct comparators): spans are enumerated as numpy index
+    arrays, the score needs only the SURFACE LENGTH (prefix-sums of token
+    lengths — no surface strings built), lexsort picks the beam, and
+    surfaces are materialized for the ≤k survivors only. Output keeps a
+    `beam_rank` (1-based, score order) and a `span_order` that restores
+    original (start, end) order for downstream positional ops (reference
+    entity_beam_pruner.py:166-171). Dyadic score arithmetic and
+    (−score, start, end) tie-breaks are exact, so rows equal the
+    ``prune_topk`` oracle leaf's window formulation:
     (conv_id, turn_idx, n_tokens, start, end, surface, width, raw_score,
     beam_rank, span_order)."""
     import math

@@ -1,10 +1,9 @@
 """Similarity search over embedding columns.
 
 Two paths, as a 100 TB pipeline needs:
-- brute-force top-k (the correctness baseline): query × corpus join with a
-  JVM-side dot product (zip_with + aggregate — whole-stage codegen, no
-  Python). Quadratic; used for small query sets and for validating the
-  approximate path.
+- brute-force top-k (the correctness baseline): the collected query set
+  against every corpus batch as one exact int64 matmul. Quadratic; used
+  for small query sets and for validating the approximate path.
 - sign-LSH bucketed ANN (the scale path): deterministic integer hyperplanes
   → bucket signature → candidates share a bucket, so the join is
   equi-partitioned and linear-ish in bucket sizes.
@@ -76,43 +75,17 @@ def dot_topk(
 ) -> DataFrame:
     """Brute-force integer-dot top-k: for each query vec (id < n_queries),
     the k corpus vectors with the largest dot product (self excluded),
-    deterministic tie-break on neighbor id."""
-    q = quantize(emb, "embedding").select(F.col(id_col).alias("qid"), F.col("q").alias("qv"))
-    c = quantize(emb, "embedding").select(F.col(id_col).alias("nid"), F.col("q").alias("nv"))
-    queries = q.where(F.col("qid") < n_queries)
-    scored = (
-        F.broadcast(queries)
-        .join(c, F.col("qid") != F.col("nid"))
-        .select("qid", "nid", _dot(F.col("qv"), F.col("nv")).alias("dot"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("qid").cast("bigint").alias("vec_id"),
-            F.col("rank").cast("bigint"),
-            F.col("nid").cast("bigint").alias("neighbor_id"),
-            F.col("dot").cast("bigint"),
-        )
-    )
+    deterministic tie-break on neighbor id.
 
-
-def dot_topk_local(
-    emb: DataFrame,
-    k: int = 3,
-    n_queries: int = 32,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """`dot_topk` with the (bounded) query side collected and the integer
-    dot products computed as one exact int64 matmul per Arrow batch —
-    guide §4.2: the zip_with+aggregate JVM dot ran ~4M interpreted lambda
-    evaluations for 32×2000 pairs (~10 s CPU at sf0.1). Each batch prunes
-    to its own top-k per query (exact under the (dot desc, nid asc) total
-    order), so the final window ranks only partitions×queries×k rows.
-    floor(x·1000) quantization (in the element type, see `_quantize_local`)
-    and int64 wraparound match the JVM/DuckDB arithmetic bit-for-bit; rows
-    are identical to `dot_topk`."""
+    The (bounded) query side is collected and the integer dot products
+    are computed as one exact int64 matmul per Arrow batch — guide §4.2:
+    a zip_with+aggregate JVM dot ran ~4M interpreted lambda evaluations
+    for 32×2000 pairs (~10 s CPU at sf0.1). Each batch prunes to its own
+    top-k per query (exact under the (dot desc, nid asc) total order), so
+    the final window ranks only partitions×queries×k rows. floor(x·1000)
+    quantization (in the element type, see `_quantize_local`) and int64
+    wraparound match the DuckDB arithmetic bit-for-bit; rows equal the
+    ``embedding_dot_topk`` oracle leaf's."""
     if n_queries > 65536:
         raise ValueError(
             f"n_queries={n_queries}: the query matrix is collected to the driver "

@@ -105,9 +105,9 @@ def ner_align_counts(spark, sf_dir):
 
 def prune_topk(spark, sf_dir):
     """D4 — beam pruning with order restore (entity_beam_pruner.py:55-192).
-    r7: fused scan-local formulation (pruning.prune_topk_local) — identical
-    rows, zero shuffles."""
-    pruned = pruning.prune_topk_local(
+    Fused scan-local kernel (enumerate, score and prune per turn), zero
+    shuffles."""
+    pruned = pruning.prune_topk(
         _turns(spark, sf_dir), CFG.relation_spans_per_word, min_keep=1, cfg=CFG
     )
     return _longs(
@@ -528,7 +528,7 @@ def relation_metrics(spark, sf_dir):
 def antecedent_stats(spark, sf_dir):
     """D8 — bounded antecedent candidate windows over the pruned coref beam
     (coref.py:471-526)."""
-    pruned = pruning.prune_topk_local(
+    pruned = pruning.prune_topk(
         _turns(spark, sf_dir), CFG.coref_spans_per_word, min_keep=CFG.coref_min_keep, cfg=CFG
     )
     pairs = pruning.antecedent_pairs(pruned, CFG.max_antecedents)
@@ -543,7 +543,7 @@ def antecedent_stats(spark, sf_dir):
 
 def distance_bucket_hist(spark, sf_dir):
     """D9/D12 — log-bucketed distance feature histogram (util.bucket_values)."""
-    pruned = pruning.prune_topk_local(
+    pruned = pruning.prune_topk(
         _turns(spark, sf_dir), CFG.coref_spans_per_word, min_keep=CFG.coref_min_keep, cfg=CFG
     )
     pairs = pruning.antecedent_pairs(pruned, CFG.max_antecedents)
@@ -1616,7 +1616,7 @@ def exact_dedup(spark, sf_dir):
 
 
 def minhash_signatures(spark, sf_dir):
-    # scan-local array pipeline (r7): identical rows, zero shuffles
+    # the scan-local profile kernel (dedup.shingle_profiles): zero shuffles
     from dygiepp_spark.operators import dedup
 
     return dedup.minhash_rows_from_profiles(dedup.shingle_profiles(_docs(spark, sf_dir)))
@@ -1625,7 +1625,7 @@ def minhash_signatures(spark, sf_dir):
 def lsh_candidate_pairs(spark, sf_dir):
     from dygiepp_spark.operators import dedup
 
-    return dedup.lsh_candidate_pairs_local(_docs(spark, sf_dir))
+    return dedup.lsh_candidate_pairs(_docs(spark, sf_dir))
 
 
 def near_dup_pairs(spark, sf_dir):
@@ -1664,7 +1664,7 @@ def lsh_bucket_stats(spark, sf_dir):
     doc-band rows the max_bucket cap drops (silent-loss detector)."""
     from dygiepp_spark.operators import dedup
 
-    return dedup.lsh_bucket_stats_local(_docs(spark, sf_dir))
+    return dedup.lsh_bucket_stats(_docs(spark, sf_dir))
 
 
 def simhash_values(spark, sf_dir):
@@ -1674,10 +1674,10 @@ def simhash_values(spark, sf_dir):
 
 
 def embedding_dot_topk(spark, sf_dir):
-    # r7: exact int64-matmul kernel path — identical rows, ~50× less CPU
+    # exact int64-matmul kernel, one batch at a time
     from dygiepp_spark.operators import similarity
 
-    return similarity.dot_topk_local(_emb(spark, sf_dir), k=3, n_queries=32)
+    return similarity.dot_topk(_emb(spark, sf_dir), k=3, n_queries=32)
 
 
 def embedding_lsh_buckets(spark, sf_dir):
@@ -2421,7 +2421,7 @@ _ROTATED_TAIL = [
     # embedding_near_dup stay in-window as the family's scale-path
     # representatives)
     # (r7: embedding_dot_topk rotated BACK into the window — its builder
-    # now runs the int64-matmul kernel path (similarity.dot_topk_local),
+    # now runs the int64-matmul kernel (similarity.dot_topk),
     # and changed operators must be driver-gated; frame_sample_check
     # rotates out in exchange: driver-green r05+r06, multimodal.py
     # untouched in r7, re-verified locally via check_gate;
@@ -2435,7 +2435,7 @@ _ROTATED_TAIL = [
     # the same family are already tail, lang_id_predict stays in-window)
     "quality_scores",
     # (r7: antecedent_stats / distance_bucket_hist rotated BACK into the
-    # window — their builders now run the fused prune_topk_local path, and
+    # window — their builders now run the fused prune_topk kernel, and
     # changed-operator queries must be driver-gated; in exchange
     # trigger_metrics / argument_metrics / multi_trigger_stats /
     # embedding_cosine_topk rotate out: each driver-green r05+r06,
@@ -2459,8 +2459,8 @@ _ROTATED_TAIL = [
     # trigger_metrics/label_vocab are tail under the r6-established
     # convention with the changed emitters gated in-window directly),
     # embedding_near_dup / embedding_ivf_topk / embedding_ivf_fixed
-    # (similarity.py r7 diff touches only dot_topk_local; dot_topk stays
-    # in-window as the changed similarity path), and
+    # (similarity.py r7 diff touches only the dot_topk kernel;
+    # embedding_dot_topk stays in-window as the changed similarity path), and
     # multimodal_decode_check (multimodal.py untouched in r7).
     # All re-verified locally via the full check_gate sweep this round.)
     "exact_dedup",

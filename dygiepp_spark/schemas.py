@@ -1,11 +1,8 @@
-"""Explicit schemas for every table the engine reads or writes.
+"""Explicit schema of the transcript turns table, the one input whose
+schema a reader cannot infer (a streaming file source needs it up front).
 
-The reference's data model is semi-dynamic nested JSON
-(reference: doc/data.md:17-33, dygie/data/dataset_readers/document.py:94-104);
-here every intermediate is a fixed StructType so Catalyst can prune columns
-and push filters. Spans are inclusive token intervals, dual-addressed
-(turn-relative and doc-relative via ``sentence_start``), matching
-document.py:379-419.
+Every other table's schema is whatever its operator's select produces; the
+DuckDB oracle pins those columns and types query by query.
 """
 
 from __future__ import annotations
@@ -21,116 +18,5 @@ TURNS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType(), False),
         T.StructField("tool", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
-# ---- assembled document (reference Document, document.py:94-104) ----
-DOCUMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_key", T.StringType(), False),
-        T.StructField("dataset", T.StringType(), False),
-        T.StructField("sentences", T.ArrayType(T.ArrayType(T.StringType())), False),
-        T.StructField("sentence_starts", T.ArrayType(T.LongType()), False),
-        T.StructField("roles", T.ArrayType(T.StringType()), True),
-        T.StructField("weight", T.DoubleType(), True),
-    ]
-)
-
-# ---- extraction outputs ----
-MENTION_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("start", T.IntegerType(), False),  # turn-relative, inclusive
-        T.StructField("end", T.IntegerType(), False),  # inclusive
-        T.StructField("label", T.StringType(), False),
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("raw_score", T.DoubleType(), True),
-        T.StructField("softmax_score", T.DoubleType(), True),
-    ]
-)
-
-TRIPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("subj_start", T.IntegerType(), False),
-        T.StructField("subj_end", T.IntegerType(), False),
-        T.StructField("subj_surface", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj_start", T.IntegerType(), False),
-        T.StructField("obj_end", T.IntegerType(), False),
-        T.StructField("obj_surface", T.StringType(), False),
-        T.StructField("raw_score", T.DoubleType(), True),
-        T.StructField("softmax_score", T.DoubleType(), True),
-    ]
-)
-
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("trigger_ix", T.IntegerType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField(
-            "args",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                        T.StructField("role", T.StringType(), False),
-                    ]
-                )
-            ),
-            False,
-        ),
-    ]
-)
-
-CLUSTER_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("cluster_id", T.LongType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-CANONICAL_TRIPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("subj_canonical", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj_canonical", T.StringType(), False),
-        T.StructField("n_support", T.LongType(), False),
-    ]
-)
-
-# ---- metrics row (reference emits per-namespace P/R/F1, f1.py:6-17) ----
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("dataset", T.StringType(), False),
-        T.StructField("task", T.StringType(), False),
-        T.StructField("n_pred", T.LongType(), False),
-        T.StructField("n_gold", T.LongType(), False),
-        T.StructField("n_matched", T.LongType(), False),
-        T.StructField("precision", T.DoubleType(), False),
-        T.StructField("recall", T.DoubleType(), False),
-        T.StructField("f1", T.DoubleType(), False),
-    ]
-)
-
-# ---- checkpoint / lineage row (north star: per-partition resume) ----
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_key", T.LongType(), False),
-        T.StructField("n_conversations", T.LongType(), False),
-        T.StructField("n_turns", T.LongType(), False),
-        T.StructField("n_rows_out", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("input_fingerprint", T.LongType(), False),
     ]
 )

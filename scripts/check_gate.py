@@ -2,11 +2,12 @@
 """Driver-gate simulation: run every registry query on Spark AND its DuckDB
 oracle at the given sf dir (default sf0.01, the driver's correctness
 scale); compare row count, sorted-column value multiset. Prints one line
-per query + a summary. Used before each round lands."""
+per query + a summary. A gated query that passes with 0 rows on both
+engines compared nothing, so it also prints an EMPTY line and counts
+toward ``empty`` in the summary."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
@@ -29,7 +30,7 @@ def main() -> int:
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = n_rows_only = n_empty = 0
     # Types the driver's type-aware value hash treats as portable between
     # Spark and DuckDB.  Anything else (HUGEINT from SUM(int), INT32, DECIMAL)
     # hash-mismatches even when the values are equal — flag it locally.
@@ -68,13 +69,17 @@ def main() -> int:
             n_fail += not ok
             status = "PASS" if ok else "FAIL"
             print(f"{status} {name}: {len(a)} rows ({time.perf_counter()-t0:.1f}s)")
+            if ok and not a:
+                n_empty += 1
+                print(f"EMPTY {name}")
             if not ok:
-                diff = [x for x in a[:5] if x not in b[:5]]
                 print("   spark sample:", a[:2], "\n   oracle sample:", b[:2])
         except Exception as exc:  # noqa: BLE001
             n_fail += 1
             print(f"ERROR {name}: {type(exc).__name__}: {str(exc)[:150]}")
-    print(f"\nSUMMARY pass={n_pass} fail={n_fail} rows_only={n_rows_only}")
+    print(
+        f"\nSUMMARY pass={n_pass} fail={n_fail} rows_only={n_rows_only} empty={n_empty}"
+    )
     spark.stop()
     return 1 if n_fail else 0
 

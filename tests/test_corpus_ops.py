@@ -51,7 +51,7 @@ def test_lsh_candidates_superset_of_high_jaccard(spark, docs):
     """Any pair with Jaccard ≥ 0.75 must be an LSH candidate with
     overwhelming probability (8 bands × 2 rows: P(miss) = (1-j²)⁸ ≈ 0.1%
     at j=0.75); verified exhaustively on this corpus."""
-    sh = dedup.shingle_hashes(docs)
+    sh = dedup.shingle_profiles(docs).select("doc_id", F.explode("shashes").alias("shash"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shash")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shash")
     inter = (
@@ -65,7 +65,7 @@ def test_lsh_candidates_superset_of_high_jaccard(spark, docs):
         .where("n_inter * 4 >= (na + nb - n_inter) * 3")
     )
     high = {(r["doc_a"], r["doc_b"]) for r in j.collect()}
-    cands = {(r["doc_a"], r["doc_b"]) for r in dedup.lsh_candidate_pairs(sh).collect()}
+    cands = {(r["doc_a"], r["doc_b"]) for r in dedup.lsh_candidate_pairs(docs).collect()}
     missed = high - cands
     assert len(missed) <= 1, f"LSH missed {missed}"
 
@@ -158,29 +158,15 @@ def test_frame_sample_fanout(spark, docs):
 def test_lsh_bucket_stats_accounts_for_cap(spark, docs):
     """Stats row is consistent: dropped buckets are exactly the >cap ones,
     and with the cap at max_bucket_size nothing drops."""
-    sh = dedup.shingle_hashes(docs)
-    row = dedup.lsh_bucket_stats(sh, max_bucket=64).head()
+    row = dedup.lsh_bucket_stats(docs, max_bucket=64).head()
     assert row["n_buckets"] > 0
     assert 0 <= row["n_dropped_buckets"] <= row["n_buckets"]
     # lowering the cap below max_bucket_size must drop at least one bucket
-    tight = dedup.lsh_bucket_stats(sh, max_bucket=row["max_bucket_size"] - 1).head()
+    tight = dedup.lsh_bucket_stats(docs, max_bucket=row["max_bucket_size"] - 1).head()
     assert tight["n_dropped_buckets"] >= 1
     # raising it to the max drops nothing
-    loose = dedup.lsh_bucket_stats(sh, max_bucket=row["max_bucket_size"]).head()
+    loose = dedup.lsh_bucket_stats(docs, max_bucket=row["max_bucket_size"]).head()
     assert loose["n_dropped_buckets"] == 0 and loose["n_dropped_rows"] == 0
-
-
-def test_minhash_perm_sql_matches_column_path(spark):
-    """The dialect-neutral permutation helper (functions.hashing) must agree
-    with the column-expression path used by dedup.minhash_signatures."""
-    from dygiepp_spark.functions.hashing import MINHASH_PERMS, PERM_MOD, minhash_perm_sql
-
-    df = spark.range(5).selectExpr("id * 12345 + 7 as h")
-    for i in (0, 3, 15):
-        got = [r[0] for r in df.selectExpr(minhash_perm_sql("h", i)).collect()]
-        a, b = MINHASH_PERMS[i]
-        want = [(a * (x * 12345 + 7) + b) % PERM_MOD for x in range(5)]
-        assert got == want
 
 
 def test_quantized_cosine_agrees_with_float_path(spark, emb):
@@ -350,9 +336,9 @@ def test_multimodal_decode_check_unicode_cross_engine(spark):
 def test_local_quantize_is_float32_like_the_engines(spark, tmp_path):
     """1.504f·1000 is 1503.99994… in float64 but rounds to 1504.0 in
     float32, the precision of FLOAT * INT in the DuckDB oracle. Both the
-    JVM `quantize` and the numpy kernel of `dot_topk_local` must floor the
+    JVM `quantize` and the numpy kernel of `dot_topk` must floor the
     float32 product too: on vectors made of such components the kernel
-    leaf, its JVM twin and both leaves' DuckDB oracles agree row for row."""
+    leaf and both leaves' DuckDB oracles agree row for row."""
     import duckdb
     import numpy as np
     import pandas as pd
@@ -383,9 +369,6 @@ def test_local_quantize_is_float32_like_the_engines(spark, tmp_path):
     emb = load_table(spark, "embeddings", str(sf))
     jvm = {tuple(r["q"]) for r in similarity.quantize(emb).collect()}
     assert jvm == {tuple(q) for q in similarity._quantize_local(vecs).tolist()}
-    assert sorted(similarity.dot_topk_local(emb).collect()) == sorted(
-        similarity.dot_topk(emb).collect()
-    )
     con = duckdb.connect()
     con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
     for leaf in ("embedding_dot_topk", "embedding_near_dup"):

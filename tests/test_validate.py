@@ -94,3 +94,44 @@ def test_global_cc_equals_grouped(spark, tiny_turns):
     )
     with cache.scoped():  # releases the global path's mention persist
         assert key(grouped) == key(coref.clusters_via_components(tiny_turns, global_cc=True))
+
+
+def test_validation_report_leaf_matches_oracle_on_planted_violations(spark, tmp_path):
+    """The testdata corpus satisfies the input contract, so on it both
+    engines return 0 rows for the `validation_report` leaf and the oracle
+    gate compares two empty results. Plant one violation of each kind in a
+    copy of the sf0.001 documents (which derive the turns table) and
+    require the leaf and its DuckDB oracle to agree row for row."""
+    import shutil
+
+    import duckdb
+    import pandas as pd
+
+    from conftest import SF_DIR, rows_match
+    from dygiepp_spark.registry import QUERIES
+    from dygiepp_spark.tables import TABLE_NAMES
+
+    for t in TABLE_NAMES:
+        if t != "documents":
+            shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    text = docs.set_index("doc_id")["text"]
+    docs.loc[docs["doc_id"] == 9, "text"] = None
+    docs.loc[docs["doc_id"] == 10, "text"] = ""
+    docs.loc[docs["doc_id"] == 17, "text"] = text[17].replace(" ", "  ", 1)
+    docs.loc[docs["doc_id"] == 18, "text"] = " " + text[18]
+    # an exact copy (same doc_id and text), so sort ties cannot change rows
+    docs = pd.concat([docs, docs[docs["doc_id"] == 25]], ignore_index=True)
+    docs = docs[docs["doc_id"] != 34]  # conv 4 loses turn 2: a gap
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    spec = QUERIES["validation_report"]
+    with cache.scoped():
+        got = spec.build(spark, str(tmp_path))
+        assert rows_match(got, con.sql(spec.sql))
+        violations = {r["violation"] for r in got.collect()}
+    con.close()
+    assert {"empty_text", "empty_token", "duplicate_turn", "non_dense_turn_idx"} <= violations

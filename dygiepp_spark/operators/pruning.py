@@ -156,24 +156,10 @@ def antecedent_pairs(pruned_spans: DataFrame, max_antecedents: int = 100) -> Dat
     )
 
 
-def distance_bucket_expr(o) -> F.Column:
-    """Column-input variant of distance_bucket."""
-    return (
-        F.when(o <= 4, o)
-        .when(o <= 7, F.lit(5))
-        .when(o <= 15, F.lit(6))
-        .when(o <= 31, F.lit(7))
-        .when(o <= 63, F.lit(8))
-        .otherwise(F.lit(9))
-        .cast("int")
-    )
-
-
-def distance_bucket(offset_col: str = "offset") -> F.Column:
+def distance_bucket(o: F.Column) -> F.Column:
     """Reference's 10-bucket log distance embedding index
     (util.bucket_values semantics: [1,2,3,4,5-7,8-15,16-31,32-63,64+] style).
     """
-    o = F.col(offset_col)
     return (
         F.when(o <= 4, o)
         .when(o <= 7, F.lit(5))

@@ -548,7 +548,7 @@ def distance_bucket_hist(spark, sf_dir):
     )
     pairs = pruning.antecedent_pairs(pruned, CFG.max_antecedents)
     return _longs(
-        pairs.withColumn("bucket", pruning.distance_bucket("offset"))
+        pairs.withColumn("bucket", pruning.distance_bucket(F.col("offset")))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1335,7 +1335,7 @@ def pair_features(spark, sf_dir):
             dist.cast("int").alias("distance"),
             (F.col("arg_end") < F.col("trigger_ix")).alias("arg_before"),
             inside.alias("trig_inside_arg"),
-            pruning.distance_bucket_expr(dist).alias("distance_bucket"),
+            pruning.distance_bucket(dist).alias("distance_bucket"),
         )
     )
 

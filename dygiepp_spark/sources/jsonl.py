@@ -183,163 +183,30 @@ def annotations_to_doc_json(
     gold_*_from_docs parsers, so write→read round-trips (pinned by the
     events_jsonl_roundtrip gated query). Mixed-type entries are assembled
     as JSON text, all JVM-side."""
-    from pyspark import StorageLevel
-
-    from dygiepp_spark.operators.assembly import with_sentence_starts
-    from dygiepp_spark.plans import cache
-
-    # same fan-out as predictions_to_doc_json: one offset table, many
-    # annotation-family joins — persist (tracked) for one turns scan
-    base = cache.track(
-        with_sentence_starts(turns)
-        .select("conv_id", "turn_idx", "text", "sentence_start")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    offs = base.select("conv_id", "turn_idx", "sentence_start")
-    df = base
-    parts: list[tuple[str, str]] = []
-
+    base, offs = _offset_base(turns)
+    label = [_jq(F.col("label"))]
+    families = []
     if ner is not None:
-        m = ner.join(offs, on=["conv_id", "turn_idx"])
-        ds = F.col("start") + F.col("sentence_start")
-        de = F.col("end") + F.col("sentence_start")
-        ent = m.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                ds.cast("int").alias("k1"),
-                de.cast("int").alias("k2"),
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(
-                        ",", ds.cast("string"), de.cast("string"), _jq(F.col("label"))
-                    ),
-                    F.lit("]"),
-                ).alias("j"),
-            ).alias("s"),
-        )
-        df = df.join(_entry_list(ent, "gner"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("ner", "gner"))
-
+        families.append(("ner", _span_entries(ner, offs, _MENTION_SPAN, label)))
     if relations is not None:
-        r = relations.join(offs, on=["conv_id", "turn_idx"])
-        cols = [
-            (F.col(c) + F.col("sentence_start")).cast("int")
-            for c in ("subj_start", "subj_end", "obj_start", "obj_end")
-        ]
-        ent = r.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                *[c.alias(f"k{i}") for i, c in enumerate(cols, 1)],
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(
-                        ",", *[c.cast("string") for c in cols], _jq(F.col("label"))
-                    ),
-                    F.lit("]"),
-                ).alias("j"),
-            ).alias("s"),
+        families.append(
+            ("relations", _span_entries(relations, offs, _RELATION_SPAN, label))
         )
-        df = df.join(_entry_list(ent, "grel"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("relations", "grel"))
-
     if events is not None:
         # rows: (conv_id, turn_idx, trigger_ix, event_type,
         #        arg_start, arg_end, role) — null args = trigger-only event
-        e = events.join(offs, on=["conv_id", "turn_idx"])
-        dt = F.col("trigger_ix") + F.col("sentence_start")
-        das = F.col("arg_start") + F.col("sentence_start")
-        dae = F.col("arg_end") + F.col("sentence_start")
-        arg_j = F.when(
-            F.col("arg_start").isNotNull(),
-            F.struct(
-                das.cast("int").alias("k1"),
-                dae.cast("int").alias("k2"),
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(
-                        ",", das.cast("string"), dae.cast("string"), _jq(F.col("role"))
-                    ),
-                    F.lit("]"),
-                ).alias("j"),
-            ),
-        )
-        per_trig = (
-            e.withColumn("_aj", arg_j)
-            .groupBy(
-                "conv_id", "turn_idx", F.col("trigger_ix"), dt.alias("_dt"),
-                F.col("event_type"),
-            )
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.sort_array(F.array_compact(F.collect_list("_aj"))),
-                        lambda x: x["j"],
-                    ),
-                    ",",
-                ).alias("args_j")
+        triggers = events.select(*_EVENT_KEY).distinct()
+        arguments = events.where(F.col("arg_start").isNotNull())
+        families.append(
+            (
+                "events",
+                _event_entries(
+                    triggers, arguments, offs,
+                    [_jq(F.col("event_type"))], [_jq(F.col("role"))],
+                ),
             )
         )
-        ent = per_trig.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                F.col("trigger_ix").cast("int").alias("k1"),
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(
-                        ",",
-                        F.concat(
-                            F.lit("["),
-                            F.col("_dt").cast("string"),
-                            F.lit(","),
-                            _jq(F.col("event_type")),
-                            F.lit("]"),
-                        ),
-                        F.when(F.col("args_j") != "", F.col("args_j")),
-                    ),
-                    F.lit("]"),
-                ).alias("j"),
-            ).alias("s"),
-        )
-        df = df.join(_entry_list(ent, "gev"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("events", "gev"))
-
-    packed = df.groupBy("conv_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "turn_idx",
-                    F.split("text", " ").alias("tokens"),
-                    *[F.coalesce(F.col(c), F.lit("[]")).alias(c) for _, c in parts],
-                )
-            )
-        ).alias("_t")
-    )
-    if clusters is not None:
-        packed = packed.join(
-            _nested_clusters(clusters, offs, "gclusters"), on="conv_id", how="left"
-        )
-
-    head_fields = [
-        F.col("conv_id").alias("doc_key"),
-        F.lit(dataset).alias("dataset"),
-        F.expr("transform(_t, x -> x.tokens)").alias("sentences"),
-    ]
-    if clusters is not None:
-        head_fields.append(
-            F.coalesce(F.col("gclusters"), F.array().cast("array<array<array<long>>>"))
-            .alias("clusters")
-        )
-    head = F.to_json(F.struct(*head_fields))
-    pieces = [F.substring(head, 1, F.length(head) - F.lit(1))]
-    for field, col in parts:
-        pieces.append(F.lit(f',"{field}":['))
-        pieces.append(F.array_join(F.expr(f"transform(_t, x -> x.{col})"), ","))
-        pieces.append(F.lit("]"))
-    pieces.append(F.lit("}"))
-    return packed.select(F.concat(*pieces).alias("json"), F.col("conv_id"))
+    return _assemble(base, offs, families, dataset, clusters, "clusters")
 
 
 def _nested_clusters(clusters: DataFrame, offs: DataFrame, out_col: str) -> DataFrame:
@@ -494,19 +361,145 @@ def _score(c):
     return F.round(c, 4).cast("string")
 
 
-def _entry_list(entries: DataFrame, name: str) -> DataFrame:
-    """(conv_id, turn_idx, s:struct<sort keys..., j:string>) rows →
-    (conv_id, turn_idx, <name>: '[e1,e2,...]') with entries sorted by the
-    struct's leading fields (numeric span order, not lexicographic)."""
-    return entries.groupBy("conv_id", "turn_idx").agg(
-        F.concat(
-            F.lit("["),
-            F.array_join(
-                F.transform(F.sort_array(F.collect_list("s")), lambda x: x["j"]), ","
-            ),
-            F.lit("]"),
-        ).alias(name)
+_MENTION_SPAN = ("start", "end")
+_RELATION_SPAN = ("subj_start", "subj_end", "obj_start", "obj_end")
+_EVENT_KEY = ("conv_id", "turn_idx", "trigger_ix", "event_type")
+_TURN_KEY = ("conv_id", "turn_idx")
+
+
+def _offset_base(turns: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(base, offs): the turns with their doc-level ``sentence_start``, and
+    its (conv_id, turn_idx, sentence_start) projection. The offset table
+    joins against every annotation family plus the final per-doc pack —
+    unpersisted, each branch replays the turns scan + the sentence-start
+    window (tracked; release after consuming the output)."""
+    from pyspark import StorageLevel
+
+    from dygiepp_spark.operators.assembly import with_sentence_starts
+    from dygiepp_spark.plans import cache
+
+    base = cache.track(
+        with_sentence_starts(turns)
+        .select("conv_id", "turn_idx", "text", "sentence_start")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    return base, base.select("conv_id", "turn_idx", "sentence_start")
+
+
+def _span_entries(rows, offs, spans, tail, keys=_TURN_KEY) -> DataFrame:
+    """Turn-relative rows → (*keys, s:struct<k1..kn, j>): the ``spans``
+    columns shifted to doc level are the int sort keys k1..kn, and ``j`` is
+    the JSON entry '[ints..., tail...]' (``tail`` is JSON-text columns)."""
+    ints = [F.col(c) + F.col("sentence_start") for c in spans]
+    return rows.join(offs, on=list(_TURN_KEY)).select(
+        *keys,
+        F.struct(
+            *[c.cast("int").alias(f"k{i}") for i, c in enumerate(ints, 1)],
+            _json_list(*[c.cast("string") for c in ints], *tail).alias("j"),
+        ).alias("s"),
+    )
+
+
+def _event_entries(triggers, arguments, offs, trigger_tail, argument_tail) -> DataFrame:
+    """One entry per (trigger, event type): [[trig_tok, "TYPE", ...],
+    [a_start, a_end, ...], ...] with the arguments in span order. Arguments
+    attach on (conv_id, turn_idx, trigger_ix, event_type); ``arguments=None``
+    emits trigger-only events."""
+    ev = _span_entries(triggers, offs, ["trigger_ix"], trigger_tail, _EVENT_KEY)
+    args = F.lit(None).cast("string")
+    if arguments is not None:
+        a = _span_entries(
+            arguments, offs, ["arg_start", "arg_end"], argument_tail, _EVENT_KEY
+        )
+        a = a.groupBy(*_EVENT_KEY).agg(_sorted_entries("s").alias("_args"))
+        ev = ev.join(a, on=list(_EVENT_KEY), how="left")
+        args = F.col("_args")
+    return ev.select(
+        *_TURN_KEY,
+        F.struct("s.k1", _json_list(F.col("s.j"), args).alias("j")).alias("s"),
+    )
+
+
+def _json_list(*items):
+    """'[a,b,...]' from JSON-text columns; NULL items are skipped."""
+    return F.concat(F.lit("["), F.concat_ws(",", *items), F.lit("]"))
+
+
+def _sorted_entries(col: str):
+    """Aggregate: the entries' ``j`` texts in struct order (numeric span
+    order, not lexicographic), comma-joined."""
+    return F.array_join(
+        F.transform(F.sort_array(F.collect_list(col)), lambda x: x["j"]), ","
+    )
+
+
+def _assemble(base, offs, families, dataset, clusters, clusters_field, docs_meta=None):
+    """Per-document JSON lines (columns json, conv_id) in the reference's
+    field order: the head {doc_key, dataset, sentences[, clusters_field]},
+    then one per-sentence list per family (field, (conv_id, turn_idx, s)
+    entries), then ``weight`` and the `_` metadata of ``docs_meta``.
+
+    The head is ``to_json`` of a struct; the families and metadata are
+    spliced in as text because their mixed-type entries have no Spark
+    array type."""
+    df = base
+    cols = [f"_f{i}" for i in range(len(families))]
+    for (_, ent), c in zip(families, cols):
+        per_turn = ent.groupBy(*_TURN_KEY).agg(
+            _json_list(_sorted_entries("s")).alias(c)
+        )
+        df = df.join(per_turn, on=list(_TURN_KEY), how="left")
+    packed = df.groupBy("conv_id").agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    "turn_idx",
+                    F.split("text", " ").alias("tokens"),
+                    *[F.coalesce(F.col(c), F.lit("[]")).alias(c) for c in cols],
+                )
+            )
+        ).alias("_t")
+    )
+    head_fields = [
+        F.col("conv_id").alias("doc_key"),
+        F.lit(dataset).alias("dataset"),
+        F.expr("transform(_t, x -> x.tokens)").alias("sentences"),
+    ]
+    if clusters is not None:
+        packed = packed.join(
+            _nested_clusters(clusters, offs, "_clusters"), on="conv_id", how="left"
+        )
+        # a doc with no clusters still carries the key (empty list),
+        # matching the reference's always-present predicted_clusters when
+        # the coref head runs (dygie.py:311-317)
+        head_fields.append(
+            F.coalesce(F.col("_clusters"), F.array().cast("array<array<array<long>>>"))
+            .alias(clusters_field)
+        )
+    head = F.to_json(F.struct(*head_fields))
+    pieces = [F.substring(head, 1, F.length(head) - F.lit(1))]
+    for (field, _), c in zip(families, cols):
+        pieces.append(F.lit(f',"{field}":['))
+        pieces.append(F.array_join(F.expr(f"transform(_t, x -> x.{c})"), ","))
+        pieces.append(F.lit("]"))
+    if docs_meta is not None:
+        meta_cols = [c for c in ("weight", "_meta") if c in docs_meta.columns]
+        packed = packed.join(
+            docs_meta.select(F.col("doc_key").alias("conv_id"), *meta_cols),
+            on="conv_id",
+            how="left",
+        )
+        if "weight" in meta_cols:
+            pieces.append(
+                F.when(
+                    F.col("weight").isNotNull(),
+                    F.concat(F.lit(',"weight":'), F.col("weight").cast("string")),
+                ).otherwise(F.lit(""))
+            )
+        if "_meta" in meta_cols:
+            pieces.append(_splice_meta(F.col("_meta")))
+    pieces.append(F.lit("}"))
+    return packed.select(F.concat(*pieces).alias("json"), F.col("conv_id"))
 
 
 def _splice_meta(meta_map):
@@ -571,227 +564,47 @@ def predictions_to_doc_json(
 
     Mixed-type JSON arrays can't be a single Spark array type, so entries
     are assembled as JSON text — still all JVM-side column expressions."""
-    from pyspark import StorageLevel
-
     from dygiepp_spark.functions import scoring
-    from dygiepp_spark.operators.assembly import with_sentence_starts
-    from dygiepp_spark.plans import cache
 
-    # the offset table joins against EVERY prediction family plus the final
-    # per-doc pack — unpersisted, each branch replays the turns scan + the
-    # sentence-start window (tracked; release after consuming the output)
-    base = cache.track(
-        with_sentence_starts(turns)
-        .select("conv_id", "turn_idx", "text", "sentence_start")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    offs = base.select("conv_id", "turn_idx", "sentence_start")
-    df = base
-    parts: list[str] = []  # (json field name, per-turn column) in emit order
-
+    base, offs = _offset_base(turns)
+    scores = [_score(F.col("raw_score")), _score(F.col("softmax_score"))]
+    families = []
     if mentions is not None:
-        m = mentions.join(offs, on=["conv_id", "turn_idx"])
-        ds, de = F.col("start") + F.col("sentence_start"), F.col("end") + F.col(
-            "sentence_start"
+        tail = [_jq(F.col("label")), *scores]
+        families.append(
+            ("predicted_ner", _span_entries(mentions, offs, _MENTION_SPAN, tail))
         )
-        ent = m.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                ds.cast("int").alias("k1"),
-                de.cast("int").alias("k2"),
-                F.concat_ws(
-                    ",",
-                    ds.cast("string"),
-                    de.cast("string"),
-                    _jq(F.col("label")),
-                    _score(F.col("raw_score")),
-                    _score(F.col("softmax_score")),
-                ).alias("j"),
-            ).alias("s"),
-        ).withColumn("s", F.struct("s.k1", "s.k2", F.concat(F.lit("["), F.col("s.j"), F.lit("]")).alias("j")))
-        df = df.join(_entry_list(ent, "pner"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("predicted_ner", "pner"))
-
     if triples is not None:
-        t = triples.join(offs, on=["conv_id", "turn_idx"])
-        s1 = F.col("subj_start") + F.col("sentence_start")
-        e1 = F.col("subj_end") + F.col("sentence_start")
-        s2 = F.col("obj_start") + F.col("sentence_start")
-        e2 = F.col("obj_end") + F.col("sentence_start")
-        ent = t.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                s1.cast("int").alias("k1"),
-                e1.cast("int").alias("k2"),
-                s2.cast("int").alias("k3"),
-                e2.cast("int").alias("k4"),
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(
-                        ",",
-                        s1.cast("string"),
-                        e1.cast("string"),
-                        s2.cast("string"),
-                        e2.cast("string"),
-                        _jq(F.col("pred")),
-                        _score(F.col("raw_score")),
-                        _score(F.col("softmax_score")),
-                    ),
-                    F.lit("]"),
-                ).alias("j"),
-            ).alias("s"),
+        tail = [_jq(F.col("pred")), *scores]
+        families.append(
+            ("predicted_relations", _span_entries(triples, offs, _RELATION_SPAN, tail))
         )
-        df = df.join(_entry_list(ent, "prel"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("predicted_relations", "prel"))
-
     if triggers is not None:
-        trig = triggers.join(offs, on=["conv_id", "turn_idx"])
-        dt = F.col("trigger_ix") + F.col("sentence_start")
-        trig = trig.select(
-            "conv_id",
-            "turn_idx",
-            F.col("trigger_ix"),
-            F.concat(
-                F.lit("["),
-                F.concat_ws(
-                    ",",
-                    dt.cast("string"),
-                    _jq(F.col("event_type")),
-                    _score(F.col("raw_score")),
-                    _score(F.col("softmax_score")),
+        surface = F.col("arg_surface")
+        arg_tail = [
+            _jq(F.col("role")),
+            _score(scoring.raw_score_col(surface, F.lit(1))),
+            _score(scoring.softmax_score_col(surface, F.lit(1))),
+        ]
+        families.append(
+            (
+                "predicted_events",
+                _event_entries(
+                    triggers, arguments, offs, [_jq(F.col("event_type")), *scores],
+                    arg_tail,
                 ),
-                F.lit("]"),
-            ).alias("trig_j"),
+            )
         )
-        if arguments is not None:
-            a = arguments.join(offs, on=["conv_id", "turn_idx"])
-            das = F.col("arg_start") + F.col("sentence_start")
-            dae = F.col("arg_end") + F.col("sentence_start")
-            a = a.select(
-                "conv_id",
-                "turn_idx",
-                "trigger_ix",
-                F.struct(
-                    F.col("arg_start").cast("int").alias("k1"),
-                    F.col("arg_end").cast("int").alias("k2"),
-                    F.concat(
-                        F.lit("["),
-                        F.concat_ws(
-                            ",",
-                            das.cast("string"),
-                            dae.cast("string"),
-                            _jq(F.col("role")),
-                            _score(scoring.raw_score_col(F.col("arg_surface"), F.lit(1))),
-                            _score(
-                                scoring.softmax_score_col(F.col("arg_surface"), F.lit(1))
-                            ),
-                        ),
-                        F.lit("]"),
-                    ).alias("j"),
-                ).alias("s"),
-            )
-            args_per_trig = a.groupBy("conv_id", "turn_idx", "trigger_ix").agg(
-                F.array_join(
-                    F.transform(F.sort_array(F.collect_list("s")), lambda x: x["j"]),
-                    ",",
-                ).alias("args_j")
-            )
-            trig = trig.join(
-                args_per_trig, on=["conv_id", "turn_idx", "trigger_ix"], how="left"
-            )
-        else:
-            trig = trig.withColumn("args_j", F.lit(None).cast("string"))
-        ent = trig.select(
-            "conv_id",
-            "turn_idx",
-            F.struct(
-                F.col("trigger_ix").cast("int").alias("k1"),
-                F.concat(
-                    F.lit("["),
-                    F.concat_ws(",", F.col("trig_j"), F.col("args_j")),
-                    F.lit("]"),
-                ).alias("j"),
-            ).alias("s"),
-        )
-        df = df.join(_entry_list(ent, "pev"), on=["conv_id", "turn_idx"], how="left")
-        parts.append(("predicted_events", "pev"))
-
-    packed = df.groupBy("conv_id").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "turn_idx",
-                    F.split("text", " ").alias("tokens"),
-                    *[F.coalesce(F.col(c), F.lit("[]")).alias(c) for _, c in parts],
-                )
-            )
-        ).alias("_t")
+    return _assemble(
+        base, offs, families, dataset, clusters, "predicted_clusters", docs_meta
     )
-    if docs_meta is not None:
-        packed = packed.join(
-            docs_meta.select(
-                F.col("doc_key").alias("conv_id"),
-                *(["weight"] if "weight" in docs_meta.columns else []),
-                *(["_meta"] if "_meta" in docs_meta.columns else []),
-            ),
-            on="conv_id",
-            how="left",
-        )
-    if clusters is not None:
-        packed = packed.join(
-            _nested_clusters(clusters, offs, "pclusters"), on="conv_id", how="left"
-        )
-    head_fields = [
-        F.col("conv_id").alias("doc_key"),
-        F.lit(dataset).alias("dataset"),
-        F.expr("transform(_t, x -> x.tokens)").alias("sentences"),
-    ]
-    if clusters is not None:
-        # a doc with no predicted clusters still carries the key (empty
-        # list), matching the reference's always-present predicted_clusters
-        # when the coref head runs (dygie.py:311-317)
-        head_fields.append(
-            F.coalesce(F.col("pclusters"), F.array().cast("array<array<array<long>>>"))
-            .alias("predicted_clusters")
-        )
-    head = F.to_json(F.struct(*head_fields))
-    pieces = [F.substring(head, 1, F.length(head) - F.lit(1))]
-    for field, col in parts:
-        pieces.append(F.lit(f',"{field}":['))
-        pieces.append(F.array_join(F.expr(f"transform(_t, x -> x.{col})"), ","))
-        pieces.append(F.lit("]"))
-    if docs_meta is not None and "weight" in docs_meta.columns:
-        pieces.append(
-            F.when(
-                F.col("weight").isNotNull(),
-                F.concat(F.lit(',"weight":'), F.col("weight").cast("string")),
-            ).otherwise(F.lit(""))
-        )
-    if docs_meta is not None and "_meta" in docs_meta.columns:
-        pieces.append(_splice_meta(F.col("_meta")))
-    pieces.append(F.lit("}"))
-    return packed.select(F.concat(*pieces).alias("json"), F.col("conv_id"))
 
 
 def gold_ner_from_docs(docs: DataFrame) -> DataFrame:
     """Explode reference-format gold NER ([doc-level start, end, label] per
     sentence, doc/data.md:35-43) into engine mention rows with turn-relative
     offsets (uses the sentence-offset cumsum, B1)."""
-    sent = docs.select(
-        "doc_key",
-        F.posexplode("sentences").alias("sent_ix", "tokens"),
-    ).withColumn("n_tokens", F.size("tokens"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_key").orderBy("sent_ix").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = sent.withColumn(
-        "sentence_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    ).select("doc_key", "sent_ix", "sentence_start")
-
+    offs = _sentence_offsets(docs)
     ner = docs.select(
         "doc_key", F.posexplode("ner").alias("sent_ix", "sent_ner")
     ).select("doc_key", "sent_ix", F.explode("sent_ner").alias("m"))

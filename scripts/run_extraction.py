@@ -37,8 +37,7 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
 
     from dygiepp_spark.session import get_spark
     from dygiepp_spark.plans import checkpoint as cp
-    from dygiepp_spark.plans.pipeline import extract_all
-    from dygiepp_spark.operators import canonicalize
+    from dygiepp_spark.operators import canonicalize, coref, extract
     from dygiepp_spark.sources import sinks
     from dygiepp_spark.tables import read_turns
 
@@ -58,28 +57,27 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         stage="triples", n_partitions=args.n_partitions,
     )
 
-    # downstream tables from the committed triples
+    # downstream tables from the committed triples; mentions and clusters
+    # come from the per-head kernels, where a NULL text decodes to nothing
     triples = cp.read_stage(spark, args.out, "triples").drop("partition_key")
-    result = extract_all(turns)
-    sinks.write_mentions(result.mentions, f"{args.out}/data/mentions")
+    mentions = extract.ner_mentions(turns)
+    clusters = coref.clusters_via_components(turns)
+    sinks.write_mentions(mentions, f"{args.out}/data/mentions")
     canonical = canonicalize.canonicalize_with_coref(
-        triples, result.clusters, canonicalize.alias_dict(spark)
+        triples, clusters, canonicalize.alias_dict(spark)
     )
     sinks.write_canonical_triples(canonical, f"{args.out}/data/canonical")
 
     if args.jsonl:
-        from dygiepp_spark.config import PipelineConfig
-        from dygiepp_spark.operators import extract
         from dygiepp_spark.sources.jsonl import predictions_to_doc_json
 
-        cfg = PipelineConfig()
         json_docs = predictions_to_doc_json(
             turns,
-            mentions=result.mentions,
-            triples=result.triples,
+            mentions=mentions,
+            triples=triples,
             triggers=extract.event_triggers(turns),
-            arguments=extract.event_arguments(turns, cfg),
-            clusters=result.clusters,
+            arguments=extract.event_arguments(turns),
+            clusters=clusters,
         )
         sinks.write_predictions_jsonl(
             json_docs, f"{args.out}/data/predictions_jsonl"

@@ -2,11 +2,10 @@
 
 These implement the decode semantics of the reference's four task heads
 (reference: ner.py:125-150, relation.py:149-180, events.py:341-400,
-coref.py:332-459). The NER, relation and event-argument heads are
+coref.py:332-459). The NER, relation, trigger and event-argument heads are
 ``mapInPandas`` row loops over the one per-turn decode in
 ``inference.model`` — the same functions the Arrow inference UDF runs —
 so only (conv_id, turn_idx, text) crosses the Python boundary inward.
-The trigger head is a JVM column expression over the token view.
 
 All outputs carry (raw_score, softmax_score) per prediction, mirroring the
 reference's predicted_* format (doc/data.md:108-116). Scores are dyadic
@@ -22,10 +21,7 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dygiepp_spark.config import PipelineConfig
-from dygiepp_spark.functions import scoring
-from dygiepp_spark.functions.lexicons import PREDICATES
 from dygiepp_spark.inference import model
-from dygiepp_spark.tables import tokens_view
 
 
 def _per_turn(
@@ -62,11 +58,6 @@ def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataF
         "surface string, raw_score double, softmax_score double",
         lambda toks: model.mentions(toks, include_modifier_spans),
     )
-
-
-def predicate_tokens(turns: DataFrame) -> DataFrame:
-    """Trigger/predicate token occurrences."""
-    return tokens_view(turns).where(F.col("token").isin(list(PREDICATES)))
 
 
 def relation_triples(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -109,17 +100,15 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
 
 
 def event_triggers(turns: DataFrame) -> DataFrame:
-    """E5 — decoded triggers: single-token, typed by the lexicon
-    (reference events.py:341-357; triggers are single tokens per
-    doc/data.md:64-78)."""
-    preds = predicate_tokens(turns)
-    return preds.select(
-        "conv_id",
-        "turn_idx",
-        F.col("pos").cast("int").alias("trigger_ix"),
-        F.upper(F.col("token")).alias("event_type"),
-        scoring.raw_score_col(F.col("token"), F.lit(1)).alias("raw_score"),
-        scoring.softmax_score_col(F.col("token"), F.lit(1)).alias("softmax_score"),
+    """E5 — decoded triggers (``model.events``): single-token, typed by
+    the lexicon (reference events.py:341-357; triggers are single tokens
+    per doc/data.md:64-78)."""
+    return _per_turn(
+        turns,
+        "conv_id string, turn_idx int, trigger_ix int, event_type string, "
+        "raw_score double, softmax_score double",
+        # a 0-token argument window: the trigger list alone
+        lambda toks: model.events(toks, 0)[0],
     )
 
 

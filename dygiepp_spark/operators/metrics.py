@@ -9,11 +9,74 @@ criterion (relation_metrics.py:19-27, README.md:419-424), triggers offset
 
 All metrics are single-pass groupBy aggregations with map-side combine; the
 pred↔gold joins run under AQE with skew splitting.
+
+The coreference family (MUC, B³, mention P/R, CEAFφ4 and its star twin,
+the CoNLL averages) is scored like the reference's one scorer, which
+updates every metric from the same predicted and gold clusters
+(dygie/models/coref.py:461-469): each function opens one persisted
+cluster-overlap table, ``_overlap``, built on the one pred↔gold mention
+join, ``_intersections``, and reads its rows from it. Two P/R/F1
+conventions exist, each written once: the counting metrics take F1 from
+the unrounded P and R (``_prf``), the coref rows from the 4-decimal P and
+R (``_coref_prf``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Iterator
+from contextlib import contextmanager
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def _div(num: Column, den: Column) -> Column:
+    """Zero-safe division: 0.0 where the denominator is not positive."""
+    return F.when(den > 0, num / den).otherwise(F.lit(0.0))
+
+
+def _prf(prec: Column, rec: Column) -> list[Column]:
+    """precision/recall/f1 columns, each rounded to 4 decimals, F1 from
+    the P and R given (the counting metrics pass them unrounded)."""
+    return [
+        F.round(prec, 4).alias("precision"),
+        F.round(rec, 4).alias("recall"),
+        F.round(_div(2 * prec * rec, prec + rec), 4).alias("f1"),
+    ]
+
+
+def _coref_prf(prec: Column, rec: Column) -> list[Column]:
+    """The coref scorer's convention: P and R round to 4 decimals first and
+    F1 comes from the ROUNDED values."""
+    return _prf(F.round(prec, 4), F.round(rec, 4))
+
+
+def _count_prf() -> list[Column]:
+    """n_pred/n_gold/n_matched as bigint plus their P/R/F1."""
+    return [
+        *(F.col(c).cast("bigint") for c in ("n_pred", "n_gold", "n_matched")),
+        *_prf(
+            _div(F.col("n_matched"), F.col("n_pred")),
+            _div(F.col("n_matched"), F.col("n_gold")),
+        ),
+    ]
+
+
+@contextmanager
+def _matched_keys(
+    pred: DataFrame, gold: DataFrame, keys: list[str]
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame]]:
+    """The persisted distinct key sets of both sides and their match join;
+    the sets release on exit."""
+    from pyspark import StorageLevel
+
+    p = pred.select(*keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    g = gold.select(*keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield p, g, p.join(g, on=keys, how="inner")
+    finally:
+        p.unpersist()
+        g.unpersist()
 
 
 def micro_prf(
@@ -38,39 +101,17 @@ def micro_prf(
     scalars, so laziness buys nothing; a caller that ever needs to compose
     metrics into a larger lazy plan should build the aggregation
     expressions directly instead of calling through this wrapper."""
-    from pyspark import StorageLevel
-
-    p = pred.select(*keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    g = gold.select(*keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        m = p.join(g, on=keys, how="inner")
+    with _matched_keys(pred, gold, keys) as (p, g, m):
         counts = (
             p.agg(F.count(F.lit(1)).alias("n_pred"))
             .crossJoin(g.agg(F.count(F.lit(1)).alias("n_gold")))
             .crossJoin(m.agg(F.count(F.lit(1)).alias("n_matched")))
         )
-        prec = F.when(F.col("n_pred") > 0, F.col("n_matched") / F.col("n_pred")).otherwise(0.0)
-        rec = F.when(F.col("n_gold") > 0, F.col("n_matched") / F.col("n_gold")).otherwise(0.0)
         return _eager(
             counts.select(
-                F.lit(dataset).alias("dataset"),
-                F.lit(task).alias("task"),
-                F.col("n_pred").cast("bigint"),
-                F.col("n_gold").cast("bigint"),
-                F.col("n_matched").cast("bigint"),
-                F.round(prec, 4).alias("precision"),
-                F.round(rec, 4).alias("recall"),
-                F.round(
-                    F.when(
-                        (prec + rec) > 0, 2 * prec * rec / (prec + rec)
-                    ).otherwise(0.0),
-                    4,
-                ).alias("f1"),
+                F.lit(dataset).alias("dataset"), F.lit(task).alias("task"), *_count_prf()
             )
         )
-    finally:
-        p.unpersist()
-        g.unpersist()
 
 
 def per_namespace_metrics(pred: DataFrame, gold: DataFrame, keys: list[str]) -> DataFrame:
@@ -81,37 +122,19 @@ def per_namespace_metrics(pred: DataFrame, gold: DataFrame, keys: list[str]) -> 
     Eager like micro_prf (see its contract note): the fan-out materializes
     in driver memory — one row per namespace plus MEAN__, bounded by the
     NAMESPACE count (a handful), never the corpus."""
-    from pyspark import StorageLevel
-
-    join_keys = ["dataset", "task", *keys]
-    p = pred.select(*join_keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    g = gold.select(*join_keys).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        m = p.join(g, on=join_keys, how="inner")
+    ns = ["dataset", "task"]
+    with _matched_keys(pred, gold, [*ns, *keys]) as (p, g, m):
 
         def counts(df: DataFrame, name: str) -> DataFrame:
-            return df.groupBy("dataset", "task").agg(F.count(F.lit(1)).alias(name))
+            return df.groupBy(*ns).agg(F.count(F.lit(1)).alias(name))
 
         joined = (
             counts(p, "n_pred")
-            .join(counts(g, "n_gold"), on=["dataset", "task"], how="full")
-            .join(counts(m, "n_matched"), on=["dataset", "task"], how="full")
+            .join(counts(g, "n_gold"), on=ns, how="full")
+            .join(counts(m, "n_matched"), on=ns, how="full")
             .na.fill(0)
         )
-        prec = F.when(F.col("n_pred") > 0, F.col("n_matched") / F.col("n_pred")).otherwise(0.0)
-        rec = F.when(F.col("n_gold") > 0, F.col("n_matched") / F.col("n_gold")).otherwise(0.0)
-        per_ns = joined.select(
-            "dataset",
-            "task",
-            F.col("n_pred").cast("bigint"),
-            F.col("n_gold").cast("bigint"),
-            F.col("n_matched").cast("bigint"),
-            F.round(prec, 4).alias("precision"),
-            F.round(rec, 4).alias("recall"),
-            F.round(
-                F.when((prec + rec) > 0, 2 * prec * rec / (prec + rec)).otherwise(0.0), 4
-            ).alias("f1"),
-        )
+        per_ns = joined.select(*ns, *_count_prf())
         mean_row = per_ns.groupBy().agg(
             F.lit("MEAN__").alias("dataset"),
             F.lit("all").alias("task"),
@@ -123,9 +146,6 @@ def per_namespace_metrics(pred: DataFrame, gold: DataFrame, keys: list[str]) -> 
             F.round(F.avg("f1"), 4).alias("f1"),
         )
         return _eager(per_ns.unionByName(mean_row))
-    finally:
-        p.unpersist()
-        g.unpersist()
 
 
 def multi_trigger_stats(arguments: DataFrame) -> DataFrame:
@@ -159,6 +179,129 @@ def _eager(df: DataFrame) -> DataFrame:
     return spark.createDataFrame(df.collect(), schema=df.schema)
 
 
+def _members(pred: DataFrame, gold: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (conv_id, pc, doc_pos) and (conv_id, gc, doc_pos) member tables
+    of the predicted and gold clusterings."""
+    return (
+        pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos"),
+        gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos"),
+    )
+
+
+def _intersections(p: DataFrame, g: DataFrame) -> DataFrame:
+    """(conv_id, pc, gc, i): I(p,g) = |P_pc ∩ G_gc| for every intersecting
+    cluster pair — the one pred↔gold mention join, an equi-join on
+    (conv_id, doc_pos). (conv_id, pc, gc) is its grouping key, so a count
+    per pc (or gc) counts DISTINCT partner clusters."""
+    return (
+        p.join(g, on=["conv_id", "doc_pos"])
+        .groupBy("conv_id", "pc", "gc")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("i"))
+    )
+
+
+def _star_violations(inter: DataFrame) -> DataFrame:
+    """(conv_id, star_violations): pred clusters intersecting more than one
+    gold cluster, per conversation with ≥1."""
+    return (
+        inter.groupBy("conv_id", "pc")
+        .agg(F.count(F.lit(1)).alias("n_gc"))
+        .where(F.col("n_gc") > 1)
+        .groupBy("conv_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("star_violations"))
+    )
+
+
+class _Overlap(NamedTuple):
+    inter: DataFrame  # (conv_id, pc, gc, i), persisted
+    sized: DataFrame  # inter + size_p + size_g
+    totals: DataFrame  # one row: n_pred_m, n_pred_cl, n_gold_m, n_gold_cl
+
+
+@contextmanager
+def _overlap(pred: DataFrame, gold: DataFrame) -> Iterator[_Overlap]:
+    """The cluster-overlap table every coref metric reads: the member
+    tables and the intersections persist (spill-safe) and release on exit.
+    Each feeds several aggregates — without the persist, the CALLER's
+    clustering pipeline re-runs once per downstream branch (measured: 120
+    corpus scans in the un-persisted physical plan)."""
+    from pyspark import StorageLevel
+
+    p, g = (m.persist(StorageLevel.MEMORY_AND_DISK) for m in _members(pred, gold))
+    inter = _intersections(p, g).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        psz = p.groupBy("conv_id", "pc").agg(F.count(F.lit(1)).cast("bigint").alias("size_p"))
+        gsz = g.groupBy("conv_id", "gc").agg(F.count(F.lit(1)).cast("bigint").alias("size_g"))
+        yield _Overlap(
+            inter,
+            inter.join(psz, on=["conv_id", "pc"]).join(gsz, on=["conv_id", "gc"]),
+            psz.agg(
+                F.sum("size_p").cast("bigint").alias("n_pred_m"),
+                F.count(F.lit(1)).cast("bigint").alias("n_pred_cl"),
+            ).crossJoin(
+                gsz.agg(
+                    F.sum("size_g").cast("bigint").alias("n_gold_m"),
+                    F.count(F.lit(1)).cast("bigint").alias("n_gold_cl"),
+                )
+            ),
+        )
+    finally:
+        inter.unpersist()
+        p.unpersist()
+        g.unpersist()
+
+
+def _int_mean(*f1s: float) -> float:
+    """(Σ round(f1·10⁴)) / (10⁴·n): each 4-decimal F1 requantizes to an
+    integer number of 1e-4 units and the mean is one IEEE division of
+    exact integers."""
+    return sum(round(f * 10_000) for f in f1s) / (10_000.0 * len(f1s))
+
+
+def _conll_rows(o: _Overlap) -> DataFrame:
+    """The muc, b3 and mention rows of `conll_coref_metrics`."""
+    c = F.col
+    sc = float(B3_SCALE)
+    # coalesce every global sum to 0: with ZERO mention overlap the
+    # intersection table is empty and sums return NULL — the reference
+    # scorer reports 0.0 there, not null (f1.py zero-safe convention)
+    inter_agg = o.sized.agg(
+        F.coalesce(F.sum("i"), F.lit(0)).cast("bigint").alias("matched"),
+        *(
+            F.coalesce(
+                F.sum(F.round(F.lit(sc) * c("i") * c("i") / c(size)).cast("bigint")), F.lit(0)
+            ).alias(name)
+            for size, name in (("size_g", "b3_rec_sc"), ("size_p", "b3_prec_sc"))
+        ),
+    )
+    # Σ over clusters of one side of the partner-cluster count k
+    k_g, k_p = (
+        o.inter.groupBy("conv_id", side)
+        .agg(F.count(F.lit(1)).alias("k"))
+        .agg(F.coalesce(F.sum("k"), F.lit(0)).cast("bigint").alias(name))
+        for side, name in (("gc", "sum_kg"), ("pc", "sum_kp"))
+    )
+    s = inter_agg.crossJoin(k_g).crossJoin(k_p).crossJoin(o.totals)
+
+    def row(name, prec, rec):
+        return s.select(F.lit(name).alias("metric"), *_coref_prf(prec, rec))
+
+    muc = row(
+        "muc",
+        _div(c("matched") - c("sum_kp"), c("n_pred_m") - c("n_pred_cl")),
+        _div(c("matched") - c("sum_kg"), c("n_gold_m") - c("n_gold_cl")),
+    )
+    b3 = row(
+        "b3",
+        _div(c("b3_prec_sc"), F.lit(B3_SCALE) * c("n_pred_m")),
+        _div(c("b3_rec_sc"), F.lit(B3_SCALE) * c("n_gold_m")),
+    )
+    mention = row(
+        "mention", _div(c("matched"), c("n_pred_m")), _div(c("matched"), c("n_gold_m"))
+    )
+    return muc.unionByName(b3).unionByName(mention)
+
+
 def conll_coref_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """F6 — CoNLL coreference metrics as pure DataFrame aggregations:
     MUC (link-based) and B³ (mention-based) precision/recall/F1 plus
@@ -188,105 +331,8 @@ def conll_coref_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
     scans in the un-persisted physical plan). The result materializes
     eagerly so every persist releases before return (no cache growth
     across repeated calls)."""
-    from pyspark import StorageLevel
-
-    mkey = ["conv_id", "doc_pos"]
-    p = pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    g = gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    inter = (
-        p.join(g, on=mkey)
-        .groupBy("conv_id", "pc", "gc")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("i"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        psz = p.groupBy("conv_id", "pc").agg(
-            F.count(F.lit(1)).cast("bigint").alias("size_p")
-        )
-        gsz = g.groupBy("conv_id", "gc").agg(
-            F.count(F.lit(1)).cast("bigint").alias("size_g")
-        )
-        iw = inter.join(psz, on=["conv_id", "pc"]).join(gsz, on=["conv_id", "gc"])
-        sc = float(B3_SCALE)
-        # coalesce every global sum to 0: with ZERO mention overlap the
-        # intersection table is empty and sums return NULL — the reference
-        # scorer reports 0.0 there, not null (f1.py zero-safe convention)
-        inter_agg = iw.agg(
-            F.coalesce(F.sum("i"), F.lit(0)).cast("bigint").alias("matched"),
-            F.coalesce(
-                F.sum(
-                    F.round(F.lit(sc) * F.col("i") * F.col("i") / F.col("size_g")).cast("bigint")
-                ),
-                F.lit(0),
-            ).alias("b3_rec_sc"),
-            F.coalesce(
-                F.sum(
-                    F.round(F.lit(sc) * F.col("i") * F.col("i") / F.col("size_p")).cast("bigint")
-                ),
-                F.lit(0),
-            ).alias("b3_prec_sc"),
-        )
-        k_g = (
-            inter.groupBy("conv_id", "gc")
-            .agg(F.countDistinct("pc").alias("k"))
-            .agg(F.coalesce(F.sum("k"), F.lit(0)).cast("bigint").alias("sum_kg"))
-        )
-        k_p = (
-            inter.groupBy("conv_id", "pc")
-            .agg(F.countDistinct("gc").alias("k"))
-            .agg(F.coalesce(F.sum("k"), F.lit(0)).cast("bigint").alias("sum_kp"))
-        )
-        ptot = psz.agg(
-            F.sum("size_p").cast("bigint").alias("n_pred_m"),
-            F.count(F.lit(1)).cast("bigint").alias("n_pred_cl"),
-        )
-        gtot = gsz.agg(
-            F.sum("size_g").cast("bigint").alias("n_gold_m"),
-            F.count(F.lit(1)).cast("bigint").alias("n_gold_cl"),
-        )
-        s = inter_agg.crossJoin(k_g).crossJoin(k_p).crossJoin(ptot).crossJoin(gtot)
-
-        def _f1(pc, rc):
-            return F.when(
-                (pc + rc) > 0, F.round(2 * pc * rc / (pc + rc), 4)
-            ).otherwise(F.lit(0.0))
-
-        def _row(name, prec, rec):
-            prec, rec = F.round(prec, 4), F.round(rec, 4)
-            return s.select(
-                F.lit(name).alias("metric"),
-                prec.alias("precision"),
-                rec.alias("recall"),
-                _f1(prec, rec).alias("f1"),
-            )
-
-        def _div(num, den):
-            return F.when(den > 0, num / den).otherwise(F.lit(0.0))
-
-        muc = _row(
-            "muc",
-            _div(F.col("matched") - F.col("sum_kp"), F.col("n_pred_m") - F.col("n_pred_cl")),
-            _div(F.col("matched") - F.col("sum_kg"), F.col("n_gold_m") - F.col("n_gold_cl")),
-        )
-        b3 = _row(
-            "b3",
-            _div(F.col("b3_prec_sc"), F.lit(B3_SCALE) * F.col("n_pred_m")),
-            _div(F.col("b3_rec_sc"), F.lit(B3_SCALE) * F.col("n_gold_m")),
-        )
-        mention = _row(
-            "mention",
-            _div(F.col("matched"), F.col("n_pred_m")),
-            _div(F.col("matched"), F.col("n_gold_m")),
-        )
-        return _eager(muc.unionByName(b3).unionByName(mention))
-    finally:
-        inter.unpersist()
-        p.unpersist()
-        g.unpersist()
+    with _overlap(pred, gold) as o:
+        return _eager(_conll_rows(o))
 
 
 CEAF_MAX_SMALL = 18  # bitmask-DP side cap: 2^18 states
@@ -321,16 +367,7 @@ def wide_component_report(
     that trips the real bound."""
     from dygiepp_spark.operators import graph
 
-    inter = (
-        pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos")
-        .join(
-            gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos"),
-            on=["conv_id", "doc_pos"],
-        )
-        .select("conv_id", "pc", "gc")
-        .distinct()
-    )
-    edges = inter.select(
+    edges = _intersections(*_members(pred, gold)).select(
         "conv_id",
         (F.col("pc") * 2).alias("src"),
         (F.col("gc") * 2 + 1).alias("dst"),
@@ -367,21 +404,94 @@ def star_violation_report(pred: DataFrame, gold: DataFrame) -> DataFrame:
     Shape: one mention-key equi-join to the (candidate-pair-sized)
     intersection table, then two partial aggregations — no corpus scan
     beyond the cluster tables themselves."""
-    inter = (
-        pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos")
-        .join(
-            gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos"),
-            on=["conv_id", "doc_pos"],
+    return _star_violations(_intersections(*_members(pred, gold)))
+
+
+def _ceaf_row(o: _Overlap) -> DataFrame:
+    """The one row of `ceaf_phi4_metrics`."""
+    import pandas as pd
+
+    from dygiepp_spark.operators.graph import union_find
+
+    def best_matching(pdf: pd.DataFrame) -> pd.DataFrame:
+        conv = pdf["conv_id"].iloc[0]
+        # intersection-graph components over (pc, gc) edges; each
+        # component keeps edge order, which fixes its float sums
+        edges = list(zip(pdf["pc"], pdf["gc"], pdf["phi4"]))
+        root = union_find((("p", pc), ("g", gc)) for pc, gc, _ in edges)
+        comps: dict = {}
+        for pc, gc, phi in edges:
+            comps.setdefault(root[("p", pc)], []).append((pc, gc, phi))
+        total = 0.0
+        n_wide = 0
+        for comp_edges in comps.values():
+            gcs = sorted({gc for _, gc, _ in comp_edges})
+            pcs = sorted({pc for pc, _, _ in comp_edges})
+            n_small, n_big = sorted((len(gcs), len(pcs)))
+            # bound the DP, not just one side: work = big × 2^small × small,
+            # so a 22×1000 component would otherwise "pass" the guard and
+            # hang the task
+            work = n_big * (1 << n_small) * n_small
+            if n_small > CEAF_MAX_SMALL or work > CEAF_MAX_WORK:
+                # greedy matching lower bound: heaviest edges first,
+                # each cluster used at most once; flag the component
+                n_wide += 1
+                used_p: set = set()
+                used_g: set = set()
+                for pc, gc, phi in sorted(
+                    comp_edges, key=lambda e: (-e[2], e[0], e[1])
+                ):
+                    if pc in used_p or gc in used_g:
+                        continue
+                    used_p.add(pc)
+                    used_g.add(gc)
+                    total += phi
+                continue
+            # DP over the smaller side as the bitmask
+            if len(gcs) <= len(pcs):
+                small, big, w = gcs, pcs, {(pc, gc): phi for pc, gc, phi in comp_edges}
+                weight = lambda b, s: w.get((b, s), 0.0)  # noqa: E731
+            else:
+                small, big, w = pcs, gcs, {(pc, gc): phi for pc, gc, phi in comp_edges}
+                weight = lambda b, s: w.get((s, b), 0.0)  # noqa: E731
+            sidx = {c: k for k, c in enumerate(small)}
+            full = 1 << len(small)
+            best = [0.0] * full
+            for b in big:
+                nxt = best[:]
+                for mask in range(full):
+                    base = best[mask]
+                    for s in small:
+                        bit = 1 << sidx[s]
+                        if mask & bit:
+                            continue
+                        v = base + weight(b, s)
+                        if v > nxt[mask | bit]:
+                            nxt[mask | bit] = v
+                    if base > nxt[mask]:
+                        nxt[mask] = base
+                best = nxt
+            total += max(best)
+        return pd.DataFrame(
+            {"conv_id": [conv], "sum_phi4": [total], "wide": [n_wide]}
         )
-        .select("conv_id", "pc", "gc")
-        .distinct()
-    )
-    return (
-        inter.groupBy("conv_id", "pc")
-        .agg(F.countDistinct("gc").alias("n_gc"))
-        .where(F.col("n_gc") > 1)
+
+    per_conv = (
+        o.sized.withColumn("phi4", 2.0 * F.col("i") / (F.col("size_p") + F.col("size_g")))
         .groupBy("conv_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("star_violations"))
+        .applyInPandas(best_matching, "conv_id string, sum_phi4 double, wide bigint")
+    )
+    tot = per_conv.agg(
+        F.coalesce(F.sum("sum_phi4"), F.lit(0.0)).alias("sum_phi4"),
+        F.coalesce(F.sum("wide"), F.lit(0)).cast("bigint").alias("wide_components"),
+    ).crossJoin(o.totals)
+    return tot.select(
+        F.lit("ceaf_phi4").alias("metric"),
+        *_coref_prf(
+            _div(F.col("sum_phi4"), F.col("n_pred_cl")),
+            _div(F.col("sum_phi4"), F.col("n_gold_cl")),
+        ),
+        F.col("wide_components"),
     )
 
 
@@ -407,134 +517,42 @@ def ceaf_phi4_metrics(pred: DataFrame, gold: DataFrame) -> DataFrame:
 
     The result materializes eagerly so the persisted mention tables release
     before return."""
-    import pandas as pd
-
-    from pyspark import StorageLevel
-
-    from dygiepp_spark.operators.graph import union_find
-
-    MAX_SMALL = CEAF_MAX_SMALL
-    MAX_WORK = CEAF_MAX_WORK
-
-    mkey = ["conv_id", "doc_pos"]
-    p = pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    g = gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        inter = (
-            p.join(g, on=mkey)
-            .groupBy("conv_id", "pc", "gc")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("i"))
-        )
-        psz = p.groupBy("conv_id", "pc").agg(F.count(F.lit(1)).cast("bigint").alias("size_p"))
-        gsz = g.groupBy("conv_id", "gc").agg(F.count(F.lit(1)).cast("bigint").alias("size_g"))
-        iw = (
-            inter.join(psz, on=["conv_id", "pc"])
-            .join(gsz, on=["conv_id", "gc"])
-            .withColumn(
-                "phi4", 2.0 * F.col("i") / (F.col("size_p") + F.col("size_g"))
-            )
-        )
-
-        def best_matching(pdf: pd.DataFrame) -> pd.DataFrame:
-            conv = pdf["conv_id"].iloc[0]
-            # intersection-graph components over (pc, gc) edges; each
-            # component keeps edge order, which fixes its float sums
-            edges = list(zip(pdf["pc"], pdf["gc"], pdf["phi4"]))
-            root = union_find((("p", pc), ("g", gc)) for pc, gc, _ in edges)
-            comps: dict = {}
-            for pc, gc, phi in edges:
-                comps.setdefault(root[("p", pc)], []).append((pc, gc, phi))
-            total = 0.0
-            n_wide = 0
-            for comp_edges in comps.values():
-                gcs = sorted({gc for _, gc, _ in comp_edges})
-                pcs = sorted({pc for pc, _, _ in comp_edges})
-                n_small, n_big = sorted((len(gcs), len(pcs)))
-                # bound the DP, not just one side: work = big × 2^small × small,
-                # so a 22×1000 component would otherwise "pass" the guard and
-                # hang the task
-                if n_small > MAX_SMALL or n_big * (1 << n_small) * n_small > MAX_WORK:
-                    # greedy matching lower bound: heaviest edges first,
-                    # each cluster used at most once; flag the component
-                    n_wide += 1
-                    used_p: set = set()
-                    used_g: set = set()
-                    for pc, gc, phi in sorted(
-                        comp_edges, key=lambda e: (-e[2], e[0], e[1])
-                    ):
-                        if pc in used_p or gc in used_g:
-                            continue
-                        used_p.add(pc)
-                        used_g.add(gc)
-                        total += phi
-                    continue
-                # DP over the smaller side as the bitmask
-                if len(gcs) <= len(pcs):
-                    small, big, w = gcs, pcs, {(pc, gc): phi for pc, gc, phi in comp_edges}
-                    weight = lambda b, s: w.get((b, s), 0.0)  # noqa: E731
-                else:
-                    small, big, w = pcs, gcs, {(pc, gc): phi for pc, gc, phi in comp_edges}
-                    weight = lambda b, s: w.get((s, b), 0.0)  # noqa: E731
-                sidx = {c: k for k, c in enumerate(small)}
-                full = 1 << len(small)
-                best = [0.0] * full
-                for b in big:
-                    nxt = best[:]
-                    for mask in range(full):
-                        base = best[mask]
-                        for s in small:
-                            bit = 1 << sidx[s]
-                            if mask & bit:
-                                continue
-                            v = base + weight(b, s)
-                            if v > nxt[mask | bit]:
-                                nxt[mask | bit] = v
-                        if base > nxt[mask]:
-                            nxt[mask] = base
-                    best = nxt
-                total += max(best)
-            return pd.DataFrame(
-                {"conv_id": [conv], "sum_phi4": [total], "wide": [n_wide]}
-            )
-
-        per_conv = iw.groupBy("conv_id").applyInPandas(
-            best_matching, "conv_id string, sum_phi4 double, wide bigint"
-        )
-        tot = (
-            per_conv.agg(
-                F.coalesce(F.sum("sum_phi4"), F.lit(0.0)).alias("sum_phi4"),
-                F.coalesce(F.sum("wide"), F.lit(0)).cast("bigint").alias("wide_components"),
-            )
-            .crossJoin(psz.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred_cl")))
-            .crossJoin(gsz.agg(F.count(F.lit(1)).cast("bigint").alias("n_gold_cl")))
-        )
-
-        def _safe(num, den):
-            return F.when(den > 0, F.round(num / den, 4)).otherwise(F.lit(0.0))
-
-        prec = _safe(F.col("sum_phi4"), F.col("n_pred_cl"))
-        rec = _safe(F.col("sum_phi4"), F.col("n_gold_cl"))
-        return _eager(
-            tot.select(
-                F.lit("ceaf_phi4").alias("metric"),
-                prec.alias("precision"),
-                rec.alias("recall"),
-                F.when((prec + rec) > 0, F.round(2 * prec * rec / (prec + rec), 4))
-                .otherwise(F.lit(0.0))
-                .alias("f1"),
-                F.col("wide_components"),
-            )
-        )
-    finally:
-        p.unpersist()
-        g.unpersist()
+    with _overlap(pred, gold) as o:
+        return _eager(_ceaf_row(o))
 
 
 PHI4_SCALE = 1_000_000  # fixed-point scale for quantized φ4 terms
+
+
+def _ceaf_star_row(o: _Overlap) -> DataFrame:
+    """The one row of `ceaf_phi4_star_quantized`."""
+    # same operation ORDER as the SQL twin: 2e6 · i / (|P|+|G|), one
+    # multiply then one divide, round-half-up to int64
+    phi_q = F.round(
+        F.lit(2.0 * PHI4_SCALE) * F.col("i") / (F.col("size_p") + F.col("size_g"))
+    ).cast("bigint")
+    star = o.sized.groupBy("conv_id", "gc").agg(F.max(phi_q).alias("best_q"))
+    tot = (
+        star.agg(F.coalesce(F.sum("best_q"), F.lit(0)).cast("bigint").alias("sum_phi_q"))
+        .crossJoin(o.totals)
+        .crossJoin(
+            _star_violations(o.inter).agg(
+                F.coalesce(F.sum("star_violations"), F.lit(0))
+                .cast("bigint")
+                .alias("star_violations")
+            )
+        )
+    )
+    scale = F.lit(float(PHI4_SCALE))
+    return tot.select(
+        F.lit("ceaf_phi4_star").alias("metric"),
+        F.col("sum_phi_q"),
+        *_coref_prf(
+            _div(F.col("sum_phi_q"), scale * F.col("n_pred_cl")),
+            _div(F.col("sum_phi_q"), scale * F.col("n_gold_cl")),
+        ),
+        F.col("star_violations"),
+    )
 
 
 def ceaf_phi4_star_quantized(pred: DataFrame, gold: DataFrame) -> DataFrame:
@@ -568,77 +586,12 @@ def ceaf_phi4_star_quantized(pred: DataFrame, gold: DataFrame) -> DataFrame:
     published composite must never silently embed an approximate term).
     Costs one extra aggregation over the (candidate-pair-sized)
     intersection table; no additional corpus scan."""
-    from pyspark import StorageLevel
+    with _overlap(pred, gold) as o:
+        return _eager(_ceaf_star_row(o))
 
-    mkey = ["conv_id", "doc_pos"]
-    p = pred.select("conv_id", F.col("cluster_id").alias("pc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    g = gold.select("conv_id", F.col("cluster_id").alias("gc"), "doc_pos").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        inter = (
-            p.join(g, on=mkey)
-            .groupBy("conv_id", "pc", "gc")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("i"))
-        )
-        psz = p.groupBy("conv_id", "pc").agg(
-            F.count(F.lit(1)).cast("bigint").alias("size_p")
-        )
-        gsz = g.groupBy("conv_id", "gc").agg(
-            F.count(F.lit(1)).cast("bigint").alias("size_g")
-        )
-        # same operation ORDER as the SQL twin: 2e6 · i / (|P|+|G|), one
-        # multiply then one divide, round-half-up to int64
-        phi_q = F.round(
-            F.lit(2.0 * PHI4_SCALE) * F.col("i") / (F.col("size_p") + F.col("size_g"))
-        ).cast("bigint")
-        star = (
-            inter.join(psz, on=["conv_id", "pc"])
-            .join(gsz, on=["conv_id", "gc"])
-            .withColumn("phi_q", phi_q)
-            .groupBy("conv_id", "gc")
-            .agg(F.max("phi_q").alias("best_q"))
-        )
-        violations = (
-            inter.groupBy("conv_id", "pc")
-            .agg(F.countDistinct("gc").alias("n_gc"))
-            .agg(
-                F.coalesce(F.sum(F.when(F.col("n_gc") > 1, 1).otherwise(0)), F.lit(0))
-                .cast("bigint")
-                .alias("star_violations")
-            )
-        )
-        tot = (
-            star.agg(
-                F.coalesce(F.sum("best_q"), F.lit(0)).cast("bigint").alias("sum_phi_q")
-            )
-            .crossJoin(psz.agg(F.count(F.lit(1)).cast("bigint").alias("n_pred_cl")))
-            .crossJoin(gsz.agg(F.count(F.lit(1)).cast("bigint").alias("n_gold_cl")))
-            .crossJoin(violations)
-        )
 
-        def _safe(num, den):
-            return F.when(den > 0, F.round(num / den, 4)).otherwise(F.lit(0.0))
-
-        prec = _safe(F.col("sum_phi_q"), F.lit(float(PHI4_SCALE)) * F.col("n_pred_cl"))
-        rec = _safe(F.col("sum_phi_q"), F.lit(float(PHI4_SCALE)) * F.col("n_gold_cl"))
-        return _eager(
-            tot.select(
-                F.lit("ceaf_phi4_star").alias("metric"),
-                F.col("sum_phi_q"),
-                prec.alias("precision"),
-                rec.alias("recall"),
-                F.when((prec + rec) > 0, F.round(2 * prec * rec / (prec + rec), 4))
-                .otherwise(F.lit(0.0))
-                .alias("f1"),
-                F.col("star_violations"),
-            )
-        )
-    finally:
-        p.unpersist()
-        g.unpersist()
+def _f1_by_metric(rows: DataFrame) -> dict[str, float]:
+    return {r["metric"]: r["f1"] for r in rows.collect()}
 
 
 def conll_average_star(pred: DataFrame, gold: DataFrame) -> DataFrame:
@@ -649,10 +602,9 @@ def conll_average_star(pred: DataFrame, gold: DataFrame) -> DataFrame:
     `conll_average` stays as the rows-only quality path). Same integer-mean
     recipe as conll_average_no_ceaf: each 4-decimal F1 requantizes to 1e-4
     units and the mean is one IEEE division of exact integers."""
-    rows = {
-        r["metric"]: r["f1"] for r in conll_coref_metrics(pred, gold).collect()
-    }
-    ceaf_row = ceaf_phi4_star_quantized(pred, gold).collect()[0]
+    with _overlap(pred, gold) as o:
+        rows = _f1_by_metric(_conll_rows(o))
+        ceaf_row = _ceaf_star_row(o).collect()[0]
     if ceaf_row["star_violations"] > 0:
         raise ValueError(
             f"{ceaf_row['star_violations']} pred clusters intersect more "
@@ -661,20 +613,9 @@ def conll_average_star(pred: DataFrame, gold: DataFrame) -> DataFrame:
             "not silently embed one — use conll_average (generic-DP CEAF) "
             "for this clustering"
         )
-    ceaf = ceaf_row["f1"]
-    muc_q = round(rows["muc"] * 10_000)
-    b3_q = round(rows["b3"] * 10_000)
-    ceaf_q = round(ceaf * 10_000)
-    spark = pred.sparkSession
-    return spark.createDataFrame(
-        [
-            (
-                (muc_q + b3_q + ceaf_q) / 30_000.0,
-                float(rows["muc"]),
-                float(rows["b3"]),
-                float(ceaf),
-            )
-        ],
+    muc, b3, ceaf = float(rows["muc"]), float(rows["b3"]), float(ceaf_row["f1"])
+    return pred.sparkSession.createDataFrame(
+        [(_int_mean(muc, b3, ceaf), muc, b3, ceaf)],
         "conll_coref_f1_star double, muc_f1 double, b3_f1 double, ceaf_star_f1 double",
     )
 
@@ -684,8 +625,9 @@ def conll_average(pred: DataFrame, gold: DataFrame) -> DataFrame:
     B³ and CEAFφ4 F1 (dygie/models/coref.py:15-16 'conll_coref_f1').
     `wide_components` > 0 marks the CEAF term as a greedy lower bound
     (see ceaf_phi4_metrics)."""
-    parts = conll_coref_metrics(pred, gold).where(F.col("metric").isin("muc", "b3"))
-    ceaf = ceaf_phi4_metrics(pred, gold)
+    with _overlap(pred, gold) as o:
+        parts = _eager(_conll_rows(o)).where(F.col("metric").isin("muc", "b3"))
+        ceaf = _eager(_ceaf_row(o))
     both = parts.withColumn(
         "wide_components", F.lit(0).cast("bigint")
     ).unionByName(ceaf)
@@ -706,14 +648,10 @@ def conll_average_no_ceaf(pred: DataFrame, gold: DataFrame) -> DataFrame:
     mean is computed as one IEEE division of exact integers — both engines
     divide the SAME integers, so the resulting double is bit-identical (no
     round() tie-breaking in play)."""
-    rows = {
-        r["metric"]: r["f1"]
-        for r in conll_coref_metrics(pred, gold).collect()
-    }
-    muc_q = round(rows["muc"] * 10_000)
-    b3_q = round(rows["b3"] * 10_000)
-    spark = pred.sparkSession
-    return spark.createDataFrame(
-        [((muc_q + b3_q) / 20_000.0, float(rows["muc"]), float(rows["b3"]))],
+    with _overlap(pred, gold) as o:
+        rows = _f1_by_metric(_conll_rows(o))
+    muc, b3 = float(rows["muc"]), float(rows["b3"])
+    return pred.sparkSession.createDataFrame(
+        [(_int_mean(muc, b3), muc, b3)],
         "conll_avg_no_ceaf double, muc_f1 double, b3_f1 double",
     )

@@ -60,12 +60,26 @@ def partition_fingerprints(keyed_turns: DataFrame) -> DataFrame:
     )
 
 
+def local_path(uri: str) -> str:
+    """The local-FS path of a parquet-on-FS stand-in location: a plain
+    path, or a file:// URI with its scheme stripped (os.path probes on a
+    URI are always False, which would silently skip a purge or a resume).
+    Any other scheme raises: the stand-ins list, purge and prune with
+    os/shutil, so remote storage needs the Iceberg backend
+    (overwritePartitions, MERGE INTO)."""
+    if uri.startswith("file://"):
+        return urlparse(uri).path
+    if "://" in uri:
+        raise NotImplementedError(
+            f"{uri}: the parquet-on-FS stand-ins are local-FS only; use the "
+            "Iceberg backend (overwritePartitions / MERGE INTO) for remote storage"
+        )
+    return uri
+
+
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     path = os.path.join(out_dir, LINEAGE_DIR)
-    # strip a file:// scheme for the local existence probe (os.path.isdir
-    # on a URI is always False → resume would silently recompute everything)
-    local = urlparse(path).path if path.startswith("file://") else path
-    if not os.path.isdir(local):  # first run: no lineage yet (local FS /
+    if not os.path.isdir(local_path(path)):  # first run: no lineage yet (local FS /
         return None  # driver-visible DFS mount; Iceberg catalogs instead)
     try:
         return spark.read.parquet(path)
@@ -138,17 +152,7 @@ def run_with_checkpoint(
     # parquet-on-FS stand-in needs an explicit local delete, and it must
     # FAIL LOUDLY if it can't delete — a swallowed error here would
     # resurrect the stale-data bug silently.
-    if "://" in out_dir and not out_dir.startswith("file://"):
-        raise NotImplementedError(
-            "parquet-on-FS checkpoint purge is local-FS only; use the "
-            "Iceberg backend (overwritePartitions) for remote storage"
-        )
-    # os.path.exists("file:///...") is always False — strip the URI scheme
-    # for the local purge, or the stale-partition fix silently no-ops for
-    # file:// out_dirs (the exact bug the purge exists to prevent)
-    local_data_path = (
-        urlparse(data_path).path if data_path.startswith("file://") else data_path
-    )
+    local_data_path = local_path(data_path)
     for k in todo:
         part_dir = os.path.join(local_data_path, f"{PART_COL}={k}")
         if os.path.exists(part_dir):

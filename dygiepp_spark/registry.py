@@ -1392,13 +1392,9 @@ def validation_report(spark, sf_dir):
     base = _longs(vr(_turns(spark, sf_dir))).withColumn(
         "n_flagged", F.lit(0).cast("bigint")
     )
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        degen = metrics._eager(coref_degeneracy_rows(pred, gold))
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    degen = _on_pred_gold(
+        spark, sf_dir, lambda p, g: metrics._eager(coref_degeneracy_rows(p, g))
+    )
     return base.unionByName(degen)
 
 
@@ -1482,46 +1478,43 @@ def coref_pair_metrics(spark, sf_dir):
             .select("conv_id", "pa", "pb")
         )
 
-    pred_cl, gold_cl = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics._eager(
-            metrics.micro_prf(
-                pairs(pred_cl), pairs(gold_cl), ["conv_id", "pa", "pb"], task="coref_pairs"
-            )
-        )
-    finally:
-        pred_cl.unpersist()
-        gold_cl.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(
+        spark,
+        sf_dir,
+        lambda p, g: metrics.micro_prf(
+            pairs(p), pairs(g), ["conv_id", "pa", "pb"], task="coref_pairs"
+        ),
+    )
 
 
-def _pred_gold_clusters(spark, sf_dir):
+def _on_pred_gold(spark, sf_dir, metric):
+    """`metric(pred, gold)` over the coref clusterings of the corpus: pred
+    with antecedent gap ≤ 40, gold unrestricted. The cluster tables
+    persist — the CoNLL metric families each read them several times, and
+    the clustering pipeline (extraction + CC) is the expensive part of the
+    lineage — and release, with every tracked persist, once the (eager)
+    metric has materialized: repeated metric calls in a long-lived session
+    must not accumulate cache blocks."""
     from pyspark import StorageLevel
 
     t = _turns(spark, sf_dir)
-    # persist the cluster tables: the CoNLL metric families each read them
-    # several times, and the clustering pipeline (extraction + CC) is the
-    # expensive part of the lineage. Every caller unpersists after its
-    # (eager) metric materializes — repeated metric calls in a long-lived
-    # session must not accumulate cache blocks.
     pred = coref.clusters_via_components(t, max_gap=40).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     gold = coref.clusters_via_components(t).persist(StorageLevel.MEMORY_AND_DISK)
-    return pred, gold
+    try:
+        return metric(pred, gold)
+    finally:
+        pred.unpersist()
+        gold.unpersist()
+        _cache.release_tracked()
 
 
 def coref_conll_metrics(spark, sf_dir):
     """F6 — CoNLL coref metrics (MUC + B³ + mention P/R) as DataFrame
     aggregations (reference scorer coref.py:15-16, 461-469): pred =
     clustering with antecedent gap ≤ 40, gold = unrestricted clustering."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.conll_coref_metrics(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.conll_coref_metrics)
 
 
 def coref_ceaf_metrics(spark, sf_dir):
@@ -1530,25 +1523,13 @@ def coref_ceaf_metrics(spark, sf_dir):
     Pinned against a brute-force permutation scorer in pytest. A
     `wide_components` column counts components scored by the greedy lower
     bound instead of the exact DP (skip-and-flag, never abort)."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.ceaf_phi4_metrics(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.ceaf_phi4_metrics)
 
 
 def coref_conll_avg(spark, sf_dir):
     """F6 — the reference's published number: mean of MUC/B³/CEAFφ4 F1
     ('conll_coref_f1', coref.py:15-16). Rows-only (includes CEAF)."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.conll_average(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.conll_average)
 
 
 def ceaf_star_metrics(spark, sf_dir):
@@ -1557,13 +1538,7 @@ def ceaf_star_metrics(spark, sf_dir):
     clusterings), quantized-integer φ4 aggregation — the ORACLE-GATED CEAF
     twin; the generic-DP `coref_ceaf_metrics` stays as the quality path
     (brute-force pytest pin), and their agreement is itself pytest-pinned."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.ceaf_phi4_star_quantized(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.ceaf_phi4_star_quantized)
 
 
 def coref_conll_avg_star(spark, sf_dir):
@@ -1571,13 +1546,7 @@ def coref_conll_avg_star(spark, sf_dir):
     'conll_coref_f1', coref.py:15-16) with the CEAF term from the star
     twin: the FULL CoNLL average, hash-exact across engines for the first
     time (the generic-DP `coref_conll_avg` stays rows-only)."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.conll_average_star(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.conll_average_star)
 
 
 def conll_avg_no_ceaf(spark, sf_dir):
@@ -1585,13 +1554,7 @@ def conll_avg_no_ceaf(spark, sf_dir):
     B³ F1 (CEAFφ4 stays pytest-pinned; its optimal assignment has no SQL
     oracle). Driver-gated so the published-number components have hash
     evidence."""
-    pred, gold = _pred_gold_clusters(spark, sf_dir)
-    try:
-        return metrics.conll_average_no_ceaf(pred, gold)
-    finally:
-        pred.unpersist()
-        gold.unpersist()
-        _cache.release_tracked()
+    return _on_pred_gold(spark, sf_dir, metrics.conll_average_no_ceaf)
 
 
 # ------------------------------------------------- corpus-level operators
@@ -2455,9 +2418,11 @@ _ROTATED_TAIL = [
     # r04+r05+r06 with its own operator function untouched by any r7
     # change (verified against the round-start tree at function level):
     # exact_dedup (body unchanged; the dedup kernel work starts below it),
-    # event_triggers (posexplode path untouched; its consumers
-    # trigger_metrics/label_vocab are tail under the r6-established
-    # convention with the changed emitters gated in-window directly),
+    # event_triggers (then a posexplode column path; it has since moved
+    # to a mapInPandas kernel over model.events, the decode the
+    # in-window argument head runs, and stays tail — its rows, and those
+    # of its consumers trigger_metrics/label_vocab, are re-verified
+    # locally by test_oracle_parity and the JSONL golden trigger scores),
     # embedding_near_dup / embedding_ivf_topk / embedding_ivf_fixed
     # (similarity.py r7 diff touches only the dot_topk kernel;
     # embedding_dot_topk stays in-window as the changed similarity path), and

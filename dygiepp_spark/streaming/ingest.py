@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dygiepp_spark.operators.assembly import with_token_counts
+from dygiepp_spark.plans.checkpoint import local_path
 from dygiepp_spark.schemas import TURNS_SCHEMA
 
 
@@ -129,8 +130,6 @@ def make_canonical_merger(store_dir: str, retain_snapshots: int = 3):
     cost of the parquet stand-in. At 10^12-turn scale use the Iceberg
     path; the SEMANTICS (what this proves in-sandbox) are identical.
     Local-FS only, same gate as plans/checkpoint.py."""
-    from urllib.parse import urlparse
-
     from dygiepp_spark.operators.canonicalize import (
         alias_dict,
         canonical_triples,
@@ -150,14 +149,7 @@ def make_canonical_merger(store_dir: str, retain_snapshots: int = 3):
             f"retain_snapshots must be >= 2 (got {retain_snapshots}): the "
             "direct predecessor must survive until its successor commits"
         )
-    if "://" in store_dir and not store_dir.startswith("file://"):
-        raise NotImplementedError(
-            "parquet-on-FS snapshot store is local-FS only; use the "
-            "Iceberg backend (MERGE INTO) for remote storage"
-        )
-    local_store = (
-        urlparse(store_dir).path if store_dir.startswith("file://") else store_dir
-    )
+    local_store = local_path(store_dir)
 
     def _snapshot_ids() -> list[int]:
         if not os.path.isdir(local_store):
@@ -208,11 +200,7 @@ def latest_canonical_snapshot(spark: SparkSession, store_dir: str) -> DataFrame:
     marker count — a crash mid-overwrite leaves a partial snapshot=N that
     readers must not load; fall back to the newest complete predecessor
     (the retry will rewrite N)."""
-    from urllib.parse import urlparse
-
-    local_store = (
-        urlparse(store_dir).path if store_dir.startswith("file://") else store_dir
-    )
+    local_store = local_path(store_dir)
     ids = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(local_store)

@@ -138,12 +138,3 @@ def read_turns(
     if source.endswith(".parquet") or source.startswith("/"):
         return spark.read.parquet(source)
     return spark.read.table(source)
-
-
-def tokens_view(turns: DataFrame) -> DataFrame:
-    """One row per token: (conv_id, turn_idx, token, pos). Mirrors TOKENS_CTE."""
-    return turns.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "token"),
-    ).select("conv_id", "turn_idx", "token", F.col("pos").cast("int").alias("pos"))

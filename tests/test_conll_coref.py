@@ -191,7 +191,8 @@ def test_ceaf_wide_component_flags_not_raises(spark):
 
 
 def test_repeated_metric_calls_keep_cache_flat(spark):
-    """conll/ceaf/pair metrics persist intermediates; every call must
+    """conll/ceaf/pair metrics and the averages persist intermediates
+    (the averages share one overlap per call); every call must
     release them (eager materialize + unpersist + plans.cache tracking) so
     a long-lived session doesn't accumulate MEMORY_AND_DISK blocks."""
     from dygiepp_spark import registry
@@ -202,6 +203,9 @@ def test_repeated_metric_calls_keep_cache_flat(spark):
         registry.coref_ceaf_metrics(spark, sf).collect()
         registry.coref_pair_metrics(spark, sf).collect()
         registry.conll_avg_no_ceaf(spark, sf).collect()
+        registry.coref_conll_avg(spark, sf).collect()
+        registry.ceaf_star_metrics(spark, sf).collect()
+        registry.coref_conll_avg_star(spark, sf).collect()
     n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert n_cached == 0, f"{n_cached} persisted RDDs leaked"
 

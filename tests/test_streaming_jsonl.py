@@ -143,6 +143,35 @@ def test_canonical_merger_rejects_unsafe_retention():
         ingest.make_canonical_merger("/tmp/nowhere", retain_snapshots=1)
 
 
+def test_file_uri_store_matches_plain_path(spark):
+    """A file:// canonical store is the same local directory as its plain
+    path: the streaming MERGE and the snapshot reader strip the scheme for
+    their os-level probes, so both stores end at the same snapshot. Any
+    other scheme is refused up front (the parquet-on-FS stand-in lists and
+    prunes with os/shutil)."""
+    import pytest
+
+    d = tempfile.mkdtemp()
+    try:
+        turns = synth_turns(spark, n_convs=8, seed=5)
+        _write_flat(turns.where("conv_id < 'conv4'"), f"{d}/in", "a")
+        _write_flat(turns.where("conv_id >= 'conv4'"), f"{d}/in", "b")
+        got = {}
+        for name, store in (("plain", f"{d}/plain"), ("uri", f"file://{d}/uri")):
+            stream = ingest.read_turns_stream(spark, f"{d}/in", max_files=1)
+            q = ingest.start_streaming_canonical(stream, store, f"{d}/ckpt_{name}")
+            q.awaitTermination(120)
+            got[name] = _canonical_key(ingest.latest_canonical_snapshot(spark, store))
+        assert got["uri"] == got["plain"] and len(got["plain"]) > 0
+        assert os.path.isdir(f"{d}/uri")
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    with pytest.raises(NotImplementedError):
+        ingest.make_canonical_merger("s3://b/x")
+    with pytest.raises(NotImplementedError):
+        ingest.latest_canonical_snapshot(spark, "s3://b/x")
+
+
 def test_latest_snapshot_skips_partial_writes(spark):
     """A crash mid-overwrite leaves a snapshot dir without _SUCCESS; the
     reader must fall back to the newest COMPLETE snapshot instead of

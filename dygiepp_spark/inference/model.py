@@ -5,10 +5,11 @@ Plays the role of the reference's DyGIE model forward pass
 decodes typed mentions, relation triples, event triggers and arguments.
 No trained weights exist in-sandbox (SURVEY.md §7 hard-part 5), so the
 decode is the deterministic lexicon system. It is written ONCE, as the
-three plain-Python functions below, and everything that decodes calls
-them: the per-head ``mapInPandas`` kernels in ``operators.extract`` and
-``StandInModel.forward`` inside the Arrow inference UDF. The coreference
-walk, ``CorefWalk``, is written once here too, on top of ``mentions``:
+three plain-Python functions below. ``StandInModel.forward`` composes
+them inside the one Arrow inference pass (``inference.udf.infer``), and
+every extraction head of ``operators.extract`` is a projection of that
+pass, so ``cfg.model_backend`` reaches every head. The coreference walk,
+``CorefWalk``, is written once here too, on top of ``mentions``:
 the batch coref stream (``operators.coref``) and the stateful stream
 (``streaming.stateful``) both step it turn by turn. The DuckDB oracle SQL
 in ``oracle_sql`` is the independent reference for the same rules.

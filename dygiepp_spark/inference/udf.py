@@ -3,10 +3,11 @@ path; SURVEY.md §3.1 stages 2-3).
 
 ``infer`` runs the stand-in model (or any model with the same forward()
 contract) as a ``mapInPandas`` over turns: executor-side singleton load,
-micro-batches shaped by token budget, per-batch failure isolation
+micro-batches shaped by token budget, per-turn failure isolation
 (reference OOM skip-and-flag: dygie/predictors/dygie.py:57-68 emits
-_FAILED_PREDICTION instead of killing the run — here a failed batch emits
-rows with task='_failed' and the conversation ids, never an exception).
+_FAILED_PREDICTION instead of killing the run — here a micro-batch that
+raises is re-run turn by turn, and each turn that still raises emits one
+row with task='_failed' and its ids, never an exception).
 
 Scale design:
 - the heads (NER, relations, events) are stateless per turn, so rows flow
@@ -18,7 +19,8 @@ Scale design:
 - output is a tall typed frame (task, conv_id, turn_idx, a, b, label,
   surface, raw_score, softmax_score) split into per-task DataFrames by
   cheap filters — one UDF pass scores all heads, like the reference's
-  shared span representation (dygie.py:105-130).
+  shared span representation (dygie.py:105-130). The heads of
+  ``operators.extract`` are these projections.
 """
 
 from __future__ import annotations
@@ -67,6 +69,30 @@ def _run_model_on_batch(pdf: pd.DataFrame, cfg: PipelineConfig) -> pd.DataFrame:
     )
 
 
+def _run_turn_by_turn(micro: pd.DataFrame, cfg: PipelineConfig) -> Iterator[pd.DataFrame]:
+    """A micro-batch that raised, re-run one turn at a time: each turn that
+    still raises becomes one ``_failed`` row (reference behavior: flag,
+    don't kill the run), and the others decode as usual."""
+    for i in range(len(micro)):
+        turn = micro.iloc[i : i + 1]
+        try:
+            yield _run_model_on_batch(turn, cfg)
+        except Exception as exc:  # noqa: BLE001 — turn isolation
+            yield pd.DataFrame(
+                {
+                    "task": "_failed",
+                    "conv_id": turn["conv_id"],
+                    "turn_idx": turn["turn_idx"],
+                    "a": 0,
+                    "b": 0,
+                    "label": type(exc).__name__,
+                    "surface": str(exc)[:200],
+                    "raw_score": 0.0,
+                    "softmax_score": 0.0,
+                }
+            )
+
+
 def infer(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Score all extraction heads in one Arrow pass. Returns the tall frame.
 
@@ -88,21 +114,8 @@ def infer(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
             ):
                 try:
                     yield _run_model_on_batch(micro, cfg)
-                except Exception as exc:  # noqa: BLE001 — batch isolation
-                    # reference behavior: flag, don't kill the run
-                    yield pd.DataFrame(
-                        {
-                            "task": "_failed",
-                            "conv_id": micro["conv_id"],
-                            "turn_idx": micro["turn_idx"],
-                            "a": 0,
-                            "b": 0,
-                            "label": type(exc).__name__,
-                            "surface": str(exc)[:200],
-                            "raw_score": 0.0,
-                            "softmax_score": 0.0,
-                        }
-                    )
+                except Exception:  # noqa: BLE001 — isolate the failing turns
+                    yield from _run_turn_by_turn(micro, cfg)
 
     return turns.select("conv_id", "turn_idx", "text").mapInPandas(fn, schema=OUTPUT_SCHEMA)
 
@@ -145,7 +158,7 @@ def arguments_from(tall: DataFrame) -> DataFrame:
 
 
 def failed_from(tall: DataFrame) -> DataFrame:
-    """Failed-batch flags (the _FAILED_PREDICTION analogue)."""
+    """Failed-turn flags (the _FAILED_PREDICTION analogue)."""
     return tall.where(F.col("task") == "_failed").select(
         "conv_id", "turn_idx", F.col("label").alias("error_type"),
         F.col("surface").alias("error_message"),

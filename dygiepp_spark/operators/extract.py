@@ -3,9 +3,10 @@
 These implement the decode semantics of the reference's four task heads
 (reference: ner.py:125-150, relation.py:149-180, events.py:341-400,
 coref.py:332-459). The NER, relation, trigger and event-argument heads are
-``mapInPandas`` row loops over the one per-turn decode in
-``inference.model`` — the same functions the Arrow inference UDF runs —
-so only (conv_id, turn_idx, text) crosses the Python boundary inward.
+projections of the one model pass, ``inference.udf.infer``: each head
+call scores every head through ``get_model(cfg)`` in one ``mapInPandas``
+and keeps its own rows, so only (conv_id, turn_idx, text) crosses the
+Python boundary inward and a turn that fails to decode is flagged alone.
 
 All outputs carry (raw_score, softmax_score) per prediction, mirroring the
 reference's predicted_* format (doc/data.md:108-116). Scores are dyadic
@@ -16,34 +17,10 @@ rows are bit-identical to the DuckDB oracle's.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dygiepp_spark.config import PipelineConfig
-from dygiepp_spark.inference import model
-
-
-def _per_turn(
-    turns: DataFrame, schema: str, decode: Callable[[list[str]], Iterable[tuple]]
-) -> DataFrame:
-    """One ``mapInPandas`` pass: each non-empty turn's tokens go through
-    `decode`, whose tuples follow (conv_id, turn_idx) in `schema` order."""
-    cols = [c.split()[0] for c in schema.split(", ")]
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for conv, turn, text in zip(
-                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
-            ):
-                if text:  # NULL/empty text decodes to nothing
-                    rows.extend((conv, turn, *r) for r in decode(text.split(" ")))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return turns.select("conv_id", "turn_idx", "text").mapInPandas(kernel, schema=schema)
+from dygiepp_spark.inference import udf as iudf
 
 
 def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataFrame:
@@ -51,13 +28,14 @@ def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataF
     token is a width-1 mention typed by the lexicon; a modifier immediately
     followed by an entity token forms a width-2 mention with the entity's
     type (this exercises multi-token spans and the overlap-merge operator
-    downstream)."""
-    return _per_turn(
-        turns,
-        "conv_id string, turn_idx int, start int, end int, label string, "
-        "surface string, raw_score double, softmax_score double",
-        lambda toks: model.mentions(toks, include_modifier_spans),
-    )
+    downstream).
+
+    Without modifier spans the head keeps the width-1 rows of the same
+    pass: a modifier is never an entity token (the lexicons are disjoint,
+    asserted by ``lexicons.check_disjoint``), so dropping the width-2 spans
+    leaves exactly the entity tokens."""
+    m = iudf.mentions_from(iudf.infer(turns))
+    return m if include_modifier_spans else m.where(F.col("start") == F.col("end"))
 
 
 def relation_triples(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -69,17 +47,7 @@ def relation_triples(turns: DataFrame, cfg: PipelineConfig | None = None) -> Dat
     iff a predicate token lies strictly between them; the predicate is the
     earliest such token (deterministic tie-break). Matches the reference's
     relation arity/within-sentence constraint (doc/data.md:44-51)."""
-    maxd = (cfg or PipelineConfig()).max_pair_distance
-    return _per_turn(
-        turns,
-        "conv_id string, turn_idx int, subj_start int, subj_end int, "
-        "subj_surface string, pred string, obj_start int, obj_end int, "
-        "obj_surface string, raw_score double, softmax_score double",
-        lambda toks: (
-            (s, s, subj, pred, o, o, obj, raw, soft)
-            for s, subj, o, obj, pred, raw, soft in model.triples(toks, maxd)
-        ),
-    )
+    return iudf.triples_from(iudf.infer(turns, cfg))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -103,13 +71,7 @@ def event_triggers(turns: DataFrame) -> DataFrame:
     """E5 — decoded triggers (``model.events``): single-token, typed by
     the lexicon (reference events.py:341-357; triggers are single tokens
     per doc/data.md:64-78)."""
-    return _per_turn(
-        turns,
-        "conv_id string, turn_idx int, trigger_ix int, event_type string, "
-        "raw_score double, softmax_score double",
-        # a 0-token argument window: the trigger list alone
-        lambda toks: model.events(toks, 0)[0],
-    )
+    return iudf.triggers_from(iudf.infer(turns))
 
 
 def event_arguments(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -121,16 +83,7 @@ def event_arguments(turns: DataFrame, cfg: PipelineConfig | None = None) -> Data
     trigger; role = ARG_BEFORE / ARG_AFTER by side. Distance features mirror
     the reference's trigger-argument embedding distances
     (events.py:222-266)."""
-    maxa = (cfg or PipelineConfig()).max_arg_distance
-    return _per_turn(
-        turns,
-        "conv_id string, turn_idx int, trigger_ix int, event_type string, "
-        "arg_start int, arg_end int, arg_surface string, role string",
-        lambda toks: (
-            (t, etype, a, a, surf, role)
-            for t, etype, a, surf, role in model.events(toks, maxa)[1]
-        ),
-    )
+    return iudf.arguments_from(iudf.infer(turns, cfg))
 
 
 def assemble_events(arguments: DataFrame) -> DataFrame:

@@ -105,8 +105,8 @@ def connected_components_grouped(
     UDF — no iterative rounds at all. The generic iterative algorithm below
     is for graphs without such a key (cross-document canonicalization).
 
-    Per-group edge counts must fit one task (true for conversations; the
-    skew module salts pathological ones). Returns (group, node, component),
+    Per-group edge counts must fit one task (true for conversations;
+    nothing splits a larger group). Returns (group, node, component),
     component = min node id in the component.
     """
     import pandas as pd

@@ -8,9 +8,9 @@ reference precedent: chunk long documents into windows
 
 Neutrality: the extraction heads are within-turn, so salting cannot change
 their output (pinned by a pytest on a synthetic mega-conversation). Coref
-runs per (conv, surface) chains; chunk-local clustering is merged back by
-connected components over (conv, surface) bridges, restoring
-whole-conversation clusters exactly.
+is not salted: its stream (``coref.clusters_via_components``) walks each
+conversation in turn order inside one sorted partition, and a
+mega-conversation continues across Arrow batches there.
 """
 
 from __future__ import annotations

@@ -3,10 +3,11 @@ analogue, reference spacy_interface.py:136-149: "give me typed columns, not
 JSON").
 
 ``extract_all(turns)`` returns an ExtractionResult of typed DataFrames.
-Mentions, triples and events come from ``inference.infer``: one batched
-Arrow ``mapInPandas`` pass that scores every head through the model named
-by ``cfg.model_backend``. Coref clusters come from
-``coref.clusters_via_components``.
+Mentions, triples and events are projections of ONE ``inference.infer``
+pass: a batched Arrow ``mapInPandas`` that scores every head through the
+model named by ``cfg.model_backend`` — the pass behind every
+``operators.extract`` head, the shipped job's included. Coref clusters
+come from ``coref.clusters_via_components``.
 
 Stage gating mirrors the reference's loss-weight gating (a head runs iff
 enabled; dygie/models/dygie.py:226-253).

@@ -66,26 +66,16 @@ turn_stats AS (
 
 # Scale-adaptive scan parallelism (r7 optimization, guide §2/§6): the test
 # corpora are single-row-group parquet files, which Spark plans as ONE scan
-# task no matter the core count (row groups are the split floor, and
-# sub-row-group splits would all be empty) — so every compute-heavy
-# scan-local operator (the array-algebra extraction heads, shingling,
-# bigram explodes) serialized on one core of 32 (measured: relation_triples
-# 1.5 s in a single task; 0.1 s after the floor). When the planned scan
-# parallelism is below the session's default parallelism, one round-robin
-# repartition fans the rows out; at production scale the scan already
-# carries >= cores partitions and NO exchange is inserted (the condition is
-# evaluated at plan-build time from the actual scan partitioning), so this
-# is not a tiny-scale-only constant — it is the "derive partitioning from
-# input size" rule. Override with SPARK_GRAFT_SCAN_PARALLELISM_FLOOR
-# (integer target; "0" disables; default "auto" = defaultParallelism).
-_SCAN_FLOOR_ENV = "SPARK_GRAFT_SCAN_PARALLELISM_FLOOR"
+# task no matter the core count, so every compute-heavy scan-local operator
+# ran on one core (measured: relation_triples 1.5 s in a single task; 0.1 s
+# after the floor). When the planned scan parallelism is below the session's
+# defaultParallelism, one round-robin repartition fans the rows out; a scan
+# that already carries that many partitions gets NO exchange (decided at
+# plan-build time from the actual scan partitioning).
 
 
 def scan_parallelism_floor(df: DataFrame, spark: SparkSession) -> DataFrame:
-    mode = os.environ.get(_SCAN_FLOOR_ENV, "auto")
-    if mode == "0":
-        return df
-    target = spark.sparkContext.defaultParallelism if mode == "auto" else int(mode)
+    target = spark.sparkContext.defaultParallelism
     if target <= 1:
         return df
     try:

@@ -57,8 +57,9 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         stage="triples", n_partitions=args.n_partitions,
     )
 
-    # downstream tables from the committed triples; mentions and clusters
-    # come from the per-head kernels, where a NULL text decodes to nothing
+    # downstream tables from the committed triples; mentions are the NER
+    # head of the model pass, where a NULL text is flagged and decodes to
+    # nothing
     triples = cp.read_stage(spark, args.out, "triples").drop("partition_key")
     mentions = extract.ner_mentions(turns)
     clusters = coref.clusters_via_components(turns)

@@ -186,8 +186,8 @@ def adversarial_dir(spark, tmp_path_factory):
 
 
 def _leaves_match_oracle(spark, sf_dir, leaves):
-    """Each leaf, built by its per-turn kernel (``inference.model``), must
-    match its expression twin, the DuckDB oracle SQL, row for row on the
+    """Each leaf, built by its head (a projection of the one inference pass
+    over ``inference.model``), must match its expression twin, the DuckDB oracle SQL, row for row on the
     adversarial turns: empty and NULL text, empty tokens, distance
     boundaries, predicate tie-breaks and modifier edges."""
     con = duckdb.connect()

@@ -40,8 +40,8 @@ def test_synth_mega_conversations(spark):
 
 def test_pipeline_backends_agree(spark):
     """extract_all scores through the Arrow inference pass; its heads must
-    equal the per-head kernels, and its canonical store the one built from
-    the kernel triples."""
+    equal the ``operators.extract`` heads, and its canonical store the one
+    built from the head's triples."""
     turns = synth_turns(spark, n_convs=30, seed=3)
     res = extract_all(turns)
     assert _triples_set(res.triples) == _triples_set(extract.relation_triples(turns))

@@ -6,14 +6,10 @@ cost model n_sents × longest_len²; rationale doc/model.md:32-41). In Spark
 the table-level analogue is unnecessary — instead we shape the pandas
 batches INSIDE the UDF: sort the Arrow batch by token length, emit
 micro-batches under a token budget, process, and restore original row order
-(the uncollate step, uncollate.py:53-94).
+(the uncollate step, uncollate.py:53-94; ``inference.udf._model_pass``).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 
 def pack_by_budget(
@@ -36,14 +32,3 @@ def pack_by_budget(
         batches.append(cur)
     return batches
 
-
-def iter_microbatches(
-    pdf: pd.DataFrame,
-    length_col: str,
-    max_tokens: int = 8192,
-    max_rows: int = 256,
-) -> Iterator[pd.DataFrame]:
-    """Yield micro-batch frames; union of outputs covers pdf exactly once."""
-    lengths = pdf[length_col].tolist()
-    for idx in pack_by_budget(lengths, max_tokens, max_rows):
-        yield pdf.iloc[idx]

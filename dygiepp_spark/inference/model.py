@@ -9,10 +9,10 @@ three plain-Python functions below. ``StandInModel.forward`` composes
 them inside the one Arrow inference pass (``inference.udf.infer``), and
 every extraction head of ``operators.extract`` is a projection of that
 pass, so ``cfg.model_backend`` reaches every head. The coreference walk,
-``CorefWalk``, is written once here too, on top of ``mentions``:
-the batch coref stream (``operators.coref``) and the stateful stream
-(``streaming.stateful``) both step it turn by turn. The DuckDB oracle SQL
-in ``oracle_sql`` is the independent reference for the same rules.
+``CorefWalk``, is written once here too, over decoded mentions: the one
+pass steps it (coreference is its fourth projection) and so does the
+stateful stream (``streaming.stateful``). The DuckDB oracle SQL in
+``oracle_sql`` is the independent reference for the same rules.
 
 Turns are ~4–20 tokens, so the decode works on plain-Python position
 lists (numpy setup per tiny turn costs more than it saves) and answers
@@ -131,26 +131,26 @@ def events(
 class CorefWalk:
     """E3 — the stand-in antecedent decode, one conversation at a time: a
     width-1 mention's antecedent is the nearest previous mention with the
-    same surface. State is the running token offset and the last doc
-    position of each surface, so a caller can carry it across batches
-    (the batch stream) or micro-batches (the stateful stream)."""
+    same surface, over mentions already decoded (no tokenizing here). State
+    is the running token offset and the last doc position of each surface,
+    so a caller can carry it across batches (the model pass) or
+    micro-batches (the stateful stream)."""
 
     def __init__(self, last: dict[str, int] | None = None, offset: int = 0) -> None:
         self.last = {} if last is None else last
         self.offset = offset
 
-    def turn(self, text: str | None) -> list[tuple[int, str, int, int | None]]:
-        """The next turn's (start, surface, doc_pos, ant_doc_pos or None)
-        per width-1 mention; a NULL text is 0 tokens and has none."""
-        if text is None:
-            return []
-        toks = text.split(" ")
+    def step(self, n_tokens: int, spans: list[tuple[int, str]]) -> list[tuple]:
+        """The next turn, given as its token count and its width-1
+        mentions' (start, surface) in position order: (start, surface,
+        doc_pos, ant_doc_pos or None) per mention. A turn that decoded to
+        nothing still advances the offset (a NULL text is 0 tokens)."""
         out = []
-        for s, _, _, surf, _, _ in mentions(toks, with_modifiers=False):
+        for s, surf in spans:
             dp = self.offset + s
             out.append((s, surf, dp, self.last.get(surf)))
             self.last[surf] = dp
-        self.offset += len(toks)
+        self.offset += n_tokens
         return out
 
 

@@ -4,8 +4,8 @@
 Rule model (stand-in for the learned antecedent scorer): a mention's
 antecedent is the nearest PREVIOUS mention with the same surface form in
 the same conversation. The rule is written once, as the plain-Python
-``inference.model.CorefWalk``; the default batch stream here and the
-stateful stream (``streaming.stateful``) both step it, and
+``inference.model.CorefWalk``; the one model pass (``inference.udf.infer``)
+and the stateful stream (``streaming.stateful``) both step it, and
 ``antecedent_edges`` is its JVM formulation. Like the reference decode
 (coref.py:332-342) each mention selects at most one antecedent, so the
 edge set is a forest and greedy cluster formation (coref.py:387-459)
@@ -18,10 +18,9 @@ sentence offsets (reference coref.py:671-689 flattens with cumsum_shifted).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from dygiepp_spark.inference import udf as iudf
 from dygiepp_spark.operators.assembly import with_sentence_starts
 from dygiepp_spark.operators.extract import ner_mentions
 
@@ -67,14 +66,12 @@ def clusters_via_components(
 
     Coref graphs never cross conversations, so the default path clusters
     each conversation locally instead of running the iterative global
-    algorithm. The plan is one hash(conv_id) exchange of the raw
-    (conv_id, turn_idx, text) columns, a sort by (conv_id, turn_idx)
-    within each partition, and ONE streaming Python pass
-    (`mapInPandas`, see `_clusters_stream`) that steps the one coref walk
-    (`CorefWalk`) and union-finds its edges as conversations flow past.
-    A conversation longer than an Arrow batch simply continues into the
-    next one. Returns (conv_id, cluster_id, turn_idx, start, end,
-    surface, doc_pos); cluster_id = min doc-position member; singleton
+    algorithm: it is the cluster projection of the one model pass
+    (``iudf.clusters_from(iudf.infer(...))``), whose kernel sees each
+    conversation's turns in order, steps the one coref walk (`CorefWalk`)
+    over their decoded mentions and union-finds its edges as
+    conversations flow past. Returns (conv_id, cluster_id, turn_idx,
+    start, end, surface, doc_pos); cluster_id = min doc-position member; singleton
     mentions drop (reference clusters have ≥2 members).
 
     `global_cc=True` is the reference and at-scale path: the JVM mention
@@ -87,15 +84,13 @@ def clusters_via_components(
     persists its mentions with `plans.cache.track`; release it with
     `cache.scoped()` or `cache.release_tracked()`."""
     if global_cc:
-        from pyspark import StorageLevel
-
         from dygiepp_spark.operators.graph import connected_components
         from dygiepp_spark.plans import cache
 
         # mentions feed BOTH the edge derivation and the final component
         # join — without a persist the extraction pipeline runs twice
         # (spill-safe; one row per entity token)
-        mentions = cache.track(coref_mentions(turns).persist(StorageLevel.MEMORY_AND_DISK))
+        mentions = cache.maybe_persist(coref_mentions(turns), persist=True)
         edges = antecedent_edges(mentions, max_gap=max_gap)
         e = edges.select(
             _node_id(F.col("conv_id"), F.col("doc_pos")).alias("src"),
@@ -114,66 +109,7 @@ def clusters_via_components(
             "conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos"
         )
 
-    return (
-        turns.select("conv_id", "turn_idx", "text")
-        .repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .mapInPandas(_clusters_stream(max_gap), schema=_CLUSTER_SCHEMA)
-    )
-
-
-_CLUSTER_COLS = ("conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos")
-_CLUSTER_SCHEMA = (
-    "conv_id string, cluster_id long, turn_idx int, start int, end int, "
-    "surface string, doc_pos long"
-)
-
-
-def _clusters_stream(gap: int | None):
-    """The streaming coref kernel: Arrow batches of (conv_id, turn_idx,
-    text) sorted by (conv_id, turn_idx) in → cluster member rows out.
-
-    Each conversation gets a fresh `CorefWalk`, stepped turn by turn; its
-    members and gap-filtered antecedent edges collect until the
-    conversation ends, and then the members an edge touches are emitted
-    with their component's min member as cluster_id. A conversation may
-    span any number of batches, and memory stays bounded by one
-    conversation's mentions. Rows are those of the JVM formulation (the
-    walk's running offset ≡ the rowsBetween(-∞,-1) window of token counts,
-    its antecedent ≡ the same-surface lag of `antecedent_edges`), pinned
-    against `global_cc=True` in pytest."""
-    from dygiepp_spark.inference.model import CorefWalk
-    from dygiepp_spark.operators.graph import union_find
-
-    def coref_stream(batches):
-        out: list[tuple] = []
-        conv, walk, members, edges = None, CorefWalk(), [], []
-
-        def flush():
-            root = union_find(edges)
-            for turn, s, surf, dp in members:
-                if dp in root:  # singletons: no edge touched them
-                    out.append((conv, root[dp], turn, s, s, surf, dp))
-
-        for pdf in batches:
-            for c, turn, text in zip(
-                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(), pdf["text"].tolist()
-            ):
-                if c != conv:
-                    flush()
-                    conv, walk, members, edges = c, CorefWalk(), [], []
-                for s, surf, dp, ant in walk.turn(text):
-                    members.append((turn, s, surf, dp))
-                    if ant is not None and (gap is None or dp - ant <= gap):
-                        edges.append((dp, ant))
-            if out:
-                yield pd.DataFrame(out, columns=_CLUSTER_COLS)
-                out = []
-        flush()
-        if out:
-            yield pd.DataFrame(out, columns=_CLUSTER_COLS)
-
-    return coref_stream
+    return iudf.clusters_from(iudf.infer(turns, max_gap=max_gap))
 
 
 def propagate_scores(

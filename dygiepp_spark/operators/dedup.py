@@ -35,6 +35,7 @@ from dygiepp_spark.functions.hashing import (
     SIMHASH_BITS,
     char_hash_sql,
 )
+from dygiepp_spark.plans.cache import maybe_persist
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -331,27 +332,16 @@ def near_dup_pairs(
     ``PERSIST_AUTO_THRESHOLD_BYTES`` (see `persist_decision`). Pass
     True/False to override; any other string is an error (r5 ADVICE: a
     typo like ``"false"`` must not silently persist)."""
-    if isinstance(persist_shingles, str):
-        if persist_shingles != "auto":
-            raise ValueError(
-                "persist_shingles must be True, False, or 'auto'; "
-                f"got {persist_shingles!r}"
-            )
-        persist_shingles, _ = persist_decision(docs)
     # the Jaccard verify is array_intersect on the two candidates'
     # (distinct) shingle sets: two joins of the (small) pair list against
     # the profile table, no corpus-scale row join or aggregation.
-    arrs = (
+    arrs = maybe_persist(
         shingle_profiles(docs, id_col, text_col)
         .select("doc_id", "shashes", "bands")
-        .where(F.size("shashes") > 0)
+        .where(F.size("shashes") > 0),
+        decide_on=docs,
+        persist=persist_shingles,
     )
-    if persist_shingles:
-        from pyspark import StorageLevel
-
-        from dygiepp_spark.plans import cache
-
-        arrs = cache.track(arrs.persist(StorageLevel.MEMORY_AND_DISK))
     cands = candidate_pairs_from_bands(band_signatures_from_profiles(arrs))
     sa = arrs.select(
         F.col("doc_id").alias("doc_a"),

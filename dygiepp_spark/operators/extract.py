@@ -3,10 +3,11 @@
 These implement the decode semantics of the reference's four task heads
 (reference: ner.py:125-150, relation.py:149-180, events.py:341-400,
 coref.py:332-459). The NER, relation, trigger and event-argument heads are
-projections of the one model pass, ``inference.udf.infer``: each head
-call scores every head through ``get_model(cfg)`` in one ``mapInPandas``
-and keeps its own rows, so only (conv_id, turn_idx, text) crosses the
-Python boundary inward and a turn that fails to decode is flagged alone.
+projections of the model kernel's per-turn pass, ``udf.infer_turns`` (a
+pure map; ``udf.infer`` adds coreference): a head call scores every head
+through ``get_model(cfg)`` in one ``mapInPandas`` and keeps its own rows,
+so only (conv_id, turn_idx, text) crosses into Python and a turn that
+fails to decode is flagged alone.
 
 All outputs carry (raw_score, softmax_score) per prediction, mirroring the
 reference's predicted_* format (doc/data.md:108-116). Scores are dyadic
@@ -34,7 +35,7 @@ def ner_mentions(turns: DataFrame, include_modifier_spans: bool = True) -> DataF
     pass: a modifier is never an entity token (the lexicons are disjoint,
     asserted by ``lexicons.check_disjoint``), so dropping the width-2 spans
     leaves exactly the entity tokens."""
-    m = iudf.mentions_from(iudf.infer(turns))
+    m = iudf.mentions_from(iudf.infer_turns(turns))
     return m if include_modifier_spans else m.where(F.col("start") == F.col("end"))
 
 
@@ -47,7 +48,7 @@ def relation_triples(turns: DataFrame, cfg: PipelineConfig | None = None) -> Dat
     iff a predicate token lies strictly between them; the predicate is the
     earliest such token (deterministic tie-break). Matches the reference's
     relation arity/within-sentence constraint (doc/data.md:44-51)."""
-    return iudf.triples_from(iudf.infer(turns, cfg))
+    return iudf.triples_from(iudf.infer_turns(turns, cfg))
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -71,7 +72,7 @@ def event_triggers(turns: DataFrame) -> DataFrame:
     """E5 — decoded triggers (``model.events``): single-token, typed by
     the lexicon (reference events.py:341-357; triggers are single tokens
     per doc/data.md:64-78)."""
-    return iudf.triggers_from(iudf.infer(turns))
+    return iudf.triggers_from(iudf.infer_turns(turns))
 
 
 def event_arguments(turns: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
@@ -83,7 +84,7 @@ def event_arguments(turns: DataFrame, cfg: PipelineConfig | None = None) -> Data
     trigger; role = ARG_BEFORE / ARG_AFTER by side. Distance features mirror
     the reference's trigger-argument embedding distances
     (events.py:222-266)."""
-    return iudf.arguments_from(iudf.infer(turns, cfg))
+    return iudf.arguments_from(iudf.infer_turns(turns, cfg))
 
 
 def assemble_events(arguments: DataFrame) -> DataFrame:

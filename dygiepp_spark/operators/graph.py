@@ -75,7 +75,8 @@ def union_find(pairs) -> dict:
     orderable nodes, in first-seen node order. Path compression, and each
     union parents the larger root under the smaller, so a root is always
     its component's min member. The one in-worker union-find: grouped
-    components, the coref stream and CEAF's matching components use it."""
+    components, the model pass's coreference and CEAF's matching
+    components use it."""
     parent: dict = {}
 
     def find(x):

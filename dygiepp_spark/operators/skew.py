@@ -8,7 +8,7 @@ reference precedent: chunk long documents into windows
 
 Neutrality: the extraction heads are within-turn, so salting cannot change
 their output (pinned by a pytest on a synthetic mega-conversation). Coref
-is not salted: its stream (``coref.clusters_via_components``) walks each
+is not salted: the model pass (``inference.udf.infer``) walks each
 conversation in turn order inside one sorted partition, and a
 mega-conversation continues across Arrow batches there.
 """

@@ -12,15 +12,16 @@ in production — semantics identical):
   3. a (re)run processes only partitions missing from lineage, writing data
      with dynamic-partition overwrite (idempotent: a partition interrupted
      mid-write is simply rewritten), then appends lineage in one atomic-ish
-     append AFTER the data commit.
+     append AFTER the data commit — once, after every output when a
+     transform returns several (the shipped job's heads of one pass).
   4. input_fingerprint = order-insensitive xor of row hashes per partition;
      resume verifies it so stale checkpoints of changed inputs recompute.
 
 Each quantity is computed once. The fingerprints are one aggregate over
 the input, collected (one row per partition); the driver compares them
 with the collected lineage keys to pick the partitions to do. One job
-writes all of them (no per-partition driver loop — at 4096 partitions a
-loop of jobs would dominate wall clock). The committed row counts are
+per output writes all of them (no per-partition driver loop — at 4096
+partitions a loop of jobs would dominate wall clock). The committed row counts are
 read back in one aggregate, and the new lineage rows are built on the
 driver from those two collected results.
 """
@@ -29,7 +30,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from urllib.parse import urlparse
 
 import pandas as pd
@@ -94,13 +95,16 @@ def run_with_checkpoint(
     run_id: str,
     stage: str = "triples",
     n_partitions: int = 16,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
+    transform: Callable[[DataFrame], DataFrame | Mapping[str, DataFrame]] | None = None,
 ) -> dict:
     """Run `transform` (default: relation-triple extraction) over only the
     partitions not yet committed for `stage`; returns a summary dict.
 
-    Data lands in {out_dir}/data/{stage}/ partitioned by partition_key;
-    lineage in {out_dir}/lineage/.
+    `transform` returns one DataFrame, committed as `stage`, or a mapping
+    name → DataFrame that includes `stage`. Each output lands in
+    {out_dir}/data/{name}/ partitioned by partition_key; lineage, one row
+    per partition under `stage` with `stage`'s row count, lands in
+    {out_dir}/lineage/ after every output is written.
     """
     if transform is None:
         from dygiepp_spark.operators.extract import relation_triples
@@ -136,37 +140,34 @@ def run_with_checkpoint(
     if not todo:
         return summary
 
-    subset = keyed.where(F.col(PART_COL).isin(todo))
-    out = transform(subset.drop(PART_COL))
-    out_keyed = out.withColumn(
-        PART_COL, F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("bigint")
-    )
-
-    data_path = os.path.join(out_dir, "data", stage)
-    # Dynamic overwrite only replaces partitions PRESENT in the new output:
-    # a todo partition whose recompute yields zero rows would keep its stale
-    # files (and the lineage row below would record the stale count). Purge
-    # every todo partition explicitly before the write — an interrupted run
-    # just recomputes them (lineage commits last). Iceberg's
-    # overwritePartitions() does this with delete predicates; the
-    # parquet-on-FS stand-in needs an explicit local delete, and it must
-    # FAIL LOUDLY if it can't delete — a swallowed error here would
-    # resurrect the stale-data bug silently.
-    local_data_path = local_path(data_path)
-    for k in todo:
-        part_dir = os.path.join(local_data_path, f"{PART_COL}={k}")
-        if os.path.exists(part_dir):
-            shutil.rmtree(part_dir)  # raises on failure — never skip silently
-    (
-        out_keyed.repartition(PART_COL)
-        .write.mode("overwrite")
-        # per-write option, NOT session conf: mutating the shared session's
-        # partitionOverwriteMode would change overwrite semantics for
-        # unrelated writes in the same session
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(PART_COL)
-        .parquet(data_path)
-    )
+    out = transform(keyed.where(F.col(PART_COL).isin(todo)).drop(PART_COL))
+    outputs = out if isinstance(out, Mapping) else {stage: out}
+    for name, df in outputs.items():
+        data_path = os.path.join(out_dir, "data", name)
+        # Dynamic overwrite only replaces partitions PRESENT in the new
+        # output: a todo partition whose recompute yields zero rows would
+        # keep its stale files (and the lineage row below would record the
+        # stale count). Purge every todo partition explicitly before the
+        # write — an interrupted run just recomputes them (lineage commits
+        # last). Iceberg's overwritePartitions() does this with delete
+        # predicates; the parquet-on-FS stand-in needs an explicit local
+        # delete, and it must FAIL LOUDLY if it can't delete — a swallowed
+        # error here would resurrect the stale-data bug silently.
+        for k in todo:
+            part_dir = os.path.join(local_path(data_path), f"{PART_COL}={k}")
+            if os.path.exists(part_dir):
+                shutil.rmtree(part_dir)  # raises on failure — never skip silently
+        (
+            with_partition_key(df, n_partitions)
+            .repartition(PART_COL)
+            .write.mode("overwrite")
+            # per-write option, NOT session conf: mutating the shared
+            # session's partitionOverwriteMode would change overwrite
+            # semantics for unrelated writes in the same session
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(PART_COL)
+            .parquet(data_path)
+        )
 
     # lineage append AFTER the data commit (metrics per partition): the
     # committed row counts are read back once, and the lineage rows are
@@ -174,7 +175,7 @@ def run_with_checkpoint(
     try:
         n_rows_out = {
             r[PART_COL]: r["n_rows_out"]
-            for r in spark.read.parquet(data_path)
+            for r in read_stage(spark, out_dir, stage)
             .where(F.col(PART_COL).isin(todo))
             .groupBy(PART_COL)
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows_out"))

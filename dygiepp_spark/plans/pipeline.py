@@ -3,11 +3,11 @@ analogue, reference spacy_interface.py:136-149: "give me typed columns, not
 JSON").
 
 ``extract_all(turns)`` returns an ExtractionResult of typed DataFrames.
-Mentions, triples and events are projections of ONE ``inference.infer``
-pass: a batched Arrow ``mapInPandas`` that scores every head through the
-model named by ``cfg.model_backend`` — the pass behind every
-``operators.extract`` head, the shipped job's included. Coref clusters
-come from ``coref.clusters_via_components``.
+Mentions, triples, events and coref clusters are projections of ONE
+``inference.infer`` pass: a batched Arrow ``mapInPandas`` that scores
+every head through the model named by ``cfg.model_backend`` — the pass
+behind the default ``coref.clusters_via_components`` and the shipped
+job, whose kernel every ``operators.extract`` head runs per turn.
 
 Stage gating mirrors the reference's loss-weight gating (a head runs iff
 enabled; dygie/models/dygie.py:226-253).
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from dygiepp_spark.config import PipelineConfig
 from dygiepp_spark.inference import udf as iudf
-from dygiepp_spark.operators import canonicalize, coref, extract
+from dygiepp_spark.operators import canonicalize, extract
 from dygiepp_spark.operators.assembly import length_guard
 
 
@@ -47,7 +47,7 @@ def extract_all(turns: DataFrame, cfg: PipelineConfig | None = None) -> Extracti
     mentions = iudf.mentions_from(tall) if cfg.do_ner else None
     triples = iudf.triples_from(tall) if cfg.do_relations else None
     events = extract.assemble_events(iudf.arguments_from(tall)) if cfg.do_events else None
-    clusters = coref.clusters_via_components(turns) if cfg.do_coref else None
+    clusters = iudf.clusters_from(tall) if cfg.do_coref else None
 
     canonical = None
     if triples is not None:

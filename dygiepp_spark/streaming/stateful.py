@@ -4,10 +4,11 @@ coreference edges and an in-order re-emitter, via ``applyInPandasWithState``.
 State per conv_id (coref): the state of the one coreference walk,
 ``inference.model.CorefWalk`` — the doc-level position of the last mention
 of each surface form, plus the conversation's running token offset. Each
-micro-batch steps the walk over that conversation's new turns, emits one
-antecedent edge per new mention of an already-seen surface (the same walk
-the batch coref stream steps; ``operators.coref.antecedent_edges`` is its
-JVM formulation), and writes the walk's state back. A NULL-text turn is 0
+micro-batch decodes that conversation's new turns (``model.mentions``),
+steps the walk over their width-1 mentions, emits one antecedent edge per
+new mention of an already-seen surface (the same walk the batch model pass
+steps; ``operators.coref.antecedent_edges`` is its JVM formulation), and
+writes the walk's state back. A NULL-text turn is 0
 tokens, as in batch. Downstream, clusters form in batch via connected
 components over the accumulated edge table — unbounded cluster state
 never lives in the stream.
@@ -47,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from dygiepp_spark.inference.model import CorefWalk
+from dygiepp_spark.inference.model import CorefWalk, mentions
 
 DEFAULT_WATERMARK = "10 minutes"
 DEFAULT_GAP_MS = 30 * 60 * 1000  # event-time idle gap before a group expires
@@ -100,9 +101,11 @@ def _edges_for_group(
         if "ts" in pdf.columns:
             max_ts = max(max_ts, _ts_ms(pdf["ts"]))
         for text in pdf["text"]:
+            toks = [] if text is None else text.split(" ")
+            spans = [(s, sf) for s, _, _, sf, _, _ in mentions(toks, with_modifiers=False)]
             rows.extend(
                 (conv_id, dp, ant, surf)
-                for _, surf, dp, ant in walk.turn(text)
+                for _, surf, dp, ant in walk.step(len(toks), spans)
                 if ant is not None
             )
 

@@ -6,10 +6,13 @@
         --out /path/to/output [--n-partitions 64] \
         [--run-id r1]
 
-Writes: mentions/, triples (checkpointed per-partition with lineage),
-canonical/ and a metrics summary. Resumable: re-running with the same
---out skips committed partitions whose input fingerprint is unchanged
-(plans/checkpoint.py).
+Writes, under <out>/data/: triples/, mentions/, clusters/ and failed/
+(the per-turn failure flags), the projections of ONE model pass that
+decodes each turn once, committed per partition with lineage
+(plans/checkpoint.py); canonical/, built from the committed triples and
+clusters; predictions_jsonl/ with --jsonl; and a summary line. Resumable:
+re-running with the same --out skips committed partitions whose input
+fingerprint is unchanged, so unchanged input runs no model pass.
 """
 
 from __future__ import annotations
@@ -36,8 +39,9 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     args = p.parse_args(argv)
 
     from dygiepp_spark.session import get_spark
-    from dygiepp_spark.plans import checkpoint as cp
-    from dygiepp_spark.operators import canonicalize, coref, extract
+    from dygiepp_spark.inference import udf as iudf
+    from dygiepp_spark.plans import cache, checkpoint as cp
+    from dygiepp_spark.operators import canonicalize
     from dygiepp_spark.sources import sinks
     from dygiepp_spark.tables import read_turns
 
@@ -51,19 +55,28 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     else:
         turns = read_turns(spark, source=args.turns)
 
-    # triples: checkpointed per-partition (resumable)
-    summary = cp.run_with_checkpoint(
-        spark, turns, args.out, run_id=args.run_id,
-        stage="triples", n_partitions=args.n_partitions,
-    )
+    # every output is a projection of ONE model pass over the partitions to do
+    heads = {"triples": iudf.triples_from, "mentions": iudf.mentions_from,
+             "clusters": iudf.clusters_from, "failed": iudf.failed_from}
 
-    # downstream tables from the committed triples; mentions are the NER
-    # head of the model pass, where a NULL text is flagged and decodes to
-    # nothing
-    triples = cp.read_stage(spark, args.out, "triples").drop("partition_key")
-    mentions = extract.ner_mentions(turns)
-    clusters = coref.clusters_via_components(turns)
-    sinks.write_mentions(mentions, f"{args.out}/data/mentions")
+    def model_pass(todo):
+        # persisted once for the four writes, released when the scope
+        # below exits (a local checkpoint's blocks stay pinned for the
+        # session: unpersist does not reach them)
+        tall = cache.maybe_persist(iudf.infer(todo), persist=True)
+        return {name: head(tall) for name, head in heads.items()}
+
+    with cache.scoped():
+        summary = cp.run_with_checkpoint(
+            spark, turns, args.out, run_id=args.run_id,
+            stage="triples", n_partitions=args.n_partitions, transform=model_pass,
+        )
+
+    def committed(name):  # with its schema: an empty output reads as 0 rows
+        schema = heads[name](spark.createDataFrame([], iudf.OUTPUT_SCHEMA)).schema
+        return spark.read.schema(schema).parquet(f"{args.out}/data/{name}")
+
+    triples, clusters = committed("triples"), committed("clusters")
     canonical = canonicalize.canonicalize_with_coref(
         triples, clusters, canonicalize.alias_dict(spark)
     )
@@ -72,20 +85,18 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     if args.jsonl:
         from dygiepp_spark.sources.jsonl import predictions_to_doc_json
 
+        tall = iudf.infer_turns(turns)  # events are not committed: their own pass
         json_docs = predictions_to_doc_json(
             turns,
-            mentions=mentions,
+            mentions=committed("mentions"),
             triples=triples,
-            triggers=extract.event_triggers(turns),
-            arguments=extract.event_arguments(turns),
+            triggers=iudf.triggers_from(tall),
+            arguments=iudf.arguments_from(tall),
             clusters=clusters,
         )
-        sinks.write_predictions_jsonl(
-            json_docs, f"{args.out}/data/predictions_jsonl"
-        )
-        summary["n_jsonl_docs"] = (
-            spark.read.text(f"{args.out}/data/predictions_jsonl").count()
-        )
+        path = f"{args.out}/data/predictions_jsonl"
+        sinks.write_predictions_jsonl(json_docs, path)
+        summary["n_jsonl_docs"] = spark.read.text(path).count()
 
     summary["n_canonical"] = spark.read.parquet(f"{args.out}/data/canonical").count()
     print(json.dumps(summary))

@@ -5,6 +5,8 @@ dygie/models/coref.py:387-459)."""
 import pandas as pd
 from pyspark.sql import functions as F
 
+from dygiepp_spark.config import PipelineConfig
+from dygiepp_spark.inference import udf as iudf
 from dygiepp_spark.operators import coref
 from dygiepp_spark.operators.graph import connected_components
 from dygiepp_spark.plans import cache
@@ -17,15 +19,18 @@ def _cluster_sets(df):
     return {(r["conv_id"], tuple(r["members"])) for r in rows}
 
 
+CLUSTER_COLS = ("conv_id", "cluster_id", "turn_idx", "start", "end", "surface", "doc_pos")
+
+
 def _rows(df):
-    return sorted(tuple(r) for r in df.select(*coref._CLUSTER_COLS).collect())
+    return sorted(tuple(r) for r in df.select(*CLUSTER_COLS).collect())
 
 
 def _greedy_rows(turns):
     """The reference's greedy cluster formation (coref.py:387-459) over
     the JVM antecedent edges: walk the mentions in doc_pos order; an
     antecedent that is already clustered joins its cluster, otherwise it
-    opens a new one. Rows in `coref._CLUSTER_COLS` order."""
+    opens a new one. Rows in `CLUSTER_COLS` order."""
     mentions = coref.coref_mentions(turns)
     edges = sorted(
         (r["conv_id"], r["doc_pos"], r["ant_doc_pos"])
@@ -77,7 +82,7 @@ def test_connected_components_generic(spark):
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-# --- the streaming kernel (default path) against greedy and global CC ---
+# --- the model-pass kernel (default path) against greedy and global CC ---
 
 _TEXTS = (
     "the customer will join the order table",
@@ -161,7 +166,7 @@ def test_stream_kernel_empty_input(spark):
     empty = _turns(spark, [("A", 0, "u", "customer customer", None)]).where("false")
     assert coref.clusters_via_components(empty).collect() == []
     # an empty partition (no batches at all) and an empty batch emit nothing
-    kernel = coref._clusters_stream(None)
+    kernel = iudf._model_pass(PipelineConfig(), True)
     assert list(kernel(iter([]))) == []
     empty_batch = pd.DataFrame({"conv_id": [], "turn_idx": [], "text": []})
     assert list(kernel(iter([empty_batch]))) == []
@@ -177,8 +182,9 @@ def test_stream_kernel_batch_boundaries_do_not_matter():
 
     def run(size):
         batches = (pdf.iloc[i : i + size] for i in range(0, len(pdf), size))
-        out = pd.concat(list(coref._clusters_stream(None)(batches)))
-        return sorted(map(tuple, out.itertuples(index=False)))
+        out = pd.concat(list(iudf._model_pass(PipelineConfig(), True)(batches)))
+        out = out[out["task"] == "cluster"].rename(columns={"a": "start", "b": "end"})
+        return sorted(map(tuple, out[list(CLUSTER_COLS)].itertuples(index=False)))
 
     whole = run(len(pdf))
     assert whole and all(run(size) == whole for size in (1, 2, 5, 9, 10))
@@ -186,8 +192,8 @@ def test_stream_kernel_batch_boundaries_do_not_matter():
 
 def test_canonicalize_with_coref_runs_the_kernel_once(spark, tiny_turns, tmp_path):
     """The cluster representative is a window over `clusters`, so in the
-    executed plan the coref kernel is one node, however many joins read
-    the clusters."""
+    executed plan the model-pass kernel is one node, however many joins
+    read the clusters."""
     from dygiepp_spark.operators import canonicalize, extract
 
     path = str(tmp_path / "triples")
@@ -200,4 +206,4 @@ def test_canonicalize_with_coref_runs_the_kernel_once(spark, tiny_turns, tmp_pat
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("MapInPandas coref_stream(") == 1, final
+    assert final.count("MapInPandas model_pass(") == 1, final

@@ -40,27 +40,38 @@ def test_synth_mega_conversations(spark):
 
 def test_pipeline_backends_agree(spark):
     """extract_all scores through the Arrow inference pass; its heads must
-    equal the ``operators.extract`` heads, and its canonical store the one
-    built from the head's triples."""
+    equal a pure-Python decode of the collected turns (``_decode`` of
+    tests/test_inference.py), and its canonical store the one built from
+    that decode's triples and the reference's greedy-walk clusters
+    (tests/test_coref.py)."""
+    from test_coref import CLUSTER_COLS, _greedy_rows
+    from test_inference import _reference
+
     turns = synth_turns(spark, n_convs=30, seed=3)
     res = extract_all(turns)
-    assert _triples_set(res.triples) == _triples_set(extract.relation_triples(turns))
+    ref = _reference(spark, turns, PipelineConfig())
+    assert _triples_set(res.triples) == _triples_set(ref["triples"])
     mention_cols = ["conv_id", "turn_idx", "start", "end", "label", "surface", "raw_score"]
     assert sorted(map(tuple, res.mentions.select(mention_cols).collect())) == sorted(
-        map(tuple, extract.ner_mentions(turns).select(mention_cols).collect())
+        map(tuple, ref["mentions"].select(mention_cols).collect())
     )
     event_cols = ["conv_id", "turn_idx", "trigger_ix", "event_type", "args"]
-    kernel_events = extract.assemble_events(extract.event_arguments(turns))
+    ref_events = extract.assemble_events(ref["arguments"])
     assert sorted(map(tuple, res.events.select(event_cols).collect())) == sorted(
-        map(tuple, kernel_events.select(event_cols).collect())
+        map(tuple, ref_events.select(event_cols).collect())
     )
     canon = {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
              for r in res.canonical_triples.collect()}
-    kernel_canon = canonicalize.canonicalize_with_coref(
-        extract.relation_triples(turns), res.clusters, canonicalize.alias_dict(spark)
+    ref_clusters = spark.createDataFrame(
+        _greedy_rows(turns),
+        "conv_id string, cluster_id long, turn_idx int, start int, end int, "
+        "surface string, doc_pos long",
+    ).select(*CLUSTER_COLS)
+    ref_canon = canonicalize.canonicalize_with_coref(
+        ref["triples"], ref_clusters, canonicalize.alias_dict(spark)
     )
     assert canon == {(r["subj_canonical"], r["pred"], r["obj_canonical"], r["n_support"])
-                     for r in kernel_canon.collect()}
+                     for r in ref_canon.collect()}
 
 
 def test_checkpoint_resume_equivalence(spark):
@@ -120,11 +131,17 @@ def test_skew_report(spark):
     assert all(r["row_share"] > 0 for r in rep)
 
 
-def test_run_extraction_entrypoint(spark, tmp_path):
+def test_run_extraction_entrypoint(spark, tmp_path, monkeypatch):
     """The spark-submit entrypoint runs end-to-end (synth input) and
-    resumes as a no-op on the second invocation."""
+    resumes as a no-op on the second invocation: no partition to do, no
+    model pass planned, and no committed file rewritten."""
+    import contextlib
     import importlib.util
+    import io
+    import json
     import os
+
+    from dygiepp_spark.inference import udf as iudf
 
     spec = importlib.util.spec_from_file_location(
         "run_extraction",
@@ -141,11 +158,31 @@ def test_run_extraction_entrypoint(spark, tmp_path):
     canon = spark.read.parquet(out + "/data/canonical")
     assert canon.count() > 0
     assert {"subj_canonical", "pred", "obj_canonical"} <= set(canon.columns)
-    # resume: same input fingerprints, triple extraction skips
-    rc2 = rx.main(
-        ["--turns", "synth:12", "--out", out, "--run-id", "t2"], stop_session=False
-    )
+
+    def committed_files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for name in ("triples", "mentions", "clusters", "failed")
+            for d, _, files in os.walk(os.path.join(out, "data", name))
+            for f in files
+        }
+
+    before = committed_files()
+    assert any(p.endswith(".parquet") and "/clusters/" in p for p in before)
+
+    def no_model_pass(*args, **kwargs):
+        raise AssertionError("a resume over unchanged input planned a model pass")
+
+    # resume: same input fingerprints, every output's partitions skip
+    monkeypatch.setattr(iudf, "infer", no_model_pass)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc2 = rx.main(
+            ["--turns", "synth:12", "--out", out, "--run-id", "t2"], stop_session=False
+        )
     assert rc2 == 0
+    assert json.loads(buf.getvalue().strip().splitlines()[-1])["n_todo"] == 0
+    assert committed_files() == before
 
 
 def test_cache_scopes_isolated(spark):

@@ -47,9 +47,9 @@ def _sorted_rows(rows) -> list[tuple]:
     return sorted(rows, key=lambda r: tuple("" if v is None else str(v) for v in r))
 
 
-def test_null_text_turn_keeps_every_mention(spark, tmp_path):
-    """One NULL text among 40 conversations' turns decodes to nothing; it
-    must not take the other turns' mentions with it."""
+def _poisoned_turns(spark, tmp_path) -> str:
+    """40 conversations' turns with one NULL text (conv5, turn 1), written
+    to parquet; returns the path."""
     turns_path = str(tmp_path / "turns")
     turns = synth_turns(spark, n_convs=40).withColumn(
         "text",
@@ -57,8 +57,15 @@ def test_null_text_turn_keeps_every_mention(spark, tmp_path):
         .otherwise(F.col("text")),
     )
     turns.coalesce(1).write.parquet(turns_path)
+    assert spark.read.parquet(turns_path).where("text IS NULL").count() == 1
+    return turns_path
+
+
+def test_null_text_turn_keeps_every_mention(spark, tmp_path):
+    """One NULL text among 40 conversations' turns decodes to nothing; it
+    must not take the other turns' mentions with it."""
+    turns_path = _poisoned_turns(spark, tmp_path)
     turns = spark.read.parquet(turns_path)
-    assert turns.where("text IS NULL").count() == 1
 
     out = tmp_path / "kg"
     _run(["--turns", turns_path, "--out", str(out), "--n-partitions", "4"])
@@ -69,6 +76,22 @@ def test_null_text_turn_keeps_every_mention(spark, tmp_path):
     assert len(want) > 0
     assert _sorted_rows(got) == _sorted_rows(want)
     assert _arrow(out / "data" / "triples").num_rows == extract.relation_triples(turns).count()
+
+
+def test_failed_turn_flags_are_committed(spark, tmp_path):
+    """The job commits the per-turn failure flags (the reference's
+    _FAILED_PREDICTION, kept instead of filtered away): over turns with one
+    NULL text exactly one flag, keyed to that turn, reads back; a healthy
+    input reads back none."""
+    out = tmp_path / "kg"
+    _run(["--turns", _poisoned_turns(spark, tmp_path), "--out", str(out), "--n-partitions", "4"])
+    flags = _arrow(out / "data" / "failed").to_pylist()
+    assert [(r["conv_id"], r["turn_idx"]) for r in flags] == [("conv5", 1)]
+    assert flags[0]["error_type"] == "AttributeError"
+
+    healthy = tmp_path / "healthy"
+    _run(["--turns", "synth:12", "--out", str(healthy), "--n-partitions", "4"])
+    assert _arrow(healthy / "data" / "failed").num_rows == 0
 
 
 def test_jsonl_branch_writes_the_job_tables(spark, tmp_path):

@@ -499,15 +499,16 @@ def test_reorder_then_coref_any_permutation_matches_batch():
 
 
 def test_stateful_walk_with_null_text_matches_batch_clusters():
-    """The stateful stream steps the same coref walk as the batch stream:
-    one conversation with NULL-text turns (0 tokens each), cut into
+    """The stateful stream steps the same coref walk as the batch model
+    pass: one conversation with NULL-text turns (0 tokens each), cut into
     micro-batches anywhere, gives edges whose clusters (greedy walk in
-    doc_pos order, as tests/test_coref.py) are exactly the batch coref
-    stream's."""
+    doc_pos order, as tests/test_coref.py) are exactly the cluster rows of
+    the model-pass kernel."""
     import pandas as pd
     from hypothesis import given, settings, strategies as st
 
-    from dygiepp_spark.operators.coref import _clusters_stream
+    from dygiepp_spark.config import PipelineConfig
+    from dygiepp_spark.inference.udf import _model_pass
     from dygiepp_spark.streaming.stateful import _edges_for_group
 
     texts = [
@@ -525,8 +526,9 @@ def test_stateful_walk_with_null_text_matches_batch_clusters():
     whole = pd.DataFrame({"conv_id": "c", "turn_idx": range(len(texts)), "text": texts})
     want = sorted(
         (r.cluster_id, r.doc_pos, r.surface)
-        for df in _clusters_stream(None)(iter([whole]))
+        for df in _model_pass(PipelineConfig(), True)(iter([whole]))
         for r in df.itertuples()
+        if r.task == "cluster"
     )
     assert want
 
